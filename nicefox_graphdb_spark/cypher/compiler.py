@@ -18,10 +18,12 @@ entire edge tables at compile time (see catalog.EdgeTable).
 from __future__ import annotations
 
 import contextlib
+import functools
 import itertools
+import operator
 from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -487,18 +489,50 @@ class CypherToSpark:
             has_label_col=True,
         )
 
+    def _prop_conds(
+        self, state: CompileState, info: VarInfo, items: list[tuple[str, ast.Expr]]
+    ) -> list[Column]:
+        """One equality per `{key: value}` pattern entry."""
+        ctx = ExprCtx(scope=state.scope, params=self.params)
+        conds = []
+        for key, value_expr in items:
+            value = ExprCompiler(ctx).compile(value_expr)
+            if key in info.props:
+                conds.append(F.col(pcol(info.name, key)) == value.col)
+            else:
+                conds.append(F.lit(False))
+        return conds
+
     def _inline_prop_filter(
         self, df: DataFrame, state: CompileState, info: VarInfo, props: ast.MapLit
     ) -> DataFrame:
         """Apply `{key: value}` pattern filters on a scan (pushdown-friendly)."""
-        ctx = ExprCtx(scope=state.scope, params=self.params)
-        for key, value_expr in props.items:
-            value = ExprCompiler(ctx).compile(value_expr)
-            if key in info.props:
-                df = df.where(F.col(pcol(info.name, key)) == value.col)
-            else:
-                df = df.where(F.lit(False))
+        for cond in self._prop_conds(state, info, props.items):
+            df = df.where(cond)
         return df
+
+    def _scan_prop_filter(
+        self,
+        df: DataFrame,
+        state: CompileState,
+        info: VarInfo,
+        props: ast.MapLit | None,
+    ) -> tuple[DataFrame, list[Column]]:
+        """`{key: value}` filters on a scan that is about to be joined to
+        the bound rows. Entries that reference a bound variable
+        (`UNWIND [1, 2] AS j MATCH (b {id: j})`) cannot resolve on the bare
+        scan: they come back as conditions for the caller's join, so they
+        stay equi-join keys. The rest filter the scan."""
+        if props is None:
+            return df, []
+        const: list[tuple[str, ast.Expr]] = []
+        correlated: list[tuple[str, ast.Expr]] = []
+        for item in props.items:
+            bound = _expr_var_names(item[1]) & state.scope.vars.keys()
+            (correlated if bound else const).append(item)
+        for cond in self._prop_conds(state, info, const):
+            df = df.where(cond)
+        return df, self._prop_conds(state, info, correlated)
 
     def _edge_scan(
         self,
@@ -700,6 +734,10 @@ class CypherToSpark:
         if np_.var and np_.var in scope:
             s += 3.0  # already bound: the binding table is the anchor
         if np_.props is not None:
+            if any(_expr_var_names(v) - scope.vars.keys() for _, v in np_.props.items):
+                # reads a variable the pattern has yet to bind,
+                # `(a)-->(b {k: a.k})`: b cannot anchor
+                return -1.0
             s += 2.0 * len(np_.props.items)
         if np_.var:
             s += where_scores.get(np_.var, 0.0)
@@ -867,12 +905,14 @@ class CypherToSpark:
                 df = self._inline_prop_filter(df, state, existing, np_.props)
             return CompileState(df=df, scope=state.scope), var
         ndf, info = self._node_scan(var, np_.labels)
-        if np_.props is not None:
-            ndf = self._inline_prop_filter(ndf, state, info, np_.props)
+        ndf, on = self._scan_prop_filter(ndf, state, info, np_.props)
         scope = state.scope.copy()
         scope.bind(info)
         if state.df is None:
             return CompileState(df=ndf, scope=scope), var
+        if on:
+            joined = state.df.join(ndf, functools.reduce(operator.and_, on))
+            return CompileState(df=joined, scope=scope), var
         return CompileState(df=state.df.crossJoin(ndf), scope=scope), var
 
     def _add_hop(
@@ -944,11 +984,9 @@ class CypherToSpark:
                 )
                 return state2, rv, rinfo
             return CompileState(df=df, scope=scope), right_np.var or left_var, rinfo
-        if rel.props is not None:
-            edf = self._inline_prop_filter(edf, state, rinfo, rel.props)
-        joined = df.join(edf, df[vcol(left_var, "id")] == edf["__from"]).drop(
-            "__from"
-        )
+        edf, on = self._scan_prop_filter(edf, state, rinfo, rel.props)
+        on = [df[vcol(left_var, "id")] == edf["__from"], *on]
+        joined = df.join(edf, functools.reduce(operator.and_, on)).drop("__from")
         scope = state.scope.copy()
         scope.bind(rinfo)
         state = CompileState(df=joined, scope=scope)
@@ -1001,10 +1039,10 @@ class CypherToSpark:
                 )
             return state, rvar, rinfo
         ndf, ninfo = self._node_scan(rvar, right_np.labels)
-        if right_np.props is not None:
-            ndf = self._inline_prop_filter(ndf, state, ninfo, right_np.props)
+        ndf, on = self._scan_prop_filter(ndf, state, ninfo, right_np.props)
         df3 = state.require_df()
-        joined2 = df3.join(ndf, df3["__to"] == ndf[vcol(rvar, "id")]).drop("__to")
+        on = [df3["__to"] == ndf[vcol(rvar, "id")], *on]
+        joined2 = df3.join(ndf, functools.reduce(operator.and_, on)).drop("__to")
         scope2 = state.scope.copy()
         scope2.bind(ninfo)
         return CompileState(df=joined2, scope=scope2), rvar, rinfo
@@ -1128,10 +1166,10 @@ class CypherToSpark:
             return CompileState(df=df2, scope=state.scope), var, rinfo
         rvar = right_np.var or self.gensym("n")
         ndf, ninfo = self._node_scan(rvar, right_np.labels)
-        if right_np.props is not None:
-            ndf = self._inline_prop_filter(ndf, state, ninfo, right_np.props)
+        ndf, on = self._scan_prop_filter(ndf, state, ninfo, right_np.props)
         df3 = state.require_df()
-        joined2 = df3.join(ndf, df3["__to"] == ndf[vcol(rvar, "id")]).drop("__to")
+        on = [df3["__to"] == ndf[vcol(rvar, "id")], *on]
+        joined2 = df3.join(ndf, functools.reduce(operator.and_, on)).drop("__to")
         scope2 = state.scope.copy()
         scope2.bind(ninfo)
         return CompileState(df=joined2, scope=scope2), rvar, rinfo
@@ -1189,14 +1227,16 @@ class CypherToSpark:
                 if v:
                     pattern_vars.add(v)
         shared = [v for v in pattern_vars if v in state.scope]
-        # outer VALUE variables referenced by the WHERE must also ride into
-        # the correlated sub-plan (e.g. WITH a, a.x AS t OPTIONAL MATCH
-        # (a)-->(b) WHERE b.y > t) — they become extra correlation keys
-        if m.where is not None:
-            for v in sorted(_expr_var_names(m.where)):
-                info = state.scope.get(v)
-                if info is not None and info.kind == "value" and v not in shared:
-                    shared.append(v)
+        # outer VALUE variables referenced by the WHERE or a property map
+        # must also ride into the correlated sub-plan (e.g. WITH a, a.x AS t
+        # OPTIONAL MATCH (a)-->(b) WHERE b.y > t, or (b {y: t})) — they
+        # become extra correlation keys
+        props = [el.props for path in m.paths for el in path.elements]
+        refs = _expr_var_names([m.where, *props])
+        for v in sorted(refs):
+            info = state.scope.get(v)
+            if info is not None and info.kind == "value" and v not in shared:
+                shared.append(v)
         shared_cols: list[str] = []
         seed_scope = Scope()
         for v in shared:

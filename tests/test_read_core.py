@@ -3,6 +3,7 @@
 Mirrors the reference's test/cypherqueries.test.ts style: real queries with
 pinned expected results (deterministic — testdata is seeded)."""
 
+import pytest
 
 
 def q(engine, cypher, params=None):
@@ -357,3 +358,77 @@ class TestEntityCase:
         assert e.query(
             "RETURN CASE WHEN 1 = 1 THEN 'one' ELSE 'other' END AS s"
         ) == [{"s": "one"}]
+
+
+class TestCorrelatedPropertyMap:
+    """Inline property-map values that reference a variable bound earlier
+    in the statement filter through the join to the bound rows, the same
+    rows as the equivalent WHERE. Graph: accounts 1 'a', 2 'b', 3 'c';
+    payments 1->2 (10), 2->3 (20), 1->3 (20)."""
+
+    @pytest.fixture(scope="class")
+    def accts(self, spark):
+        from nicefox_graphdb_spark import CypherEngine
+
+        e = CypherEngine(spark, None, mutable=True)
+        e.query(
+            "CREATE (a:Acct {id: 1, name: 'a'}), (b:Acct {id: 2, name: 'b'}), "
+            "(c:Acct {id: 3, name: 'c'}), (a)-[:PAYS {amt: 10}]->(b), "
+            "(b)-[:PAYS {amt: 20}]->(c), (a)-[:PAYS {amt: 20}]->(c)"
+        )
+        return e
+
+    def test_unwind_bound_node_scan(self, accts):
+        assert accts.query(
+            "UNWIND [1, 2, 2, 9] AS j MATCH (b:Acct {id: j}) "
+            "RETURN b.id AS id ORDER BY id"
+        ) == [{"id": 1}, {"id": 2}, {"id": 2}]
+
+    def test_with_bound_node_scan(self, accts):
+        assert accts.query(
+            "WITH 2 AS j MATCH (b:Acct {id: j}) RETURN b.id AS id"
+        ) == [{"id": 2}]
+
+    def test_mixed_constant_and_bound_entries(self, accts):
+        assert accts.query(
+            "UNWIND [1, 2] AS j MATCH (b:Acct {id: j, name: 'b'}) "
+            "RETURN b.id AS id"
+        ) == [{"id": 2}]
+
+    def test_hop_endpoint_and_relationship(self, accts):
+        assert accts.query(
+            "UNWIND [2, 3] AS j MATCH (a:Acct {id: 1})-[:PAYS]->(b:Acct {id: j}) "
+            "RETURN j, b.name AS name ORDER BY j"
+        ) == [{"j": 2, "name": "b"}, {"j": 3, "name": "c"}]
+        assert accts.query(
+            "UNWIND [20] AS w MATCH (a:Acct)-[r:PAYS {amt: w}]->(b:Acct) "
+            "RETURN a.id AS a, b.id AS b ORDER BY a"
+        ) == [{"a": 1, "b": 3}, {"a": 2, "b": 3}]
+        # a later pattern element referencing an earlier one, also when
+        # the element's constant entries would otherwise make it the anchor
+        assert accts.query(
+            "MATCH (a:Acct)-[r:PAYS]->(b:Acct {id: a.id + 1}) "
+            "RETURN a.id AS a, r.amt AS amt ORDER BY a"
+        ) == [{"a": 1, "amt": 10}, {"a": 2, "amt": 20}]
+        assert accts.query(
+            "MATCH (a:Acct)-[r:PAYS]->(b:Acct {id: a.id + 1, name: 'c'}) "
+            "RETURN a.id AS a, r.amt AS amt"
+        ) == [{"a": 2, "amt": 20}]
+
+    def test_optional_match(self, accts):
+        assert accts.query(
+            "UNWIND [1, 9] AS j OPTIONAL MATCH (b:Acct {id: j}) "
+            "RETURN j, b.id AS id ORDER BY j"
+        ) == [{"j": 1, "id": 1}, {"j": 9, "id": None}]
+        assert accts.query(
+            "UNWIND [1, 9] AS j "
+            "OPTIONAL MATCH (a:Acct {id: 1})-[:PAYS]->(b:Acct {id: j + 1}) "
+            "RETURN j, b.id AS id ORDER BY j"
+        ) == [{"j": 1, "id": 2}, {"j": 9, "id": None}]
+
+    def test_var_length_endpoint(self, accts):
+        # 1->3 and 1->2->3
+        assert accts.query(
+            "WITH 3 AS j MATCH (a:Acct {id: 1})-[:PAYS*1..2]->(b:Acct {id: j}) "
+            "RETURN count(*) AS paths"
+        ) == [{"paths": 2}]
