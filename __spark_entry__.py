@@ -940,7 +940,7 @@ def _collected_copy(spark, df):
 
 def _p_write_durable(spark, sf_dir):
     """Durable bucketed store (durable_store.py) + correlated MERGE with an
-    unbound endpoint (compiler._merge_rel_one_unbound): write under a fresh
+    unbound endpoint (compiler._merge_chain_correlated): write under a fresh
     path, REOPEN with a brand-new engine+catalog (restart recovery — the
     reference reopens its SQLite file, src/local.ts:22-45), and aggregate
     the recovered state."""
@@ -960,7 +960,7 @@ def _p_write_durable(spark, sf_dir):
         # idempotent on re-run (full-pattern match)
         e1.query("MATCH (a:Acct) MERGE (a)-[:HAS]->(w:Wallet {acct: a.id})")
         # correlated MERGE with BOTH endpoints unbound (round-5 new,
-        # compiler._merge_rel_both_unbound): one Seg/Zone pair per
+        # compiler._merge_chain_correlated): one Seg/Zone pair per
         # distinct a.id % 3, idempotent on re-run
         e1.query("MATCH (a:Acct) MERGE (s:Seg {m: a.id % 3})-[:COVERS]->(z:Zone)")
         e1.query("MATCH (a:Acct) MERGE (s:Seg {m: a.id % 3})-[:COVERS]->(z:Zone)")

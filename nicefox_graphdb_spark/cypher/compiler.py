@@ -3899,20 +3899,24 @@ class CypherToSpark:
                     )
         if len(elements) == 1:
             return self._merge_node(state, elements[0], m.on_create, m.on_match)
-        if len(elements) == 3:
-            return self._merge_relationship(state, m)
+        for r in elements[1::2]:
+            if len(r.types) != 1:
+                # Neo4j 3.5 parity: multi-type MERGE is a syntax-level
+                # rejection
+                raise CypherCompileError(
+                    "A single relationship type must be specified for MERGE"
+                )
         return self._merge_multi_hop(state, m)
 
     def _merge_multi_hop(self, state: CompileState, m: ast.Merge) -> CompileState:
-        """`MERGE (a)-[:X]->(b)-[:Y]->(c)...` — openCypher full-pattern
-        atomicity: match the ENTIRE chain; if absent, create the ENTIRE
-        chain (never a half-created path). Supported shapes: no pattern
-        variable pre-bound, no property referencing an outer variable —
-        the merge is then row-independent, so it runs ONCE globally and
-        binds to every incoming row (Neo4j's sequential per-row semantics
-        reach the same state: the first row creates, the rest match).
-        The correlated form (reference interpreters,
-        src/executor.ts:6835-7121) stays hop-decomposable by the user.
+        """`MERGE (a)-[:X]->(b)...` of one or more hops — openCypher
+        full-pattern atomicity: match the ENTIRE path; if absent, create
+        the ENTIRE path (never a half-created path). A path with a
+        pre-bound variable or a property reading an outer variable is
+        correlated and goes to `_merge_chain_correlated`. Otherwise the
+        merge is row-independent, so it runs ONCE globally and binds to
+        every incoming row (Neo4j's sequential per-row semantics reach the
+        same state: the first row creates, the rest match).
         """
         elements = m.path.elements
         correlated = any(
@@ -3924,9 +3928,9 @@ class CypherToSpark:
             return self._merge_chain_correlated(state, m)
         if not state.scope.vars:
             return self._merge_standalone_path(state, m)
-        # uncorrelated under bound rows: one global match-else-create,
-        # cross-joined onto every row. ON CREATE applies to the created
-        # instance; ON MATCH to pre-existing matches.
+        # uncorrelated under bound rows: one global match, cross-joined onto
+        # every row, with ON MATCH on the pre-existing matches; when nothing
+        # matches, the chain compiler creates (and applies ON CREATE).
         match_state = self.compile_match(
             CompileState(df=None, scope=Scope()),
             ast.Match(paths=[m.path]),
@@ -3941,32 +3945,10 @@ class CypherToSpark:
             match_state.require_df(), [], "unreachable"
         )
         if match_empty:
-            # Neo4j runs MERGE once per input row: zero input rows means
-            # zero executions. That decision is data, not a driver probe:
-            # a limit-1 seed frame creates the chain 0 or 1 times, and the
-            # durable-store writes no-op on empty frames — zero rows out
-            # with the pattern variables still bound for downstream schema.
-            seed = CompileState(
-                df=state.require_df().limit(1).select(F.lit(1).alias("__seed")),
-                scope=Scope(),
-            )
-            st = self.compile_create(
-                seed, ast.Create(paths=[self._path_directed_for_create(m.path)])
-            )
-            if m.on_create:
-                st = self.compile_set(st, ast.SetClause(items=m.on_create))
-            bound = st.require_df().select(
-                *[
-                    c
-                    for c in st.require_df().columns
-                    if c.startswith(("__v_", "__p_"))
-                ]
-            )
-            out = state.require_df().crossJoin(bound)
-            scope = state.scope.copy()
-            for info in st.scope.vars.values():
-                scope.bind(info)
-            return CompileState(df=out, scope=scope)
+            # the chain compiler creates the path once per distinct key
+            # tuple: here one tuple, or none for zero input rows (Neo4j runs
+            # MERGE once per input row), in one created-set checkpoint
+            return self._merge_chain_correlated(state, m)
         out = state.require_df().crossJoin(matched)
         scope = state.scope.copy()
         for info in match_state.scope.vars.values():
@@ -3981,29 +3963,23 @@ class CypherToSpark:
     def _merge_chain_correlated(
         self, state: CompileState, m: ast.Merge
     ) -> CompileState:
-        """Correlated multi-hop MERGE: `MATCH (a) MERGE (a)-[:X]->(b:B
-        {k: a.k})-[:Y]->(c:C)` — any mix of pre-bound (bare) node variables
-        and unbound nodes; properties may reference outer variables
-        (reference merge interpreters, src/executor.ts:6835-7121).
+        """Correlated relationship MERGE of any length: `MATCH (a), (b)
+        MERGE (a)-[:X]->(b)`, `MATCH (a) MERGE (a)-[:X]->(b:B {k: a.k})
+        -[:Y]->(c:C)` — any mix of pre-bound (bare) node variables and
+        unbound nodes; properties may reference outer variables (reference
+        merge interpreters, src/executor.ts:6835-7121, 7346-7610).
 
-        Vectorized like the single-hop correlated paths: distinct (bound
-        ids, computed key values) tuples → anti-join against existing
-        FULL-chain matches (relationship-isomorphic) → one fresh
-        node-per-unbound/edge-per-hop set per missing tuple. Full-pattern
-        atomicity: a partially-existing chain is never extended — the whole
-        chain is created.
+        Vectorized: distinct (bound ids, computed key values) tuples →
+        anti-join against existing FULL-chain matches
+        (relationship-isomorphic) → one fresh node-per-unbound/edge-per-hop
+        set per missing tuple; rows sharing a tuple bind the same created
+        elements. Full-pattern atomicity: a partially-existing chain is
+        never extended — the whole chain is created.
         """
         elements = m.path.elements
         nodes = [el for el in elements[0::2]]
         rels = [el for el in elements[1::2]]
         for r in rels:
-            assert isinstance(r, ast.RelPattern)
-            if len(r.types) != 1:
-                # Neo4j 3.5 parity: multi-type MERGE is a syntax-level
-                # rejection (same message as the single-hop paths)
-                raise CypherCompileError(
-                    "A single relationship type must be specified for MERGE"
-                )
             if r.var and r.var in state.scope:
                 raise CypherCompileError(
                     f"relationship variable `{r.var}` already bound"
@@ -4107,10 +4083,14 @@ class CypherToSpark:
             for side in ("pl", "pr")
         ]
 
-        def _pattern(base):
+        def _pattern(base, rebind=False):
             """base rows joined to every existing relationship-isomorphic
             full-chain match whose element properties equal the row's
-            computed key values. Returns (joined|None, infos_to_bind)."""
+            computed key values. Returns (joined, infos_to_bind); joined
+            is None when a relationship type has no table, unless
+            `rebind`, which stands an empty scan in for it so every
+            pattern variable is still bound (zero key tuples against a
+            type that was never created: zero rows out)."""
             pat = base
             infos = []
             dead = False
@@ -4120,7 +4100,29 @@ class CypherToSpark:
                     rel_vars[j], [r.types[0]], "out", None, None
                 )
                 if edf is None:
-                    return None, []
+                    if not rebind:
+                        return None, []
+                    props = {
+                        k: df.schema[tmp].dataType
+                        for k, tmp in rel_keys[j].items()
+                    }
+                    edf = self.spark.createDataFrame(
+                        [],
+                        T.StructType(
+                            [
+                                T.StructField(vcol(rel_vars[j], c), T.StringType())
+                                for c in ("eid", "src", "dst", "type")
+                            ]
+                            + [
+                                T.StructField(pcol(rel_vars[j], k), t)
+                                for k, t in props.items()
+                            ]
+                        ),
+                    )
+                    rinfo = VarInfo(
+                        name=rel_vars[j], kind="edge", types=[r.types[0]],
+                        props=props,
+                    )
                 edf = edf.drop("__from", "__to")
                 if r.direction == "both":
                     # undirected hop: expand to both orientations behind
@@ -4199,8 +4201,20 @@ class CypherToSpark:
                 pat = pat.where(cond_false)
             return pat, infos
 
-        all_tuples = df.select(*group_cols).distinct()
-        matched, _ = _pattern(all_tuples)
+        # a null bound endpoint (an OPTIONAL MATCH miss) merges nothing and
+        # binds nothing: its tuples never reach the anti-join, and the
+        # re-bind below drops its rows by id equality (the reference skips
+        # the row, src/executor.ts:7135-7138)
+        live = df
+        for c in bound_id_cols:
+            live = live.where(F.col(c).isNotNull())
+        all_tuples = live.select(*group_cols).distinct()
+        # with every node bound, the distinct tuples are already hash
+        # partitioned on the pattern's join keys, so matching them costs no
+        # shuffle; otherwise the join keys are a strict subset of the
+        # tuple, and joining the aggregate costs one more shuffle stage
+        # (one more job under AQE) than joining the checkpointed rows
+        matched, _ = _pattern(all_tuples if all(bound) else live)
         if matched is not None:
             have = matched.select(*group_cols).distinct()
             missing = all_tuples.join(have, on=group_cols, how="left_anti")
@@ -4265,8 +4279,7 @@ class CypherToSpark:
                     ),
                 )
         # re-bind every row against the now-complete tables
-        joined, infos = _pattern(df)
-        assert joined is not None
+        joined, infos = _pattern(df, rebind=True)
         joined = joined.drop(*tmp_cols, *orient_cols)
         scope = state.scope.copy()
         for info in infos:
@@ -4740,580 +4753,6 @@ class CypherToSpark:
         if m.on_match:
             st = self.compile_set(st, ast.SetClause(items=m.on_match))
         return st
-
-    def _merge_rel_one_unbound(
-        self, state: CompileState, m: ast.Merge
-    ) -> CompileState:
-        """`MATCH (a) MERGE (a)-[:R]->(b:B {k: a.k})` — one endpoint bound,
-        the other created per-row when the FULL pattern has no match
-        (reference per-row merge interpreters, src/executor.ts:6835-7121).
-
-        Neo4j set semantics, vectorized: for every distinct (bound id,
-        computed key values) combination with no existing full-pattern
-        match, create ONE fresh node + relationship; rows that share the
-        combination bind the same created pair (sequential MERGE sees
-        earlier in-statement creations). An existing node with matching
-        props but no edge from the bound endpoint is NOT reused — the whole
-        pattern is created, Neo4j's documented behavior.
-        """
-        left_np, rel, right_np = m.path.elements
-        assert isinstance(rel, ast.RelPattern)
-        if len(rel.types) != 1:
-            raise CypherCompileError(
-                "A single relationship type must be specified for MERGE"
-            )
-        # undirected: MATCH either orientation; CREATE bound-to-unbound
-        undirected = rel.direction == "both"
-        type_ = rel.types[0]
-        left_bound = left_np.var is not None and left_np.var in state.scope
-        bound_np, unb_np = (
-            (left_np, right_np) if left_bound else (right_np, left_np)
-        )
-        if bound_np.labels or bound_np.props:
-            # Neo4j 3.5 / reference parity (src/translator.ts:305-333): a
-            # bound pattern variable cannot take new label/property
-            # predicates in MERGE
-            raise CypherCompileError(
-                f"Variable `{bound_np.var}` already declared"
-            )
-        bound_var = bound_np.var
-        bound_info = state.scope.get(bound_var)
-        if bound_info is None or bound_info.kind != "node":
-            raise CypherCompileError("MERGE endpoint must be a node variable")
-        if len(bound_info.labels or []) != 1:
-            # unlabeled / multi-label bound endpoint: the general chain
-            # machinery handles it (edge scan across all label tables)
-            return self._merge_chain_correlated(state, m)
-        unb_var = unb_np.var or self.gensym("mn")
-        if unb_np.var is not None and unb_np.var in state.scope:
-            raise CypherCompileError(f"MERGE variable `{unb_var}` already bound")
-        if len(unb_np.labels) != 1:
-            # multi-label unbound endpoint: the general chain machinery
-            # handles intersection-match + multi-table create
-            return self._merge_chain_correlated(state, m)
-        label = unb_np.labels[0]
-        rel_var = rel.var or self.gensym("mr")
-        self.store.ensure_label(label)
-        bound_is_src = (
-            left_bound if undirected else left_bound == (rel.direction == "out")
-        )
-
-        df = state.require_df()
-        # per-row key values (correlated: may reference any outer variable)
-        unb_props = self._compiled_props(state, unb_np.props)
-        rel_props = self._compiled_props(state, rel.props)
-        ukey: dict[str, str] = {}
-        for k, tc in unb_props.items():
-            tmp = f"__uk_{k}"
-            df = df.withColumn(tmp, tc.col)
-            ukey[k] = tmp
-        rkey: dict[str, str] = {}
-        for k, tc in rel_props.items():
-            tmp = f"__rk_{k}"
-            df = df.withColumn(tmp, tc.col)
-            rkey[k] = tmp
-        df = df.localCheckpoint(eager=True)
-        bid = vcol(bound_var, "id")
-        # pre-mutation full-pattern match
-        edf, rinfo, _ = self._edge_scan(rel_var, [type_], "out", None, None)
-        nscan, ninfo = self._node_scan(unb_var, [label])
-        e_bound, e_far = (
-            (vcol(rel_var, "src"), vcol(rel_var, "dst"))
-            if bound_is_src
-            else (vcol(rel_var, "dst"), vcol(rel_var, "src"))
-        )
-
-        def _pattern_join_oriented(base, e, escope_info, ns, nsinfo, flip):
-            eb, ef = (e_far, e_bound) if flip else (e_bound, e_far)
-            cand = base.join(e, base[bid] == e[eb])
-            if flip:
-                # second orientation of an undirected match; self-loops
-                # already bound in the first orientation
-                cand = cand.where(
-                    F.col(vcol(rel_var, "src")) != F.col(vcol(rel_var, "dst"))
-                )
-            cand = cand.join(ns, F.col(ef) == ns[vcol(unb_var, "id")])
-            for k, tmp in ukey.items():
-                if k in nsinfo.props:
-                    cand = cand.where(F.col(pcol(unb_var, k)) == F.col(tmp))
-                else:
-                    cand = cand.where(F.lit(False))
-            for k, tmp in rkey.items():
-                if k in escope_info.props:
-                    cand = cand.where(F.col(pcol(rel_var, k)) == F.col(tmp))
-                else:
-                    cand = cand.where(F.lit(False))
-            return cand
-
-        def _pattern_join(base, e, escope_info, ns, nsinfo):
-            out = _pattern_join_oriented(base, e, escope_info, ns, nsinfo, False)
-            if not undirected:
-                return out
-            # either orientation satisfies an undirected pattern — two
-            # equi-joins (hash joins at scale), not a disjunctive condition
-            return out.unionByName(
-                _pattern_join_oriented(base, e, escope_info, ns, nsinfo, True)
-            )
-
-        group_cols = [bid, *ukey.values(), *rkey.values()]
-        all_pairs = df.select(*group_cols).distinct()
-        if edf is not None:
-            matched = _pattern_join(df, edf, rinfo, nscan, ninfo)
-            have_pairs = matched.select(*group_cols).distinct()
-            missing = all_pairs.join(have_pairs, on=group_cols, how="left_anti")
-            matched_eids = matched.select(
-                F.col(vcol(rel_var, "eid")).alias("_id")
-            ).distinct()
-        else:
-            missing = all_pairs
-            matched_eids = None
-        created, created_empty = self._checkpoint_created(
-            missing.withColumn("__new_nid", F.expr("uuid()")).withColumn(
-                "__new_eid", F.expr("uuid()")
-            ),
-            [*ukey.values(), *rkey.values()],
-            "Cannot merge using null property value",
-        )
-        src_label = bound_info.labels[0] if bound_is_src else label
-        dst_label = label if bound_is_src else bound_info.labels[0]
-        if not created_empty:
-            node_rows = created.select(
-                F.col("__new_nid").alias("_id"),
-                *[F.col(tmp).alias(k) for k, tmp in ukey.items()],
-            )
-            self.store.append_nodes(label, node_rows)
-            src_col, dst_col = (
-                (bid, "__new_nid") if bound_is_src else ("__new_nid", bid)
-            )
-            edge_rows = created.select(
-                F.col("__new_eid").alias("_id"),
-                F.col(src_col).alias("_src"),
-                F.col(dst_col).alias("_dst"),
-                *[F.col(tmp).alias(k) for k, tmp in rkey.items()],
-            )
-            self.store.append_edges(type_, src_label, dst_label, edge_rows)
-
-        # re-bind against the now-complete tables
-        edf2, rinfo2, _ = self._edge_scan(rel_var, [type_], "out", None, None)
-        nscan2, ninfo2 = self._node_scan(unb_var, [label])
-        if edf2 is None:
-            # zero key tuples (e.g. zero input rows) against a relationship
-            # type that never existed: nothing matched, nothing was created
-            # — zero rows out with both variables bound (round-9)
-            rinfo2 = VarInfo(
-                name=rel_var,
-                kind="edge",
-                types=[type_],
-                props={k: df.schema[tmp].dataType for k, tmp in rkey.items()},
-            )
-            joined = (
-                df.limit(0)
-                .crossJoin(nscan2.limit(0))
-                .withColumns(
-                    {
-                        vcol(rel_var, "eid"): F.lit(None).cast("string"),
-                        vcol(rel_var, "src"): F.lit(None).cast("string"),
-                        vcol(rel_var, "dst"): F.lit(None).cast("string"),
-                        vcol(rel_var, "type"): F.lit(type_),
-                        **{
-                            pcol(rel_var, k): F.lit(None).cast(
-                                df.schema[tmp].dataType
-                            )
-                            for k, tmp in rkey.items()
-                        },
-                    }
-                )
-                .drop(*ukey.values(), *rkey.values())
-            )
-        else:
-            joined = _pattern_join(df, edf2, rinfo2, nscan2, ninfo2).drop(
-                "__from", "__to", *ukey.values(), *rkey.values()
-            )
-        scope = state.scope.copy()
-        scope.bind(rinfo2)
-        scope.bind(ninfo2)
-        new_state = CompileState(df=joined, scope=scope)
-        if m.on_create and not created_empty:
-            new_state = self._apply_merge_sets(
-                new_state, rel_var, created.select(
-                    F.col("__new_eid").alias("_id")
-                ), m.on_create,
-            )
-        if m.on_match and matched_eids is not None:
-            new_state = self._apply_merge_sets(
-                new_state, rel_var, matched_eids, m.on_match
-            )
-        return new_state
-
-    def _merge_rel_both_unbound(
-        self, state: CompileState, m: ast.Merge
-    ) -> CompileState:
-        """`MATCH (x) WITH x MERGE (a:A {k: x.k})-[:R]->(b:B)` — BOTH
-        endpoints unbound under a non-empty outer scope: per-row
-        full-pattern match-else-create (reference merge interpreters,
-        src/executor.ts:6835-7121).
-
-        Vectorized like _merge_rel_one_unbound: distinct computed key
-        tuples → anti-join against the existing full-pattern matches →
-        one created (src node, dst node, edge) triple per missing tuple;
-        rows sharing a tuple bind the same created elements, and a row
-        whose tuple matches several existing paths binds them all.
-        """
-        left_np, rel, right_np = m.path.elements
-        assert isinstance(rel, ast.RelPattern)
-        if len(rel.types) != 1:
-            raise CypherCompileError(
-                "A single relationship type must be specified for MERGE"
-            )
-        # undirected: MATCH either orientation; CREATE left-to-right
-        undirected = rel.direction == "both"
-        type_ = rel.types[0]
-        src_np, dst_np = (
-            (left_np, right_np) if rel.direction in ("out", "both") else (right_np, left_np)
-        )
-        src_var = src_np.var or self.gensym("mn")
-        dst_var = dst_np.var or self.gensym("mn")
-        if (
-            src_var == dst_var
-            or len(src_np.labels) != 1
-            or len(dst_np.labels) != 1
-        ):
-            # repeated unbound variable (self-loop merge) and multi-label
-            # endpoints: the general chain machinery handles both
-            return self._merge_chain_correlated(state, m)
-        rel_var = rel.var or self.gensym("mr")
-        src_label = src_np.labels[0]
-        dst_label = dst_np.labels[0]
-        self.store.ensure_label(src_label)
-        self.store.ensure_label(dst_label)
-
-        df = state.require_df()
-        skey: dict[str, str] = {}
-        dkey: dict[str, str] = {}
-        rkey: dict[str, str] = {}
-        for prefix, props_ast, key in (
-            ("__sk_", src_np.props, skey),
-            ("__dk_", dst_np.props, dkey),
-            ("__rk_", rel.props, rkey),
-        ):
-            for k, tc in self._compiled_props(state, props_ast).items():
-                tmp = f"{prefix}{k}"
-                df = df.withColumn(tmp, tc.col)
-                key[k] = tmp
-        df = df.localCheckpoint(eager=True)
-        tmp_cols = [*skey.values(), *dkey.values(), *rkey.values()]
-
-        def _pattern(base):
-            """base rows joined to every existing full-pattern match whose
-            element properties equal the row's computed key values."""
-            edf, rinfo, _ = self._edge_scan(rel_var, [type_], "out", None, None)
-            if edf is None:
-                return None, None, None, None
-            sscan, sinfo = self._node_scan(src_var, [src_label])
-            dscan, dinfo = self._node_scan(dst_var, [dst_label])
-            pat = edf.join(
-                sscan, F.col(vcol(rel_var, "src")) == sscan[vcol(src_var, "id")]
-            ).join(
-                dscan, F.col(vcol(rel_var, "dst")) == dscan[vcol(dst_var, "id")]
-            )
-            if undirected:
-                # either orientation satisfies the pattern — a second
-                # equi-join pair, unioned (hash joins at scale); self-loops
-                # already bound by the first orientation
-                pat2 = (
-                    edf.join(
-                        sscan,
-                        F.col(vcol(rel_var, "dst"))
-                        == sscan[vcol(src_var, "id")],
-                    )
-                    .join(
-                        dscan,
-                        F.col(vcol(rel_var, "src"))
-                        == dscan[vcol(dst_var, "id")],
-                    )
-                    .where(
-                        F.col(vcol(rel_var, "src"))
-                        != F.col(vcol(rel_var, "dst"))
-                    )
-                )
-                pat = pat.unionByName(pat2)
-            cond = None
-            dead = False
-            for var, key, info in (
-                (src_var, skey, sinfo),
-                (dst_var, dkey, dinfo),
-                (rel_var, rkey, rinfo),
-            ):
-                for k, tmp in key.items():
-                    if k in info.props:
-                        c = F.col(pcol(var, k)) == base[tmp]
-                        cond = c if cond is None else cond & c
-                    else:
-                        dead = True  # prop column doesn't exist yet
-            if dead:
-                joined = base.join(pat, F.lit(False))
-            elif cond is None:
-                joined = base.crossJoin(pat)
-            else:
-                joined = base.join(pat, cond)
-            return joined, sinfo, dinfo, rinfo
-
-        group_cols = tmp_cols or []
-        all_tuples = (
-            df.select(*group_cols).distinct()
-            if group_cols
-            else df.limit(1).select(F.lit(1).alias("__mg"))
-        )
-        matched, _, _, _ = _pattern(df)
-        if matched is not None:
-            have = (
-                matched.select(*group_cols).distinct()
-                if group_cols
-                else matched.limit(1).select(F.lit(1).alias("__mg"))
-            )
-            # keyless: both frames are 1-row `__mg` markers, so the same
-            # left_anti expresses "all iff no match" without an isEmpty
-            # driver probe — the decision folds into the created-set
-            # checkpoint job below (round-9, VERDICT r8 #2)
-            missing = all_tuples.join(
-                have, on=group_cols or ["__mg"], how="left_anti"
-            )
-            matched_eids = matched.select(
-                F.col(vcol(rel_var, "eid")).alias("_id")
-            ).distinct()
-        else:
-            missing = all_tuples
-            matched_eids = None
-        created, created_empty = self._checkpoint_created(
-            missing.withColumn("__new_sid", F.expr("uuid()"))
-            .withColumn("__new_did", F.expr("uuid()"))
-            .withColumn("__new_eid", F.expr("uuid()")),
-            tmp_cols,
-            "Cannot merge using null property value",
-        )
-        if not created_empty:
-            self.store.append_nodes(
-                src_label,
-                created.select(
-                    F.col("__new_sid").alias("_id"),
-                    *[F.col(tmp).alias(k) for k, tmp in skey.items()],
-                ),
-            )
-            self.store.append_nodes(
-                dst_label,
-                created.select(
-                    F.col("__new_did").alias("_id"),
-                    *[F.col(tmp).alias(k) for k, tmp in dkey.items()],
-                ),
-            )
-            self.store.append_edges(
-                type_,
-                src_label,
-                dst_label,
-                created.select(
-                    F.col("__new_eid").alias("_id"),
-                    F.col("__new_sid").alias("_src"),
-                    F.col("__new_did").alias("_dst"),
-                    *[F.col(tmp).alias(k) for k, tmp in rkey.items()],
-                ),
-            )
-        # re-bind against the now-complete tables
-        joined, sinfo2, dinfo2, rinfo2 = _pattern(df)
-        if joined is None:
-            # zero key tuples (e.g. zero input rows) against a relationship
-            # type that never existed: nothing matched, nothing was created,
-            # and the edge table still doesn't exist — zero rows out, with
-            # all three pattern variables bound for downstream schema
-            # (round-9; previously masked by the isEmpty driver probes)
-            sscan, sinfo2 = self._node_scan(src_var, [src_label])
-            dscan, dinfo2 = self._node_scan(dst_var, [dst_label])
-            rinfo2 = VarInfo(
-                name=rel_var,
-                kind="edge",
-                types=[type_],
-                props={k: df.schema[tmp].dataType for k, tmp in rkey.items()},
-            )
-            joined = (
-                df.limit(0)
-                .crossJoin(sscan.limit(0))
-                .crossJoin(dscan.limit(0))
-                .withColumns(
-                    {
-                        vcol(rel_var, "eid"): F.lit(None).cast("string"),
-                        vcol(rel_var, "src"): F.lit(None).cast("string"),
-                        vcol(rel_var, "dst"): F.lit(None).cast("string"),
-                        vcol(rel_var, "type"): F.lit(type_),
-                        **{
-                            pcol(rel_var, k): F.lit(None).cast(
-                                df.schema[tmp].dataType
-                            )
-                            for k, tmp in rkey.items()
-                        },
-                    }
-                )
-            )
-        joined = joined.drop("__from", "__to", *tmp_cols)
-        scope = state.scope.copy()
-        scope.bind(sinfo2)
-        scope.bind(dinfo2)
-        scope.bind(rinfo2)
-        new_state = CompileState(df=joined, scope=scope)
-        if m.on_create and not created_empty:
-            new_state = self._apply_merge_sets(
-                new_state,
-                rel_var,
-                created.select(F.col("__new_eid").alias("_id")),
-                m.on_create,
-            )
-        if m.on_match and matched_eids is not None:
-            new_state = self._apply_merge_sets(
-                new_state, rel_var, matched_eids, m.on_match
-            )
-        return new_state
-
-    def _merge_relationship(self, state: CompileState, m: ast.Merge) -> CompileState:
-        left_np, rel, right_np = m.path.elements
-        assert isinstance(rel, ast.RelPattern)
-        unbound = [
-            np_
-            for np_ in (left_np, right_np)
-            if np_.var is None or np_.var not in state.scope
-        ]
-        if unbound:
-            # MERGE of a whole unbound path: match the FULL pattern; if
-            # nothing matches, create the full pattern (openCypher MERGE
-            # atomicity — never a half-created path).
-            if len(unbound) == 2:
-                if not state.scope.vars:
-                    return self._merge_standalone_path(state, m)
-                # correlated, both endpoints unbound: per-row
-                # match-else-create of the whole pattern
-                return self._merge_rel_both_unbound(state, m)
-            # correlated per-row match-else-create (reference MERGE
-            # interpreters, src/executor.ts:6835-7121)
-            return self._merge_rel_one_unbound(state, m)
-        if len(rel.types) != 1:
-            # Neo4j 3.5 parity: multi-type MERGE is a syntax-level rejection
-            raise CypherCompileError(
-                "A single relationship type must be specified for MERGE"
-            )
-        undirected = rel.direction == "both"
-        # undirected MERGE (Neo4j): MATCH either orientation; CREATE
-        # left-to-right when no orientation exists
-        src_var, dst_var = (
-            (left_np.var, right_np.var)
-            if rel.direction in ("out", "both")
-            else (right_np.var, left_np.var)
-        )
-        src_info = state.scope.get(src_var)
-        dst_info = state.scope.get(dst_var)
-        rel_var = rel.var or self.gensym("mr")
-        type_ = rel.types[0]
-        df = state.require_df()
-        # existing edges between the bound endpoint pairs
-        edf, rinfo, _ = self._edge_scan(rel_var, [type_], "out", None, None)
-        if edf is not None and rel.props:
-            # MERGE matches the FULL pattern incl. relationship properties
-            # (reference merge variants, src/executor.ts:6835-7610): an
-            # existing edge with different props does NOT match
-            edf = self._inline_prop_filter(edf, state, rinfo, rel.props)
-        pairs = df.select(
-            F.col(vcol(src_var, "id")).alias("__ms"),
-            F.col(vcol(dst_var, "id")).alias("__md"),
-        ).distinct()
-        if edf is not None:
-            existing_pairs = edf.select(
-                F.col(vcol(rel_var, "src")).alias("__ms"),
-                F.col(vcol(rel_var, "dst")).alias("__md"),
-            ).distinct()
-            if undirected:
-                # either orientation satisfies the pattern — a pair is
-                # missing only if NEITHER direction exists
-                existing_pairs = existing_pairs.unionByName(
-                    existing_pairs.select(
-                        F.col("__md").alias("__ms"),
-                        F.col("__ms").alias("__md"),
-                    )
-                ).distinct()
-            missing = pairs.join(existing_pairs, on=["__ms", "__md"], how="left_anti")
-        else:
-            missing = pairs
-        props = self._compiled_props(state, rel.props)
-        created = (
-            missing.withColumn("_id", F.expr("uuid()"))
-            .select(
-                "_id",
-                F.col("__ms").alias("_src"),
-                F.col("__md").alias("_dst"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        for k, tc in props.items():
-            created = created.withColumn(k, tc.col)
-        self.store.append_edges(
-            type_,
-            src_info.labels[0] if src_info.labels else "",
-            dst_info.labels[0] if dst_info.labels else "",
-            created,
-        )
-        # bind the rel var by re-scanning (now complete) edges — restricted
-        # to the pattern's props so r binds only full-pattern matches
-        edf2, rinfo2, _ = self._edge_scan(rel_var, [type_], "out", None, None)
-        assert edf2 is not None
-        if rel.props:
-            edf2 = self._inline_prop_filter(edf2, state, rinfo2, rel.props)
-        if undirected:
-            # two equi-joins (one per orientation) instead of a disjunctive
-            # join condition — stays a hash join at scale; self-loops only
-            # bind once (second orientation excludes them)
-            j1 = df.join(
-                edf2,
-                (df[vcol(src_var, "id")] == edf2["__from"])
-                & (df[vcol(dst_var, "id")] == edf2["__to"]),
-            )
-            j2 = df.join(
-                edf2,
-                (df[vcol(src_var, "id")] == edf2["__to"])
-                & (df[vcol(dst_var, "id")] == edf2["__from"])
-                & (edf2["__from"] != edf2["__to"]),
-            )
-            joined = j1.unionByName(j2).drop("__from", "__to")
-        else:
-            joined = df.join(
-                edf2,
-                (df[vcol(src_var, "id")] == edf2["__from"])
-                & (df[vcol(dst_var, "id")] == edf2["__to"]),
-            ).drop("__from", "__to")
-        scope = state.scope.copy()
-        scope.bind(rinfo2)
-        new_state = CompileState(df=joined, scope=scope)
-        created_ids = created.select("_id")
-        if m.on_create:
-            new_state = self._apply_merge_sets(
-                new_state, rel_var, created_ids, m.on_create
-            )
-        if m.on_match and edf is not None:
-            match_pairs = pairs
-            if undirected:
-                match_pairs = pairs.unionByName(
-                    pairs.select(
-                        F.col("__md").alias("__ms"),
-                        F.col("__ms").alias("__md"),
-                    )
-                ).distinct()
-            matched_ids = (
-                edf.join(
-                    match_pairs,
-                    (edf[vcol(rel_var, "src")] == match_pairs["__ms"])
-                    & (edf[vcol(rel_var, "dst")] == match_pairs["__md"]),
-                    "left_semi",
-                )
-                .select(F.col(vcol(rel_var, "eid")).alias("_id"))
-            )
-            new_state = self._apply_merge_sets(
-                new_state, rel_var, matched_ids, m.on_match
-            )
-        return new_state
 
     def _order_skip_limit(
         self, df: DataFrame, proj: ast.Projection, scope: Scope

@@ -480,9 +480,10 @@ class DurableTableStore:
     def append_counted(
         self, key: str, df: DataFrame, est_bytes: int,
         extra_metrics: list | None = None,
-    ) -> dict | None:
+    ) -> tuple[list[dict], dict | None] | None:
         """Append with the write job's own observation returned to the
-        caller (``rows`` plus any ``extra_metrics``) — lets a caller whose
+        caller as ``(file entries, observation row)`` — the row holds
+        ``rows`` plus any ``extra_metrics`` — so a caller whose
         frame carries fresh nondeterministic ids (uuid()) skip a separate
         freezing checkpoint: the single write IS the materialization.
         ``est_bytes`` must be a caller-measured bound routing the write

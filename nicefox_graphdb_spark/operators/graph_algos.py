@@ -560,11 +560,14 @@ def shortest_path_lengths(
             .distinct()
             .join(settled.select("start", "id"), on=["start", "id"], how="left_anti")
         )
-        # Checkpoint EVERY hop with the frontier size riding the same job:
-        # the isEmpty() convergence probe otherwise executes the hop's full
-        # join+distinct+anti plan, and the un-checkpointed lineage then
-        # re-executed it again inside the next hop (r11 — one job per hop
-        # now, and the settled union reads materialized frontiers).
+        # Checkpoint EVERY hop with the frontier size riding the same
+        # action: the isEmpty() convergence probe otherwise executes the
+        # hop's full join+distinct+anti plan, and the un-checkpointed
+        # lineage then re-executed it again inside the next hop (r11 — one
+        # checkpoint per hop now, and the settled union reads materialized
+        # frontiers). Under AQE each shuffle stage of that checkpoint runs
+        # as its own Spark job: about 7 jobs per hop (88-90 jobs for 12 hops
+        # on a 30-vertex chain, counted by job group).
         obs = Observation()
         nxt = _cut(nxt.observe(obs, F.count(F.lit(1)).alias("__n")), hop)
         if not obs.get["__n"]:

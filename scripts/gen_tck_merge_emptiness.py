@@ -4,7 +4,7 @@ MERGE under EMPTY vs NON-EMPTY inputs, crossed with pattern-exists vs
 pattern-absent — the decision matrix round 9 turned from driver isEmpty()
 probe jobs into data (limit-1 seed frames, observe-metric checkpoints,
 anti-joined 1-row markers; compiler.py _merge_multi_hop /
-_merge_standalone_path / keyless _merge_node / _merge_rel_*_unbound).
+_merge_standalone_path / keyless _merge_node / _merge_chain_correlated).
 Neo4j semantics (openCypher Merge: "MERGE runs once per incoming row"):
 
 - zero input rows  -> MERGE executes ZERO times: nothing is ever created,

@@ -318,6 +318,52 @@ def test_merge_rel_null_endpoint_skips(wengine):
     assert wengine.query("MATCH ()-[r:S]->() RETURN count(r) AS c") == [{"c": 0}]
 
 
+@pytest.mark.parametrize(
+    "pattern",
+    [
+        "(a)-[:X]->(b:BX)",
+        "(a)-[:X2]->(b)",
+        "(a)-[:X3]->(b:BY)-[:X4]->(c:CY)",
+    ],
+)
+def test_merge_rel_null_endpoint_creates_nothing(wengine, pattern):
+    """A null bound endpoint merges nothing and binds nothing, whatever
+    the far side of the pattern: no orphan node, no edge, no error."""
+    wengine.query("CREATE (:NA {id: 1})")
+    rows = wengine.query(
+        f"OPTIONAL MATCH (a:NA {{id: 999}}) MERGE {pattern} RETURN count(*) AS c"
+    )
+    assert rows == [{"c": 0}]
+    assert wengine.query("MATCH (n) RETURN count(n) AS c") == [{"c": 1}]
+    assert wengine.query("MATCH ()-[r]->() RETURN count(r) AS c") == [{"c": 0}]
+
+
+def test_merge_rel_rel_props_read_bound_node(wengine):
+    """Both endpoints bound, relationship properties read a binding value:
+    the key is computed per row, and a rerun matches instead of creating."""
+    wengine.query("CREATE (:RA {id: 1}), (:RA {id: 2})")
+    q = (
+        "MATCH (a:RA {id: 1}), (b:RA {id: 2}) "
+        "MERGE (a)-[r:T {w: a.id}]->(b) RETURN r.w AS w"
+    )
+    assert wengine.query(q) == [{"w": 1}]
+    assert wengine.query(q) == [{"w": 1}]
+    assert wengine.query("MATCH ()-[r:T]->() RETURN count(r) AS c") == [{"c": 1}]
+
+
+def test_merge_rel_rel_props_read_unwound_value(wengine):
+    wengine.query("CREATE (:RB {id: 1}), (:RB {id: 2})")
+    rows = wengine.query(
+        "MATCH (a:RB {id: 1}), (b:RB {id: 2}) UNWIND [1, 2, 2] AS x "
+        "MERGE (a)-[r:T2 {w: x}]->(b) RETURN r.w AS w ORDER BY w"
+    )
+    # one row per input row; the two x = 2 rows bind the same edge
+    assert rows == [{"w": 1}, {"w": 2}, {"w": 2}]
+    assert wengine.query(
+        "MATCH (:RB {id: 1})-[r:T2]->(:RB {id: 2}) RETURN r.w AS w ORDER BY w"
+    ) == [{"w": 1}, {"w": 2}]
+
+
 def test_set_replace_map_on_edge_persists(wengine):
     """Regression: SET r = {...} nulled unmentioned props on the in-flight
     binding but the store kept them — a re-read saw stale keys."""
@@ -424,6 +470,98 @@ def test_merge_job_budget_standalone_chain(spark, dengine):
     ) == [{"c": 1}]
 
 
+# Relationship MERGE budgets: each bound is the job count measured with the
+# single-hop compilers that preceded the chain path, plus 2.
+
+
+def test_merge_job_budget_both_bound(spark, dengine):
+    """The benchmark's keyed edge upsert (perfbench write_mix merge_rel)."""
+    dengine.query(
+        "UNWIND range(0, 199) AS i CREATE (:Acct {id: i, bal: i % 1000})"
+    )
+    dengine.query(
+        "MATCH (a:Acct) WITH a, (a.id * 7 + 3) % 200 AS j "
+        "MATCH (b:Acct) WHERE b.id = j CREATE (a)-[:PAYS {amt: a.id % 100}]->(b)"
+    )
+    q = (
+        "MATCH (a:Acct {id: $a}), (b:Acct {id: $b}) "
+        "MERGE (a)-[r:PAYS]->(b) ON CREATE SET r.amt = $amt"
+    )
+    n_create = _jobs_during(
+        spark,
+        lambda: dengine.query(q, {"a": 5, "b": 6, "amt": 7}),
+        "merge-both-bound-create",
+    )
+    assert n_create <= 20, n_create
+    n_match = _jobs_during(
+        spark,
+        lambda: dengine.query(q, {"a": 5, "b": 6, "amt": 8}),
+        "merge-both-bound-match",
+    )
+    assert n_match <= 10, n_match
+    # ON CREATE ran once: the match kept the first amount
+    assert dengine.query(
+        "MATCH (:Acct {id: 5})-[r:PAYS]->(:Acct {id: 6}) RETURN r.amt AS amt"
+    ) == [{"amt": 7}]
+
+
+@pytest.mark.parametrize(
+    "name, merge, budgets, check, expected",
+    [
+        (
+            "one-unbound",
+            "MERGE (a)-[:HAS]->(w:Wallet {acct: a.id})",
+            (9, 9),
+            "MATCH (:Acct)-[:HAS]->(w:Wallet) RETURN count(*) AS c, sum(w.acct) AS s",
+            # one wallet per account: acct ids 1..20 sum to 210
+            {"c": 20, "s": 210},
+        ),
+        (
+            "both-unbound",
+            "MERGE (s:Seg {m: a.id % 3})-[:COVERS]->(z:Zone)",
+            (10, 10),
+            "MATCH (s:Seg)-[:COVERS]->(:Zone) RETURN count(*) AS c, sum(s.m) AS s",
+            # one Seg per distinct id % 3 (0, 1, 2)
+            {"c": 3, "s": 3},
+        ),
+        (
+            "both-unbound-uncorrelated",
+            "MERGE (x:Hub {h: 1})-[:L]->(y:Spoke {s: 2})",
+            (10, 10),
+            "MATCH (:Hub)-[:L]->(y:Spoke) RETURN count(*) AS c, sum(y.s) AS s",
+            # one chain for all rows
+            {"c": 1, "s": 2},
+        ),
+        (
+            "on-create-on-match",
+            "MERGE (a)-[:OWNS]->(t:T {k: a.id}) "
+            "ON CREATE SET t.c = 1 ON MATCH SET t.m = 2",
+            (18, 20),
+            "MATCH (:Acct)-[:OWNS]->(t:T) RETURN count(*) AS c, "
+            "sum(t.c) + sum(t.m) AS s",
+            # 20 created (t.c = 1), then 20 matched (t.m = 2)
+            {"c": 20, "s": 60},
+        ),
+    ],
+)
+def test_merge_job_budget_correlated(
+    spark, dengine, name, merge, budgets, check, expected
+):
+    """Relationship MERGE under 20 bound rows, first run (creates) and
+    rerun (matches), with the final graph computed by hand."""
+    dengine.query("UNWIND range(1, 20) AS i CREATE (:Acct {id: i})")
+    counts = [
+        _jobs_during(
+            spark,
+            lambda: dengine.query(f"MATCH (a:Acct) {merge}"),
+            f"merge-{name}-{run}",
+        )
+        for run in ("create", "rerun")
+    ]
+    assert all(n <= b for n, b in zip(counts, budgets)), counts
+    assert dengine.query(check) == [expected]
+
+
 def test_merge_keyless_zero_input_creates_nothing(wengine):
     """Zero input rows → MERGE executes zero times; the decision is data
     (a limit-1 seed), not a driver probe — nothing may be created."""
@@ -494,6 +632,22 @@ def test_merge_rel_both_unbound_zero_input(wengine):
     assert rows == [{"c": 0}]
     assert wengine.query("MATCH (n:Org) RETURN count(*) AS c") == [{"c": 0}]
     assert wengine.query("MATCH (n:Site) RETURN count(*) AS c") == [{"c": 0}]
+
+
+@pytest.mark.parametrize(
+    "pattern", ["(a)-[:N1]->(b:B)-[:N2]->(c:C)", "(a)-[:N3]->(b)"]
+)
+def test_merge_chain_zero_input_unknown_type(wengine, pattern):
+    """Zero input rows through the chain path with a relationship type
+    that was never created: zero rows out, every pattern variable still
+    bound, nothing created."""
+    wengine.query("CREATE (:Acct {id: 1})")
+    rows = wengine.query(
+        f"MATCH (a:Acct) WHERE a.id > 1000 MERGE {pattern} "
+        "RETURN count(*) AS c, count(b) AS cb"
+    )
+    assert rows == [{"c": 0, "cb": 0}]
+    assert wengine.query("MATCH (n) RETURN count(n) AS c") == [{"c": 1}]
 
 
 def test_set_last_write_wins_requires_order_by(wengine):
