@@ -4236,12 +4236,19 @@ class CypherToSpark:
         created, created_empty = self._checkpoint_created(
             created, group_cols, "Cannot merge using null property value"
         )
+        # ON CREATE items that only read their own created element fold
+        # into its appended rows; the rest run as a rewrite below
+        on_create = list(m.on_create)
         if not created_empty:
             for i in range(len(nodes)):
                 if bound[i] or canon[i] != i:
                     continue
-                self.store.append_nodes(
-                    node_labels[i][0] if node_labels[i] else "",
+                rows, on_create = self._fold_on_create(
+                    VarInfo(
+                        name=node_vars[i], kind="node", labels=node_labels[i],
+                        props={k: created.schema[t].dataType
+                               for k, t in node_keys[i].items()},
+                    ),
                     created.select(
                         F.col(new_node_cols[i]).alias("_id"),
                         *[
@@ -4249,6 +4256,10 @@ class CypherToSpark:
                             for k, tmp in node_keys[i].items()
                         ],
                     ),
+                    on_create,
+                )
+                self.store.append_nodes(
+                    node_labels[i][0] if node_labels[i] else "", rows
                 )
                 self._merge_add_extra_labels(
                     node_labels[i],
@@ -4267,16 +4278,25 @@ class CypherToSpark:
                     if bound[ri]
                     else new_node_cols[canon[ri]]
                 )
-                self.store.append_edges(
-                    r.types[0],
-                    node_labels[li][0] if node_labels[li] else "",
-                    node_labels[ri][0] if node_labels[ri] else "",
+                rows, on_create = self._fold_on_create(
+                    VarInfo(
+                        name=rel_vars[j], kind="edge", types=[r.types[0]],
+                        props={k: created.schema[t].dataType
+                               for k, t in rel_keys[j].items()},
+                    ),
                     created.select(
                         F.col(new_edge_cols[j]).alias("_id"),
                         F.col(src_col).alias("_src"),
                         F.col(dst_col).alias("_dst"),
                         *[F.col(tmp).alias(k) for k, tmp in rel_keys[j].items()],
                     ),
+                    on_create,
+                )
+                self.store.append_edges(
+                    r.types[0],
+                    node_labels[li][0] if node_labels[li] else "",
+                    node_labels[ri][0] if node_labels[ri] else "",
+                    rows,
                 )
         # re-bind every row against the now-complete tables
         joined, infos = _pattern(df, rebind=True)
@@ -4285,12 +4305,12 @@ class CypherToSpark:
         for info in infos:
             scope.bind(info)
         new_state = CompileState(df=joined, scope=scope)
-        if m.on_create and not created_empty:
+        if on_create and not created_empty:
             new_state = self._apply_merge_sets(
                 new_state,
                 rel_vars[0],
                 created.select(F.col(new_edge_cols[0]).alias("_id")),
-                m.on_create,
+                on_create,
             )
         if m.on_match and matched_eids is not None:
             new_state = self._apply_merge_sets(
@@ -4344,7 +4364,7 @@ class CypherToSpark:
         key_types = {k: tc.dtype for k, tc in props.items()}
         created = None
         appended = False
-        staged = False
+        staged = None
         if key_tmp:
             keys = df.select(
                 *[F.col(tmp).alias(k) for k, tmp in key_tmp.items()]
@@ -4356,7 +4376,9 @@ class CypherToSpark:
             )
             new_rows = missing_keys.withColumn("_id", F.expr("uuid()"))
             folded = (
-                self._fold_on_create(var, label, new_rows, key_types, on_create)
+                self._fold_node_on_create(
+                    var, label, new_rows, key_types, on_create
+                )
                 if on_create
                 else None
             )
@@ -4368,44 +4390,28 @@ class CypherToSpark:
                 # deleting the separate freezing checkpoint (one
                 # materialization instead of two; see
                 # MutableGraph.append_nodes_counted)
-                create_rows = folded if folded is not None else new_rows
-                if (
-                    on_match
-                    and getattr(self, "_terminal_write_clause", False)
-                    and hasattr(self.store, "stage_pending_append")
-                ):
+                append_args = dict(
+                    label=label,
+                    rows=folded if folded is not None else new_rows,
+                    n_rows_bound=n_input,
+                    null_check_cols=tuple(key_names),
+                    err="Cannot merge node using null property value",
+                    err_pos=getattr(self, "_clause_pos", None),
+                )
+                if on_match and getattr(self, "_terminal_write_clause", False):
                     # upsert fusion (r12): a TERMINAL MERGE's created rows
-                    # ride the ON MATCH bucket rewrite as the append
-                    # branch of ONE durable write (the rewrite's touched
-                    # buckets overlap the fresh append, so the two-write
-                    # shape writes created rows twice). Terminal-gated:
-                    # the re-read binding below stays pre-append and a
-                    # later clause (or RETURN) would miss created nodes.
-                    # If the update never consumes the staging (e.g.
-                    # ON MATCH routed elsewhere), the store's defensive
-                    # flushes or the explicit flush below append normally.
-                    staged = self.store.stage_pending_append(
-                        label,
-                        create_rows,
-                        n_rows_bound=n_input,
-                        null_check_cols=tuple(key_names),
-                        err="Cannot merge node using null property value",
-                        err_pos=getattr(self, "_clause_pos", None),
-                    )
-                if not staged:
-                    n_created = self.store.append_nodes_counted(
-                        label,
-                        create_rows,
-                        n_rows_bound=n_input,
-                        null_check_cols=tuple(key_names),
-                        err="Cannot merge node using null property value",
-                        err_pos=getattr(self, "_clause_pos", None),
-                    )
-                    self._last_created_n = n_created
-                    created_empty = n_created == 0
-                else:
+                    # are appended inside a staging window around the ON
+                    # MATCH update below, so a durable store can ship them
+                    # with that bucket rewrite as ONE write. Terminal-gated:
+                    # the re-bind below reads the table before the append,
+                    # which a later clause (or RETURN) would notice.
+                    staged = append_args
                     self._last_created_n = None
                     created_empty = False  # unknown; unused on this path
+                else:
+                    n_created = self.store.append_nodes_counted(**append_args)
+                    self._last_created_n = n_created
+                    created_empty = n_created == 0
                 appended = True
             else:
                 created, created_empty = self._checkpoint_created(
@@ -4416,7 +4422,7 @@ class CypherToSpark:
                 # refold over the CHECKPOINTED frame — the frozen uuids,
                 # not the plan that would re-draw them
                 folded = (
-                    self._fold_on_create(
+                    self._fold_node_on_create(
                         var, label, created, key_types, on_create
                     )
                     if on_create and not created_empty
@@ -4448,7 +4454,9 @@ class CypherToSpark:
                 "unreachable",
             )
             folded = (
-                self._fold_on_create(var, label, created, key_types, on_create)
+                self._fold_node_on_create(
+                    var, label, created, key_types, on_create
+                )
                 if on_create and not created_empty
                 else None
             )
@@ -4521,79 +4529,96 @@ class CypherToSpark:
                 on_create,
             )
         # matched_ids ≤ the distinct binding keys ≤ the observed input rows
-        new_state = self._apply_merge_sets(
-            new_state, var, self._gated(matched_ids, n_input), on_match
-        )
-        if staged:
-            # no-op when the ON MATCH update consumed the staged append;
-            # otherwise (nothing matched, or the SET routed to another
-            # table) the created rows append normally here. On an
-            # exception above, the engine's abort discards the staging.
-            self.store.flush_pending_append()
-        return new_state
+        with (
+            self.store.staged_append(**staged) if staged else contextlib.nullcontext()
+        ):
+            return self._apply_merge_sets(
+                new_state, var, self._gated(matched_ids, n_input), on_match
+            )
 
     def _fold_on_create(
-        self,
-        var: str,
-        label: str,
-        created: DataFrame,
-        key_types: dict[str, "T.DataType"],
-        items: list[ast.SetItem],
-    ) -> DataFrame | None:
-        """ON CREATE SET items that only assign the merged variable's own
-        properties from self-referential/constant expressions fold into the
-        insert rows — one write instead of append + per-row rewrite.
-        Returns None when any item needs the general update path."""
+        self, info: VarInfo, rows: DataFrame, items: list[ast.SetItem]
+    ) -> tuple[DataFrame, list[ast.SetItem]]:
+        """Fold ON CREATE SET items into the created element's store rows
+        (``_id``, edge ``_src``/``_dst``, one column per prop in
+        ``info.props``) — one write instead of append + per-row rewrite.
+        An item folds when it assigns a non-key property of ``info``'s
+        variable from constants, parameters and that variable's own
+        properties. They fold only when no other item reads or writes the
+        variable, so in-order SET semantics hold. Returns the rows with
+        the folded items applied and the items left for the general
+        update path."""
         import dataclasses
 
-        refs: set[str] = set()
+        var = info.name
 
-        def walk_vars(o) -> None:
+        def refs(o, out: set[str]) -> set[str]:
             if isinstance(o, ast.Var):
-                refs.add(o.name)
+                out.add(o.name)
             elif dataclasses.is_dataclass(o) and not isinstance(o, type):
                 for f_ in dataclasses.fields(o):
-                    walk_vars(getattr(o, f_.name))
+                    refs(getattr(o, f_.name), out)
             elif isinstance(o, (list, tuple)):
                 for x in o:
-                    walk_vars(x)
+                    refs(x, out)
             elif isinstance(o, dict):
                 for x in o.values():
-                    walk_vars(x)
+                    refs(x, out)
+            return out
 
-        for it in items:
-            if it.kind != "prop":
-                return None
-            if not (
-                isinstance(it.target, ast.Prop)
+        def own(it: ast.SetItem) -> bool:
+            return (
+                it.kind == "prop"
+                and isinstance(it.target, ast.Prop)
                 and isinstance(it.target.base, ast.Var)
                 and it.target.base.name == var
-            ):
-                return None
-            walk_vars(it.value)
-        if refs - {var}:
-            return None
-        bound = created.withColumnRenamed("_id", vcol(var, "id"))
-        for k in key_types:
-            bound = bound.withColumnRenamed(k, pcol(var, k))
-        prop_types = dict(key_types)
-        for it in items:
-            scope = Scope()
-            scope.bind(
-                VarInfo(name=var, kind="node", labels=[label], props=prop_types)
+                # a key prop must keep the value the re-bind joins on
+                and it.target.key not in info.props
+                and refs(it.value, set()) <= {var}
             )
-            st = CompileState(df=bound, scope=scope)
-            tc = self._compile_expr(st, it.value)
+
+        mine = [it for it in items if own(it)]
+        rest = [it for it in items if not own(it)]
+        if not mine or any(var in refs(it, set()) for it in rest):
+            return rows, items
+        structural = {"_id": info.id_col()}
+        if info.kind == "edge":
+            structural.update(_src=vcol(var, "src"), _dst=vcol(var, "dst"))
+        bound = rows
+        for c, b in structural.items():
+            bound = bound.withColumnRenamed(c, b)
+        for k in info.props:
+            bound = bound.withColumnRenamed(k, pcol(var, k))
+        if info.kind == "edge":
+            bound = bound.withColumn(vcol(var, "type"), F.lit(info.types[0]))
+        props = dict(info.props)
+        for it in mine:
             key = it.target.key  # type: ignore[union-attr]
+            self._validate_storable_static(key, it.value)
+            scope = Scope()
+            scope.bind(replace(info, props=dict(props)))
+            tc = self._compile_expr(CompileState(df=bound, scope=scope), it.value)
             col, dtype = tc.col, tc.dtype
             if dtype is None or isinstance(dtype, T.NullType):
                 col, dtype = col.cast("string"), T.StringType()  # parquet-safe
+            else:
+                self._validate_storable(key, tc)
             bound = bound.withColumn(pcol(var, key), col)
-            prop_types[key] = dtype
+            props[key] = dtype
         return bound.select(
-            F.col(vcol(var, "id")).alias("_id"),
-            *[F.col(pcol(var, k)).alias(k) for k in prop_types],
-        )
+            *[F.col(b).alias(c) for c, b in structural.items()],
+            *[F.col(pcol(var, k)).alias(k) for k in props],
+        ), rest
+
+    def _fold_node_on_create(
+        self, var: str, label: str, rows: DataFrame,
+        key_types: dict[str, T.DataType], items: list[ast.SetItem],
+    ) -> DataFrame | None:
+        """Single-node MERGE: the created rows with EVERY ON CREATE item
+        folded, or None when any item needs the general update path."""
+        info = VarInfo(name=var, kind="node", labels=[label], props=key_types)
+        folded, rest = self._fold_on_create(info, rows, items)
+        return None if rest else folded
 
     # a materialized key/id set up to this many rows gets an explicit
     # broadcast hint when re-attached by join: checkpointed frames report
@@ -4623,19 +4648,17 @@ class CypherToSpark:
         broadcast gating by the caller (``_gated``)."""
         from pyspark.sql import Observation
 
-        from nicefox_graphdb_spark.graph_store import CypherRuntimeError
+        from nicefox_graphdb_spark.graph_store import (
+            CypherRuntimeError,
+            null_metrics,
+        )
 
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        if key_cols:
-            anynull = None
-            for k in key_cols:
-                c = F.col(k).isNull()
-                anynull = c if anynull is None else anynull | c
-            aggs.append(F.max(anynull).alias("__has_null"))
         obs = Observation()
-        created = frame.observe(obs, *aggs).localCheckpoint(eager=True)
+        created = frame.observe(
+            obs, F.count(F.lit(1)).alias("__n"), *null_metrics(key_cols)
+        ).localCheckpoint(eager=True)
         row = obs.get
-        if key_cols and row.get("__has_null"):
+        if row.get("__has_null"):
             raise CypherRuntimeError(
                 err, pos=getattr(self, "_clause_pos", None)
             )

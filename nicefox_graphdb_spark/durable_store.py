@@ -20,20 +20,28 @@ small):
   (``os.replace``) — readers always see a consistent snapshot and a crash
   mid-write leaves the previous version intact (Delta's _delta_log, in
   miniature).
-- **Writes are size-aware** (Delta's optimized write): the incoming
-  frame's Catalyst plan statistics decide the physical shape with zero
-  extra jobs. Small writes land as ONE parquet file spanning several
-  buckets, with the exact bucket set, row count, and contract validation
-  collected by ``DataFrame.observe`` DURING the write (no follow-up scan);
-  large writes fan out via an AQE-rebalanced ``partitionBy`` into
-  bucket-exclusive files. A 1 000-row MERGE therefore costs one
+- **One write call** (``DurableTableStore.write``): ONE Spark write whose
+  ``replace`` rows become the complete new state of the touched buckets
+  and whose ``append`` rows land wherever they hash. Its checks (rows
+  outside the touched buckets, the caller's ``validate`` over the append
+  branch's observed row count and metrics) ride the write via
+  ``DataFrame.observe`` and run before any file moves or the manifest
+  changes.
+- **Writes are size-aware** (Delta's optimized write): plan statistics
+  or the replaced files' own byte stats decide the physical shape with
+  zero extra jobs. Small writes land as ONE parquet file spanning several
+  buckets, tagged with the exact bucket set and row count the write
+  observed; large writes fan out via an AQE-rebalanced ``partitionBy``
+  into bucket-exclusive files. A 1 000-row MERGE therefore costs one
   single-task file write, while a 1 TB bulk load still parallelizes.
 - **Keyed MERGE prunes files**: ``SET n.p = v`` on k matched ids computes
   the touched bucket set from the update keys (≤ n_buckets small ints),
   reads and rewrites ONLY the files overlapping those buckets, and commits
   a manifest where untouched files stay referenced byte-for-byte. At
   100 TB with n_buckets=4096, a 10-row MERGE touches ~10 files, not the
-  table.
+  table. A terminal ``MERGE ... ON MATCH SET`` stages its created rows in
+  a scoped window (``DurableGraph.staged_append``) so the ON MATCH
+  rewrite of the same label carries them as its append branch.
 - **Appends add files** without rewriting anything; when a bucket's
   exclusive files or the table's shared (multi-bucket) files exceed
   ``compact_threshold``, they are compacted back into bucket-exclusive
@@ -60,6 +68,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from contextlib import contextmanager
 from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,7 +77,11 @@ from pyspark.sql import types as T
 
 from nicefox_graphdb_spark.catalog import EdgeTable, GraphCatalog
 from nicefox_graphdb_spark.commit_plane import LocalCommitPlane
-from nicefox_graphdb_spark.graph_store import MutableGraph
+from nicefox_graphdb_spark.graph_store import (
+    CypherRuntimeError,
+    MutableGraph,
+    null_metrics,
+)
 
 
 def _q(s: str) -> str:
@@ -76,6 +89,13 @@ def _q(s: str) -> str:
     sentinel label for unlabeled nodes) maps to "%00" — a NUL escape no
     real label can quote to, so it cannot collide."""
     return quote(s, safe="") if s else "%00"
+
+
+def _observed(obs) -> dict:
+    """An Observation's row, or {} when its branch never ran: AQE drops a
+    branch it proves empty at runtime, metrics and all, and ``obs.get``
+    fails on the resulting empty row."""
+    return obs.get if obs._jo.getRow().length() else {}
 
 
 def node_key(label: str) -> str:
@@ -349,45 +369,27 @@ class DurableTableStore:
             return None
 
     def _write_files(
-        self, key: str, df: DataFrame, touched: list[int] | None = None,
-        force_fanout: bool = False, est_bytes: int | None = None,
-        extra_metrics: list | None = None,
-    ) -> tuple[list[dict], dict | None]:
-        """Write rows bucketed by ``_id``; returns (new manifest file
-        entries, the small-path observation row or None). Nothing is
-        visible until the manifest commits.
+        self, key: str, df: DataFrame, est_bytes: int | None = None,
+        check=None,
+    ) -> list[dict]:
+        """Write rows bucketed by ``_id``; returns the new manifest file
+        entries. Nothing is visible until the manifest commits.
 
-        Small frames (by plan-stats estimate) write ONE file from one task;
-        its exact bucket set, row count, and the touched-set contract check
-        ride the write via ``observe`` — zero extra jobs; ``extra_metrics``
-        lets a caller ride its own validation aggregates on the same job
-        (they come back in the returned row). Large frames shuffle once on
-        the bucket key (AQE rebalance sizes the tasks) into bucket-exclusive
-        files (extra metrics are not computed there — callers needing them
-        must pre-materialize instead). With ``touched``, rows outside the
-        touched buckets raise BEFORE anything moves into the table
-        directory or the manifest mutates."""
+        Frames estimated at most ``small_write_bytes`` write ONE file from
+        one task; its exact bucket set and row count ride the write via
+        ``observe`` (zero extra jobs). Larger or unknown frames shuffle
+        once on the bucket key (AQE rebalance sizes the tasks) into
+        bucket-exclusive files. ``check()`` runs after the Spark write and
+        before any file moves into the table directory: a raise leaves
+        the table directory and the manifest untouched."""
         from pyspark.sql import Observation
 
-        est = None
-        if not force_fanout:
-            est = est_bytes if est_bytes is not None else self._plan_bytes(df)
         staging = os.path.join(self.root, "_staging", uuid.uuid4().hex)
         ddir = os.path.join(self.root, "data", key)
         bucketed = df.withColumn("__bucket", self.bucket_col(F.col("_id")))
-        entries: list[dict] = []
-        if est is not None and est <= self.small_write_bytes:
+        small = est_bytes is not None and est_bytes <= self.small_write_bytes
+        if small:
             obs = Observation()
-            metrics = [
-                F.count(F.lit(1)).alias("rows"),
-                F.collect_set("__bucket").alias("buckets"),
-            ]
-            if touched is not None:
-                metrics.append(
-                    F.max(~F.col("__bucket").isin(touched)).alias("stray")
-                )
-            if extra_metrics:
-                metrics.extend(extra_metrics)
             (
                 # coalesce(1), not repartition(1): the narrow merge skips a
                 # round-robin Exchange plus its sortBeforeRepartition local
@@ -395,122 +397,168 @@ class DurableTableStore:
                 # "remove shuffles outright"). The single task reads every
                 # upstream partition; fine by construction, this path is
                 # size-gated at small_write_bytes.
-                bucketed.observe(obs, *metrics)
+                bucketed.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.collect_set("__bucket").alias("buckets"),
+                )
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(staging)
             )
-            got = obs.get
-            if touched is not None and got.get("stray"):
+        else:
+            (
+                # REBALANCE (AQE) sizes write tasks by data volume: a skewed
+                # bucket may split into several files (fine — entries are a
+                # LIST), small buckets coalesce into few tasks
+                bucketed.hint("rebalance", "__bucket")
+                .write.partitionBy("__bucket")
+                .mode("overwrite")
+                .parquet(staging)
+            )
+        if check is not None:
+            try:
+                check()
+            except BaseException:
                 self.fs.rmtree(staging)
-                raise ValueError(
-                    "replace_buckets: rows outside touched buckets "
-                    f"{sorted(set(got['buckets']) - set(touched))}"
+                raise
+        # (staged file, published name, bucket set, exact row count)
+        files: list[tuple[str, str, list[int], int | None]] = []
+        if small:
+            got = _observed(obs)
+            if got.get("rows"):
+                files = [
+                    (os.path.join(staging, fn), f"s-{uuid.uuid4().hex}.parquet",
+                     sorted(got["buckets"]), got["rows"])
+                    for fn in self.fs.listdir(staging)
+                    if fn.endswith(".parquet")
+                ]
+        else:
+            for d in self.fs.listdir(staging):
+                if not d.startswith("__bucket="):
+                    continue
+                b = int(d.split("=", 1)[1])
+                files.extend(
+                    (os.path.join(staging, d, fn),
+                     f"b{b:05d}-{uuid.uuid4().hex}.parquet", [b], None)
+                    for fn in self.fs.listdir(os.path.join(staging, d))
+                    if fn.endswith(".parquet")
                 )
-            if got["rows"] == 0:
-                self.fs.rmtree(staging)
-                return [], got
+        entries: list[dict] = []
+        if files:
             self.fs.makedirs(ddir)
-            for fn in self.fs.listdir(staging):
-                if not fn.endswith(".parquet"):
-                    continue
-                name = f"s-{uuid.uuid4().hex}.parquet"
-                src = os.path.join(staging, fn)
-                size = self.fs.size(src)
-                self.fs.move(src, os.path.join(ddir, name))
-                entries.append(
-                    {
-                        "name": name,
-                        "buckets": sorted(got["buckets"]),
-                        "rows": got["rows"],
-                        "bytes": size,
-                    }
-                )
-            self.fs.rmtree(staging)
-            return entries, got
-        (
-            # REBALANCE (AQE) sizes write tasks by data volume: a skewed
-            # bucket may split into several files (fine — entries are a
-            # LIST), small buckets coalesce into few tasks
-            bucketed.hint("rebalance", "__bucket")
-            .write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(staging)
-        )
-        dirs = [
-            (int(d.split("=", 1)[1]), d)
-            for d in self.fs.listdir(staging)
-            if d.startswith("__bucket=")
-        ]
-        if touched is not None:
-            stray = {b for b, _ in dirs} - set(touched)
-            if stray:
-                # rows hashed outside the touched set would corrupt pruning
-                # — callers must only pass rows belonging to the touched
-                # buckets. Validate BEFORE anything moves or the manifest
-                # mutates: a caller that catches this error sees a fully
-                # consistent store.
-                self.fs.rmtree(staging)
-                raise ValueError(
-                    f"replace_buckets: rows outside touched buckets {sorted(stray)}"
-                )
-        self.fs.makedirs(ddir)
-        for b, d in dirs:
-            for fn in self.fs.listdir(os.path.join(staging, d)):
-                if not fn.endswith(".parquet"):
-                    continue
-                name = f"b{b:05d}-{uuid.uuid4().hex}.parquet"
-                src = os.path.join(staging, d, fn)
-                size = self.fs.size(src)
-                self.fs.move(src, os.path.join(ddir, name))
-                entries.append(
-                    {"name": name, "buckets": [b], "rows": None, "bytes": size}
-                )
+        for src, name, buckets, rows in files:
+            size = self.fs.size(src)
+            self.fs.move(src, os.path.join(ddir, name))
+            entries.append(
+                {"name": name, "buckets": buckets, "rows": rows, "bytes": size}
+            )
         self.fs.rmtree(staging)
-        return entries, None
+        return entries
 
-    def append(self, key: str, df: DataFrame) -> None:
-        """Add files; existing files untouched. Buckets whose exclusive
-        files (or the table's shared files) exceed compact_threshold are
-        compacted back into bucket-exclusive files in this commit."""
-        new, _ = self._write_files(key, df)
-        self.manifest["tables"][key]["files"].extend(new)
-        self.maybe_compact(key)
+    def write(
+        self,
+        key: str,
+        *,
+        replace: DataFrame | None = None,
+        touched=(),
+        append: DataFrame | None = None,
+        est_bytes: int | None = None,
+        metrics=(),
+        validate=None,
+    ) -> dict:
+        """The store's one write: ONE Spark write, then one manifest edit.
 
-    def append_counted(
-        self, key: str, df: DataFrame, est_bytes: int,
-        extra_metrics: list | None = None,
-    ) -> tuple[list[dict], dict | None] | None:
-        """Append with the write job's own observation returned to the
-        caller as ``(file entries, observation row)`` — the row holds
-        ``rows`` plus any ``extra_metrics`` — so a caller whose
-        frame carries fresh nondeterministic ids (uuid()) skip a separate
-        freezing checkpoint: the single write IS the materialization.
-        ``est_bytes`` must be a caller-measured bound routing the write
-        down the small single-file path (the un-checkpointed plan's own
-        Catalyst stats are opaque); a bound over ``small_write_bytes``
-        returns None without writing — callers fall back to the
-        checkpoint-then-append path. The manifest is NOT touched here:
-        callers validate their extra metrics first, then publish the
-        returned entries via ``publish_append`` — a raise in between
-        leaves only orphaned (vacuum-able) files behind."""
-        if est_bytes > self.small_write_bytes:
-            return None
-        new, got = self._write_files(
-            key, df, est_bytes=est_bytes, extra_metrics=extra_metrics
-        )
-        return (new, got)
+        ``replace`` becomes the complete new state of the ``touched``
+        buckets: files fully inside them are dropped, files disjoint from
+        them stay referenced byte-for-byte, and a shared file straddling
+        the boundary folds its untouched-bucket rows into this write (the
+        touched set widens to cover it — shared files only arise from
+        small writes). ``append`` rows are added wherever they hash; the
+        manifest's many-files-per-bucket read model makes one file that is
+        both a bucket's replacement and another bucket's append
+        consistent. A terminal MERGE uses that to ship created rows (fresh
+        uuids, buckets unknowable before the write) with its ON MATCH
+        rewrite.
 
-    def publish_append(self, key: str, entries: list[dict]) -> None:
-        """Reference freshly written files in the manifest (the second half
-        of ``append_counted``, after caller-side validation)."""
-        if entries:
-            self.manifest["tables"][key]["files"].extend(entries)
+        Observations ride the write, no extra job: the append branch
+        counts ``rows`` and evaluates ``metrics``; the replace branch
+        checks that no row lies outside ``touched`` (appended rows are
+        exempt). After the Spark write and before any file moves, a stray
+        row raises ``ValueError`` and ``validate(row)`` may raise; either
+        leaves the manifest untouched. ``est_bytes`` bounds the append
+        branch's size (default: its Catalyst estimate); the replaced
+        files' own byte stats bound the replace branch. Pure appends may
+        compact the table afterwards. Returns the observation row:
+        ``rows`` (appended rows) plus each metric."""
+        from pyspark.sql import Observation
+
+        t = self.manifest["tables"][key]
+        parts: list[DataFrame] = []
+        est: int | None = 0
+        keep, drop = t["files"], []
+        stray_obs = app_obs = None
+        if replace is not None:
+            caller = sorted(touched)
+            stray_obs = Observation()
+            parts.append(
+                replace.withColumn("__cb", self.bucket_col(F.col("_id")))
+                .observe(stray_obs, F.max(~F.col("__cb").isin(caller)).alias("stray"))
+                .drop("__cb")
+            )
+            keep = [e for e in t["files"] if not self._overlaps(e, caller)]
+            drop = [e for e in t["files"] if self._overlaps(e, caller)]
+            partial = [
+                e for e in drop
+                if e["buckets"] is None or not set(e["buckets"]) <= set(caller)
+            ]
+            if partial:
+                ddir = os.path.join(self.root, "data", key)
+                parts.append(
+                    self.spark.read.schema(self.schema_of(key))
+                    .parquet(*(os.path.join(ddir, e["name"]) for e in partial))
+                    .where(~self.bucket_col(F.col("_id")).isin(caller))
+                )
+            # rewrites replace known data: the replaced files' OWN byte
+            # stats estimate the output better than the plan stats of a
+            # join-shaped merge frame; 1.5× covers added columns/rows.
+            # Unknown stats (pre-v2 files) → fan-out path.
+            if drop and all(e["bytes"] is not None for e in drop):
+                est = int(sum(e["bytes"] for e in drop) * 1.5)
+            else:
+                est = None
+        if append is not None:
+            app_obs = Observation()
+            parts.append(
+                append.observe(app_obs, F.count(F.lit(1)).alias("rows"), *metrics)
+            )
+            if est_bytes is None and replace is None:
+                est_bytes = self._plan_bytes(append)
+            est = None if est is None or est_bytes is None else est + est_bytes
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p)
+        row = {"rows": 0}
+
+        def _check() -> None:
+            if stray_obs is not None and _observed(stray_obs).get("stray"):
+                raise ValueError(
+                    f"write: rows outside touched buckets {sorted(touched)}"
+                )
+            if app_obs is not None:
+                row.update(_observed(app_obs))
+            if validate is not None:
+                validate(row)
+
+        new = self._write_files(key, df, est_bytes=est, check=_check)
+        t["files"] = keep + new
+        if replace is None:
             self.maybe_compact(key)
+        return row
 
     def maybe_compact(self, key: str) -> None:
         """Compact when shared or per-bucket file counts exceed the
-        threshold (split out of append so every append flavor shares it)."""
+        threshold; ``write`` runs it after every pure append."""
         files = self.manifest["tables"][key]["files"]
         shared = [e for e in files if e["buckets"] is None or len(e["buckets"]) != 1]
         if len(shared) > self.compact_threshold:
@@ -535,7 +583,7 @@ class DurableTableStore:
         df = self.spark.read.schema(self.schema_of(key)).parquet(
             *(os.path.join(ddir, e["name"]) for e in shared)
         )
-        new, _ = self._write_files(key, df, force_fanout=True)
+        new = self._write_files(key, df)
         names = {e["name"] for e in shared}
         t["files"] = [e for e in t["files"] if e["name"] not in names] + new
 
@@ -556,157 +604,18 @@ class DurableTableStore:
         df = self.spark.read.schema(self.schema_of(key)).parquet(
             *(os.path.join(ddir, e["name"]) for e in old)
         )
-        new, _ = self._write_files(key, df, force_fanout=True)
+        new = self._write_files(key, df)
         names = {e["name"] for e in old}
         t["files"] = [e for e in t["files"] if e["name"] not in names] + new
 
-    def replace_buckets(
-        self,
-        key: str,
-        touched: list[int],
-        df: DataFrame,
-        append_df: DataFrame | None = None,
-        append_metrics: list | None = None,
-        append_est: int = 0,
-        validate=None,
-    ) -> dict | None:
-        """Make ``df`` the new complete state of the touched buckets.
-        Files fully inside the touched set are dropped; files disjoint from
-        it stay referenced byte-for-byte; a shared file straddling the
-        boundary has its untouched-bucket rows rewritten into a fresh file
-        (they are small by construction — shared files only arise from
-        small writes). Old files are left for vacuum (time-travel-ish).
-
-        ``append_df`` (r12) rides EXTRA rows — outside the
-        replaced-buckets contract — on the same single write: the new file
-        is the replacement state for ``touched`` AND an ordinary appended
-        file for every other bucket it lands in (the manifest's
-        multi-file-per-bucket read model makes that consistent). This is
-        the terminal-MERGE upsert fusion: created rows (fresh uuids, so
-        their buckets are unknowable pre-write) ship with the ON MATCH
-        rewrite in ONE write instead of append + rewrite.
-        ``append_metrics`` ride the append branch as an Observation and
-        come back in the returned row; ``validate`` (if given) is called
-        with that row BEFORE the manifest mutates — a raise aborts the
-        commit (written files stay orphaned, vacuum-able). The fused path
-        requires the single-file small write: when the size estimate
-        exceeds ``small_write_bytes`` (or is unknown) the method returns
-        ``False`` WITHOUT writing and the caller must fall back to a
-        separate append + replace. Returns the append-branch observation
-        row (or None without ``append_df``)."""
-        t = self.manifest["tables"][key]
-        keep, drop, partial = [], [], []
-        for e in t["files"]:
-            if not self._overlaps(e, touched):
-                keep.append(e)
-            elif e["buckets"] is not None and set(e["buckets"]) <= set(touched):
-                drop.append(e)
-            else:
-                partial.append(e)
-        touched = sorted(touched)
-        caller_obs = None
-        if append_df is not None and not partial:
-            # the replace branch's rows-within-touched contract must be
-            # checked on the BRANCH (the appended rows are exempt), same
-            # observation pattern as the partial-file widening below
-            from pyspark.sql import Observation
-
-            caller_obs = Observation()
-            df = (
-                df.withColumn("__cb", self.bucket_col(F.col("_id")))
-                .observe(
-                    caller_obs,
-                    F.max(~F.col("__cb").isin(touched)).alias("stray"),
-                )
-                .drop("__cb")
-            )
-        if partial:
-            # a shared file straddling the boundary: fold its untouched
-            # rows into THIS write by widening the touched set to cover the
-            # file — one write replaces everything, instead of a separate
-            # remainder file per rewrite (they are small by construction —
-            # shared files only arise from small writes). The caller's
-            # rows-within-touched contract is still enforced against the
-            # ORIGINAL touched set, via an observation pinned to the
-            # caller's union branch (computed during the write, no extra
-            # job).
-            from pyspark.sql import Observation
-
-            caller_obs = Observation()
-            df = (
-                df.withColumn("__cb", self.bucket_col(F.col("_id")))
-                .observe(
-                    caller_obs,
-                    F.max(~F.col("__cb").isin(touched)).alias("stray"),
-                )
-                .drop("__cb")
-            )
-            ddir = os.path.join(self.root, "data", key)
-            rem = (
-                self.spark.read.schema(self.schema_of(key))
-                .parquet(*(os.path.join(ddir, e["name"]) for e in partial))
-                .where(~self.bucket_col(F.col("_id")).isin(touched))
-            )
-            df = df.unionByName(rem)
-            widened: set[int] = set(touched)
-            for e in partial:
-                widened |= (
-                    set(range(self.n_buckets))
-                    if e["buckets"] is None
-                    else set(e["buckets"])
-                )
-            touched = sorted(widened)
-            drop.extend(partial)
-            partial = []
-        # rewrites replace known data: the replaced files' OWN byte stats
-        # estimate the output better than the plan stats of a join-shaped
-        # merge frame (which Catalyst can only bound loosely); 1.5× covers
-        # added columns/rows. Unknown stats (pre-v2 files) → fan-out path.
-        est = None
-        if drop and all(e["bytes"] is not None for e in drop):
-            est = int(sum(e["bytes"] for e in drop) * 1.5)
-        app_obs = None
-        if append_df is not None:
-            if est is None or est + append_est > self.small_write_bytes:
-                # fused upsert needs the single-file small path (branch
-                # observations + one mixed-role file); too big or unknown
-                # — caller falls back to separate append + replace
-                return False
-            est += append_est
-            from pyspark.sql import Observation
-
-            app_obs = Observation()
-            df = df.unionByName(
-                append_df.observe(
-                    app_obs,
-                    F.count(F.lit(1)).alias("__app_n"),
-                    *(append_metrics or []),
-                )
-            )
-        # validate-before-mutate: stray rows raise before anything moves;
-        # the manifest only changes after every write lands. With an
-        # append branch the whole-frame touched check moves to the branch
-        # observation above (appended rows are exempt by design).
-        new, _ = self._write_files(
-            key,
-            df,
-            touched=None if append_df is not None else touched,
-            est_bytes=est,
-        )
-        app_row = app_obs.get if app_obs is not None else None
-        if validate is not None and app_row is not None:
-            validate(app_row)  # a raise aborts: manifest untouched
-        if caller_obs is not None and caller_obs.get.get("stray"):
-            # written files stay orphaned (vacuum-able); manifest untouched
-            raise ValueError(
-                "replace_buckets: rows outside touched buckets "
-                f"(caller rows beyond {touched})"
-            )
-        t["files"] = keep + new
-        return app_row
-
     def vacuum(self) -> int:
-        """Delete data files not referenced by the current manifest."""
+        """Delete data files not referenced by the current manifest, and
+        any write's leftover staging directory (a write that raised
+        mid-way). Returns the number of data files deleted."""
+        staging = os.path.join(self.root, "_staging")
+        if self.fs.isdir(staging):
+            for d in self.fs.listdir(staging):
+                self.fs.rmtree(os.path.join(staging, d))
         removed = 0
         for key, t in self.manifest["tables"].items():
             ddir = os.path.join(self.root, "data", key)
@@ -743,7 +652,7 @@ class DurableGraph(MutableGraph):
         self._in_query = False
         self._query_dirty = False
         self._manifest_snapshot: dict | None = None
-        self._pending_append: dict | None = None
+        self._staged: dict | None = None
         m = self.tables.manifest
         for key, t in m["tables"].items():
             df = self.tables.read_table(key)
@@ -769,7 +678,7 @@ class DurableGraph(MutableGraph):
         self._query_dirty = False
 
     def commit_query(self) -> None:
-        self.flush_pending_append()  # safety net; the compiler flushes
+        assert self._staged is None, "staged append outlived its window"
         self._in_query = False
         self._manifest_snapshot = None
         if self._query_dirty:
@@ -778,7 +687,6 @@ class DurableGraph(MutableGraph):
         super().commit_query()
 
     def abort_query(self) -> None:
-        self._pending_append = None  # failed statement: discard staging
         self._in_query = False
         self._query_dirty = False
         if self._manifest_snapshot is not None:
@@ -812,16 +720,6 @@ class DurableGraph(MutableGraph):
                 return
         self.catalog.register_edge(type_, src, dst, df)
 
-    def _refresh_node(self, label: str) -> None:
-        self.catalog.register_node(
-            label, self.tables.read_table(node_key(label))
-        )
-
-    def _refresh_edge(self, type_: str, src: str, dst: str) -> None:
-        self._put_edge(
-            type_, src, dst, self.tables.read_table(edge_key(type_, src, dst))
-        )
-
     @staticmethod
     def _no_void(cols: dict[str, T.DataType]) -> dict[str, T.DataType]:
         """Parquet cannot store void columns; an all-null property (CREATE
@@ -838,57 +736,102 @@ class DurableGraph(MutableGraph):
             cols.setdefault(f.name, f.dataType)
         return self._no_void(cols)
 
-    def _adopt_node(self, label: str) -> None:
-        """First mutation of a bulk-registered table: import it wholesale
-        (one-time, like Delta's CONVERT TO DELTA)."""
-        key = node_key(label)
-        if self.tables.has_table(key):
-            return
-        df = self.catalog.node(label).df
-        cols = self._no_void({f.name: f.dataType for f in df.schema.fields})
-        self.tables.create_table(
-            key,
-            {"kind": "node", "label": label},
-            T.StructType([T.StructField(n, t) for n, t in cols.items()]),
-        )
-        self.tables.append(key, self._align(df, cols))
+    def _append(self, key: str, rows: DataFrame) -> None:
+        """Widen the table's schema to ``rows`` and append them."""
+        cols = self._merged_cols(key, rows)
+        self.tables.set_schema(key, cols)
+        self.tables.write(key, append=self._align(rows, cols))
 
-    def _adopt_edge(self, i: int) -> str:
-        et = self.catalog._edges[i]
-        key = edge_key(et.type, et.src_label, et.dst_label)
+    def _adopt(self, table: str | int) -> str:
+        """Store key of a node label (str) or edge slot (int). The first
+        mutation of a bulk-registered table imports it wholesale
+        (one-time, like Delta's CONVERT TO DELTA)."""
+        if isinstance(table, int):
+            et = self.catalog._edges[table]
+            key = edge_key(et.type, et.src_label, et.dst_label)
+            meta = {"kind": "edge", "type": et.type, "src": et.src_label,
+                    "dst": et.dst_label}
+            df = et.df
+        else:
+            key = node_key(table)
+            meta = {"kind": "node", "label": table}
+            df = self.catalog.node(table).df if self.catalog.has_label(table) else None
         if not self.tables.has_table(key):
-            cols = self._no_void({f.name: f.dataType for f in et.df.schema.fields})
+            cols = self._no_void(
+                {f.name: f.dataType for f in df.schema.fields}
+                if df is not None else {"_id": T.StringType()}
+            )
             self.tables.create_table(
-                key,
-                {"kind": "edge", "type": et.type, "src": et.src_label,
-                 "dst": et.dst_label},
+                key, meta,
                 T.StructType([T.StructField(n, t) for n, t in cols.items()]),
             )
-            self.tables.append(key, self._align(et.df, cols))
+            if df is not None:
+                self.tables.write(key, append=self._align(df, cols))
         return key
+
+    def _refresh(self, table: str | int) -> None:
+        """Re-register a node label (str) or edge slot (int) from the store."""
+        if isinstance(table, int):
+            et = self.catalog._edges[table]
+            key = edge_key(et.type, et.src_label, et.dst_label)
+            self.catalog._edges[table] = EdgeTable(
+                et.type, et.src_label, et.dst_label, self.tables.read_table(key)
+            )
+        else:
+            self.catalog.register_node(
+                table, self.tables.read_table(node_key(table))
+            )
+
+    def _rewrite(self, table: str | int, touched: list[int], transform) -> None:
+        """Adopt → read the touched buckets → ``transform(key, rows)``
+        (which returns ``write`` arguments, at least ``replace``) → one
+        ``write`` → refresh the catalog. Every bucket-rewriting mutator
+        (SET, REMOVE label, DELETE) goes through here."""
+        key = self._adopt(table)
+        rows = self.tables.read_table(key, touched)
+        self.tables.write(key, touched=touched, **transform(key, rows))
+        self._refresh(table)
+
+    def _tables_holding(self, keys: DataFrame, n_keys: int) -> list[int]:
+        """Edge slots holding at least one of the frozen edge ids: one
+        membership probe per table, so an id set adopts and rewrites only
+        the tables it occupies."""
+        return [
+            i for i, et in enumerate(self.catalog._edges)
+            if not et.df.select("_id").join(
+                self._gated_keys(keys, n_keys), on="_id", how="left_semi"
+            ).isEmpty()
+        ]
+
+    def _update_transform(self, updates, replace_all, key_cols, staged=None):
+        def transform(key: str, rows: DataFrame) -> dict:
+            cols = self._merged_cols(key, updates)
+            if staged is not None:
+                # stored/update types win; the created rows only add
+                # columns the table has never seen (e.g. ON CREATE props)
+                for f in staged["rows"].schema.fields:
+                    cols.setdefault(f.name, f.dataType)
+                cols = self._no_void(cols)
+            self.tables.set_schema(key, cols)
+            out = {"replace": self._apply_updates(
+                self._align(rows, cols), updates, cols, replace_all, key_cols
+            )}
+            if staged is not None:
+                out.update(self._counted_append_args(staged, cols))
+            return out
+
+        return transform
 
     # -- nodes ------------------------------------------------------------
     def ensure_label(self, label: str) -> None:
-        if self.catalog.has_label(label):
-            self._adopt_node(label)
-            return
-        key = node_key(label)
-        if not self.tables.has_table(key):
-            self.tables.create_table(
-                key,
-                {"kind": "node", "label": label},
-                T.StructType([T.StructField("_id", T.StringType())]),
-            )
-        self._refresh_node(label)
+        self._adopt(label)
+        if not self.catalog.has_label(label):
+            self._refresh(label)
 
     def append_nodes(self, label: str, rows: DataFrame) -> None:
-        self.flush_pending_append()
         self.ensure_label(label)
-        key = node_key(label)
-        cols = self._merged_cols(key, rows)
-        self.tables.set_schema(key, cols)
-        self.tables.append(key, self._align(rows, cols))
-        self._refresh_node(label)
+        self._append(node_key(label), rows)
+        self._refresh(label)
         self._bump()
 
     # appends write parquet and re-register from files, so a frame whose
@@ -898,11 +841,27 @@ class DurableGraph(MutableGraph):
     # catalog, where an unfrozen uuid() would re-draw per read: False)
     appends_materialize = True
 
-    # a measured row bound at most this takes the fused single-write path
-    # (with the coarse width estimate below it stays far under
-    # small_write_bytes for any realistic column count); bigger appends
-    # fall back to checkpoint-then-append, which parallelizes
+    # a measured row bound at most this rides a durable write directly
+    # (the write freezes the generated ids); bigger appends take the
+    # parallel checkpoint-then-append path
     SMALL_APPEND_ROWS = 100_000
+
+    def _counted_append_args(self, p: dict, cols: dict) -> dict:
+        """``write`` arguments appending a counted node set: the rows, a
+        coarse size bound (id + bucket + per-column slack per row), the
+        null-key probe, and its validation (a raise leaves the table
+        directory and the manifest untouched)."""
+
+        def validate(row: dict) -> None:
+            if row.get("__has_null"):
+                raise CypherRuntimeError(p["err"], pos=p["err_pos"])
+
+        return {
+            "append": self._align(p["rows"], cols),
+            "est_bytes": 4096 + p["n"] * (48 + 32 * len(cols)),
+            "metrics": null_metrics(p["null_cols"]),
+            "validate": validate,
+        }
 
     def append_nodes_counted(
         self,
@@ -916,14 +875,9 @@ class DurableGraph(MutableGraph):
         """Fused append: the durable write itself freezes the generated
         ids and carries the row count + null-key probe as its own
         Observation — ONE materialization where the base path pays a
-        freezing checkpoint AND a write (r12; the write statement's
-        dominant fixed cost). Row-gated: only a caller-measured small
-        bound may skip the checkpoint, since the un-checkpointed plan's
-        Catalyst stats are opaque (fresh uuids over a join); large appends
-        keep the parallel checkpoint-then-append shape."""
-        from nicefox_graphdb_spark.graph_store import CypherRuntimeError
-
-        self.flush_pending_append()
+        freezing checkpoint AND a write. Row-gated: only a caller-measured
+        small bound may skip the checkpoint, since the un-checkpointed
+        plan's Catalyst stats are opaque (fresh uuids over a join)."""
         if n_rows_bound is None or n_rows_bound > self.SMALL_APPEND_ROWS:
             return super().append_nodes_counted(
                 label, rows, n_rows_bound, null_check_cols, err, err_pos
@@ -931,35 +885,19 @@ class DurableGraph(MutableGraph):
         self.ensure_label(label)
         key = node_key(label)
         cols = self._merged_cols(key, rows)
-        extra = []
-        if null_check_cols:
-            anynull = None
-            for k in null_check_cols:
-                c = F.col(k).isNull()
-                anynull = c if anynull is None else anynull | c
-            extra.append(F.max(anynull).alias("__has_null"))
-        # coarse per-row width bound: id + bucket + per-column slack
-        est = 4096 + n_rows_bound * (48 + 32 * len(cols))
-        res = self.tables.append_counted(
-            key, self._align(rows, cols), est_bytes=est, extra_metrics=extra
-        )
-        if res is None:  # bound exceeded small_write_bytes after all
-            return super().append_nodes_counted(
-                label, rows, n_rows_bound, null_check_cols, err, err_pos
-            )
-        entries, got = res
-        if null_check_cols and got.get("__has_null"):
-            # written file stays orphaned (vacuum-able) — the manifest was
-            # never touched, so the store stays fully consistent
-            raise CypherRuntimeError(err, pos=err_pos)
+        self.tables.set_schema(key, cols)
+        got = self.tables.write(key, **self._counted_append_args(
+            {"rows": rows, "n": n_rows_bound, "null_cols": null_check_cols,
+             "err": err, "err_pos": err_pos},
+            cols,
+        ))
         if got["rows"]:
-            self.tables.set_schema(key, cols)
-            self.tables.publish_append(key, entries)
-            self._refresh_node(label)
+            self._refresh(label)
             self._bump()
         return got["rows"]
 
-    def stage_pending_append(
+    @contextmanager
+    def staged_append(
         self,
         label: str,
         rows: DataFrame,
@@ -967,145 +905,73 @@ class DurableGraph(MutableGraph):
         null_check_cols: tuple[str, ...] = (),
         err: str = "Cannot merge node using null property value",
         err_pos=None,
-    ) -> bool:
-        """Defer a small node append so the NEXT ``update_node_props`` on
-        the same label folds it into its single rewrite write — the
-        terminal-MERGE upsert fusion (r12): created rows + ON MATCH
-        updates land in ONE durable write instead of an append whose rows
-        the following bucket rewrite immediately re-writes. Row-gated like
-        ``append_nodes_counted``; returns False (caller appends normally)
-        when the bound is missing or too big. The caller OWNS the window:
-        it must call ``flush_pending_append`` once the fusing statement
-        finishes (a no-op if the update already consumed it); any other
-        mutator defensively flushes first."""
+    ):
+        """Window in which a small counted node append waits for an
+        ``update_node_props`` on the same label to carry it: the created
+        rows then ride that bucket rewrite as the append branch of ONE
+        write — the terminal-MERGE upsert, whose ON MATCH rewrite would
+        otherwise rewrite the buckets the fresh append just landed in.
+        Unconsumed rows append when the window closes; an exception
+        discards them. Appends too big for one write happen up front."""
         if n_rows_bound is None or n_rows_bound > self.SMALL_APPEND_ROWS:
-            return False
-        self._pending_append = {
-            "label": label,
-            "rows": rows,
-            "n": n_rows_bound,
-            "null_cols": null_check_cols,
-            "err": err,
-            "err_pos": err_pos,
+            with super().staged_append(
+                label, rows, n_rows_bound, null_check_cols, err, err_pos
+            ):
+                yield
+            return
+        self._staged = {
+            "label": label, "rows": rows, "n": n_rows_bound,
+            "null_cols": null_check_cols, "err": err, "err_pos": err_pos,
         }
-        return True
-
-    def flush_pending_append(self) -> int | None:
-        """Write a still-pending staged append through the normal fused
-        append path (no-op when an update already consumed it)."""
-        p = self._pending_append
-        if p is None:
-            return None
-        self._pending_append = None
-        return self.append_nodes_counted(
-            p["label"], p["rows"], p["n"], p["null_cols"], p["err"], p["err_pos"]
-        )
-
-    def _null_metrics(self, null_check_cols) -> list:
-        if not null_check_cols:
-            return []
-        anynull = None
-        for k in null_check_cols:
-            c = F.col(k).isNull()
-            anynull = c if anynull is None else anynull | c
-        return [F.max(anynull).alias("__has_null")]
+        try:
+            yield
+        finally:
+            p, self._staged = self._staged, None
+        if p is not None:
+            self.append_nodes_counted(
+                p["label"], p["rows"], p["n"], p["null_cols"], p["err"],
+                p["err_pos"],
+            )
 
     def update_node_props(
         self, label: str, updates: DataFrame, replace_all: bool = False
     ) -> None:
-        pending = self._pending_append
-        if pending is not None and pending["label"] != label:
-            self.flush_pending_append()  # different table: normal order
-            pending = None
         if not self.catalog.has_label(label):
-            self.flush_pending_append()
             return
         updates, touched, _n = self.tables.checkpoint_with_buckets(updates)
-        if not touched:
-            # nothing matched: nothing to rewrite, pending (if any) is a
-            # plain append
-            self.flush_pending_append()
-            self._bump()
-            return
         if touched:
-            self._adopt_node(label)
-            key = node_key(label)
-            cols = self._merged_cols(key, updates)
-            if pending is not None:
-                # stored/update types win; the created rows only add
-                # columns the table has never seen (e.g. ON CREATE props)
-                for f in pending["rows"].schema.fields:
-                    cols.setdefault(f.name, f.dataType)
-                cols = self._no_void(cols)
-            self.tables.set_schema(key, cols)
-            base_sub = self._align(self.tables.read_table(key, touched), cols)
-            merged = self._apply_node_updates(base_sub, updates, cols, replace_all)
-            if pending is not None:
-                from nicefox_graphdb_spark.graph_store import CypherRuntimeError
-
-                self._pending_append = None
-                err, err_pos = pending["err"], pending["err_pos"]
-                null_cols = pending["null_cols"]
-
-                def _validate(row: dict) -> None:
-                    if null_cols and row.get("__has_null"):
-                        raise CypherRuntimeError(err, pos=err_pos)
-
-                app_est = 4096 + pending["n"] * (48 + 32 * len(cols))
-                got = self.tables.replace_buckets(
-                    key,
-                    touched,
-                    merged,
-                    append_df=self._align(pending["rows"], cols),
-                    append_metrics=self._null_metrics(null_cols),
-                    append_est=app_est,
-                    validate=_validate,
-                )
-                if got is False:
-                    # too big for the single-file fused write: fall back
-                    # to the separate append + replace shape. The rewrite
-                    # frame must be REBUILT over the post-append table —
-                    # the pre-append `merged` snapshot would drop any
-                    # created rows landing in the touched buckets.
-                    self._pending_append = pending
-                    self.flush_pending_append()
-                    base_sub = self._align(
-                        self.tables.read_table(key, touched), cols
-                    )
-                    merged = self._apply_node_updates(
-                        base_sub, updates, cols, replace_all
-                    )
-                    self.tables.replace_buckets(key, touched, merged)
+            staged = self._staged
+            if staged is not None and staged["label"] == label:
+                self._staged = None
             else:
-                self.tables.replace_buckets(key, touched, merged)
-            self._refresh_node(label)
+                staged = None
+            self._rewrite(label, touched, self._update_transform(
+                updates, replace_all, ("_id",), staged
+            ))
         self._bump()
 
     def add_label_to_nodes(
         self, from_label: str, ids: DataFrame, new_label: str
     ) -> None:
-        self.flush_pending_append()
         super().add_label_to_nodes(from_label, ids, new_label)
         self._bump()  # persist multi_label_dirty past the inner commit
 
+    def _drop_ids(self, idcol: DataFrame, n_ids: int):
+        keys = self._gated_keys(idcol, n_ids)
+        return lambda key, rows: {
+            "replace": rows.join(keys, on="_id", how="left_anti")
+        }
+
     def remove_label_from_nodes(self, label: str, ids: DataFrame) -> None:
-        self.flush_pending_append()
         if not self.catalog.has_label(label):
             return
         idcol = ids.select(F.col(ids.columns[0]).alias("_id"))
         idcol, touched, n_ids = self.tables.checkpoint_with_buckets(idcol)
         if touched:
-            self._adopt_node(label)
-            key = node_key(label)
-            keep = self.tables.read_table(key, touched).join(
-                self._gated_keys(idcol, n_ids), on="_id", how="left_anti"
-            )
-            self.tables.replace_buckets(key, touched, keep)
-            self._refresh_node(label)
+            self._rewrite(label, touched, self._drop_ids(idcol, n_ids))
         self._bump()
 
     def delete_nodes(self, ids: DataFrame, detach: bool = False) -> None:
-        self.flush_pending_append()
         # checkpoint FIRST: the dangling probe, per-label membership
         # probes, anti-joins, and detach scans all reuse the materialized
         # id set instead of re-running its source plan per action
@@ -1118,12 +984,13 @@ class DurableGraph(MutableGraph):
             # for why this beats the observe-on-checkpoint fold here),
             # row-gated on the count riding the checkpoint job (r11)
             self._validate_no_dangling(idcol, n_ids)
+        if not touched:
+            self._bump()
+            return
         # same hash ring for every table → the deleted ids' buckets are the
         # only buckets that can contain them, in every label table
         labels = list(self.catalog._nodes)
         for label in labels:
-            if not touched:
-                break
             if (
                 # with a single label the ids can only live there — skip
                 # the membership probe job
@@ -1133,99 +1000,51 @@ class DurableGraph(MutableGraph):
                 .isEmpty()
             ):
                 continue  # label holds none of the ids: no adopt, no rewrite
-            self._adopt_node(label)
-            key = node_key(label)
-            keep = self.tables.read_table(key, touched).join(
-                self._gated_keys(idcol, n_ids), on="_id", how="left_anti"
-            )
-            self.tables.replace_buckets(key, touched, keep)
-            self._refresh_node(label)
+            self._rewrite(label, touched, self._drop_ids(idcol, n_ids))
         if detach:
-            for i in range(len(self.catalog._edges)):
-                et = self.catalog._edges[i]
-                # edges bucket by edge _id, endpoints are the predicate:
-                # one scan finds which buckets hold incident edges
-                src_keys = self._gated_keys(
-                    idcol.withColumnRenamed("_id", "_src"), n_ids
-                )
-                dst_keys = self._gated_keys(
-                    idcol.withColumnRenamed("_id", "_dst"), n_ids
-                )
+            # edges bucket by edge _id, endpoints are the predicate: one
+            # scan per table finds which buckets hold incident edges
+            src_keys = self._gated_keys(idcol.withColumnRenamed("_id", "_src"), n_ids)
+            dst_keys = self._gated_keys(idcol.withColumnRenamed("_id", "_dst"), n_ids)
+
+            def detached(key: str, rows: DataFrame) -> dict:
+                return {"replace": rows.join(src_keys, on="_src", how="left_anti")
+                        .join(dst_keys, on="_dst", how="left_anti")}
+
+            for i, et in enumerate(list(self.catalog._edges)):
                 incident = et.df.join(
                     src_keys, on="_src", how="left_semi"
-                ).unionByName(
-                    et.df.join(dst_keys, on="_dst", how="left_semi")
-                )
+                ).unionByName(et.df.join(dst_keys, on="_dst", how="left_semi"))
                 e_touched = self.tables.touched_buckets(incident)
-                if not e_touched:
-                    continue
-                key = self._adopt_edge(i)
-                kept = (
-                    self.tables.read_table(key, e_touched)
-                    .join(src_keys, on="_src", how="left_anti")
-                    .join(dst_keys, on="_dst", how="left_anti")
-                )
-                self.tables.replace_buckets(key, e_touched, kept)
-                self._refresh_edge(et.type, et.src_label, et.dst_label)
+                if e_touched:
+                    self._rewrite(i, e_touched, detached)
         self._bump()
 
     # -- edges ------------------------------------------------------------
     def append_edges(
         self, type_: str, src_label: str, dst_label: str, rows: DataFrame
     ) -> None:
-        self.flush_pending_append()
         slot = self._edge_slot(type_, src_label, dst_label)
-        key = self._adopt_edge(slot)
-        cols = self._merged_cols(key, rows)
-        self.tables.set_schema(key, cols)
-        self.tables.append(key, self._align(rows, cols))
-        self._refresh_edge(*(
-            (self.catalog._edges[slot].type,
-             self.catalog._edges[slot].src_label,
-             self.catalog._edges[slot].dst_label)
-        ))
+        self._append(self._adopt(slot), rows)
+        self._refresh(slot)
         self._bump()
 
     def update_edge_props(
         self, eids: DataFrame, updates: DataFrame, replace_all: bool = False
     ) -> None:
-        self.flush_pending_append()
         updates, touched, n_upd = self.tables.checkpoint_with_buckets(updates)
         if touched:
-            for i in range(len(self.catalog._edges)):
-                et = self.catalog._edges[i]
-                if et.df.select("_id").join(
-                    self._gated_keys(updates.select("_id"), n_upd),
-                    on="_id", how="left_semi",
-                ).isEmpty():
-                    continue  # no matching edge here: no adopt, no rewrite
-                key = self._adopt_edge(i)
-                cols = self._merged_cols(key, updates)
-                self.tables.set_schema(key, cols)
-                base_sub = self._align(self.tables.read_table(key, touched), cols)
-                merged = self._apply_edge_updates(
-                    base_sub, updates, cols, replace_all
-                )
-                self.tables.replace_buckets(key, touched, merged)
-                self._refresh_edge(et.type, et.src_label, et.dst_label)
+            for i in self._tables_holding(updates.select("_id"), n_upd):
+                self._rewrite(i, touched, self._update_transform(
+                    updates, replace_all, ("_id", "_src", "_dst")
+                ))
         self._bump()
 
     def delete_edges(self, eids: DataFrame) -> None:
-        self.flush_pending_append()
         idcol, touched, n_ids = self.tables.checkpoint_with_buckets(
             eids.select(F.col(eids.columns[0]).alias("_id"))
         )
         if touched:
-            for i in range(len(self.catalog._edges)):
-                et = self.catalog._edges[i]
-                if et.df.select("_id").join(
-                    self._gated_keys(idcol, n_ids), on="_id", how="left_semi"
-                ).isEmpty():
-                    continue
-                key = self._adopt_edge(i)
-                kept = self.tables.read_table(key, touched).join(
-                    self._gated_keys(idcol, n_ids), on="_id", how="left_anti"
-                )
-                self.tables.replace_buckets(key, touched, kept)
-                self._refresh_edge(et.type, et.src_label, et.dst_label)
+            for i in self._tables_holding(idcol, n_ids):
+                self._rewrite(i, touched, self._drop_ids(idcol, n_ids))
         self._bump()

@@ -16,6 +16,8 @@ INSERT fast path for this, src/executor.ts:4427-4923).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,6 +42,20 @@ class CypherRuntimeError(Exception):
             self.line = self.col = None
         self.message = message
         super().__init__(message)
+
+
+def null_metrics(cols) -> list:
+    """The MERGE null-key probe as an aggregate riding a write or
+    checkpoint: ``__has_null`` is true when any of ``cols`` is null in
+    any row (no aggregate when there are no key columns)."""
+    if not cols:
+        return []
+    anynull = None
+    for k in cols:
+        c = F.col(k).isNull()
+        anynull = c if anynull is None else anynull | c
+    return [F.max(anynull).alias("__has_null")]
+
 
 _CHECKPOINT_EVERY = 8
 
@@ -189,21 +205,34 @@ class MutableGraph:
         (used by the durable override to size the write)."""
         from pyspark.sql import Observation
 
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        if null_check_cols:
-            anynull = None
-            for k in null_check_cols:
-                c = F.col(k).isNull()
-                anynull = c if anynull is None else anynull | c
-            aggs.append(F.max(anynull).alias("__has_null"))
         obs = Observation()
-        ck = rows.observe(obs, *aggs).localCheckpoint(eager=True)
+        ck = rows.observe(
+            obs, F.count(F.lit(1)).alias("__n"), *null_metrics(null_check_cols)
+        ).localCheckpoint(eager=True)
         got = obs.get
-        if null_check_cols and got.get("__has_null"):
+        if got.get("__has_null"):
             raise CypherRuntimeError(err, pos=err_pos)
         if got["__n"]:
             self.append_nodes(label, ck)
         return got["__n"]
+
+    @contextmanager
+    def staged_append(
+        self,
+        label: str,
+        rows: DataFrame,
+        n_rows_bound: int | None = None,
+        null_check_cols: tuple[str, ...] = (),
+        err: str = "Cannot merge node using null property value",
+        err_pos=None,
+    ):
+        """Window over the statement tail that may fold a counted append
+        into a later rewrite of the same label (see DurableGraph). The
+        in-memory store has no write to fold into: it appends on entry."""
+        self.append_nodes_counted(
+            label, rows, n_rows_bound, null_check_cols, err, err_pos
+        )
+        yield
 
     def update_node_props(
         self, label: str, updates: DataFrame, replace_all: bool = False
@@ -216,22 +245,23 @@ class MutableGraph:
             return
         base = self.catalog.node(label).df
         cols = self._merged_schema(base, updates)
-        merged = self._apply_node_updates(
+        merged = self._apply_updates(
             self._align(base, cols), updates, cols, replace_all
         )
         self.catalog.register_node(label, merged)
         self._bump()
 
     @staticmethod
-    def _apply_node_updates(
+    def _apply_updates(
         basea: DataFrame,
         updates: DataFrame,
         cols: dict[str, T.DataType],
         replace_all: bool,
+        key_cols: tuple[str, ...] = ("_id",),
     ) -> DataFrame:
         """Keyed MERGE: overwrite matched rows' mentioned props (all props
-        null-filled when replace_all). basea must already carry the merged
-        column set."""
+        but ``key_cols`` null-filled when replace_all). basea must already
+        carry the merged column set."""
         # key/flag aliases must not collide with `__uv_<prop>` for ANY
         # property name — a property literally named "id" used to alias to
         # the same column as the join key (AMBIGUOUS_REFERENCE on
@@ -243,11 +273,11 @@ class MutableGraph:
             *[F.col(c).alias(f"__uv_{c}") for c in upd_props],
         )
         joined = basea.join(upd, basea["_id"] == upd["__upd_key__"], "left")
-        sel = [F.col("_id")]
+        sel = []
         for name in cols:
-            if name == "_id":
-                continue
-            if name in upd_props:
+            if name in key_cols:
+                col = F.col(name)
+            elif name in upd_props:
                 col = F.when(F.col("__upd_hit__"), F.col(f"__uv_{name}")).otherwise(
                     F.col(name)
                 )
@@ -422,44 +452,14 @@ class MutableGraph:
         """updates: `_id` + new-value columns, applied across all edge tables."""
         for i, et in enumerate(self.catalog._edges):
             cols = self._merged_schema(et.df, updates)
-            merged = self._apply_edge_updates(
-                self._align(et.df, cols), updates, cols, replace_all
+            merged = self._apply_updates(
+                self._align(et.df, cols), updates, cols, replace_all,
+                ("_id", "_src", "_dst"),
             )
             self.catalog._edges[i] = EdgeTable(
                 et.type, et.src_label, et.dst_label, merged
             )
         self._bump()
-
-    @staticmethod
-    def _apply_edge_updates(
-        basea: DataFrame,
-        updates: DataFrame,
-        cols: dict[str, T.DataType],
-        replace_all: bool = False,
-    ) -> DataFrame:
-        upd_props = [c for c in updates.columns if c != "_id"]
-        upd = updates.select(
-            F.col("_id").alias("__upd_key__"),
-            F.lit(True).alias("__upd_hit__"),
-            *[F.col(c).alias(f"__uv_{c}") for c in upd_props],
-        )
-        joined = basea.join(upd, basea["_id"] == upd["__upd_key__"], "left")
-        sel = []
-        for name in cols:
-            if name in upd_props:
-                col = F.when(
-                    F.col("__upd_hit__"), F.col(f"__uv_{name}")
-                ).otherwise(F.col(name))
-                sel.append(col.cast(cols[name]).alias(name))
-            elif replace_all and name not in ("_id", "_src", "_dst"):
-                # SET r = {...}: unmentioned props null out on matched rows
-                col = F.when(F.col("__upd_hit__"), F.lit(None)).otherwise(
-                    F.col(name)
-                )
-                sel.append(col.cast(cols[name]).alias(name))
-            else:
-                sel.append(F.col(name).alias(name))
-        return joined.select(*sel)
 
     def delete_edges(self, eids: DataFrame) -> None:
         idcol = eids.select(F.col(eids.columns[0]).alias("_id"))

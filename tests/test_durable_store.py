@@ -14,6 +14,7 @@ import pytest
 from nicefox_graphdb_spark import CypherEngine, GraphCatalog
 from pyspark.sql import functions as F
 
+from nicefox_graphdb_spark.commit_plane import LocalCommitPlane
 from nicefox_graphdb_spark.durable_store import DurableTableStore, node_key
 
 
@@ -123,12 +124,12 @@ def test_small_write_lands_as_one_stats_tagged_file(spark, tmp_path):
     store = DurableTableStore(spark, str(tmp_path / "sw"), n_buckets=8)
     schema = T.StructType([T.StructField("_id", T.StringType())])
     store.create_table("nodes/S", {"kind": "node", "label": "S"}, schema)
-    store.append(
+    store.write(
         "nodes/S",
         # a JVM-derived checkpointed frame carries exact size stats —
         # Python-parallelized local relations report unknown size and
         # deliberately take the fan-out path
-        spark.range(50)
+        append=spark.range(50)
         .select(F.concat(F.lit("id"), F.col("id")).alias("_id"))
         .localCheckpoint(eager=True),
     )
@@ -153,8 +154,8 @@ def test_bucket_compaction_bounds_file_count(spark, tmp_path):
     schema = T.StructType([T.StructField("_id", T.StringType())])
     store.create_table("nodes/X", {"kind": "node", "label": "X"}, schema)
     for i in range(10):
-        store.append(
-            "nodes/X", spark.createDataFrame([(f"id{i}",)], schema)
+        store.write(
+            "nodes/X", append=spark.createDataFrame([(f"id{i}",)], schema)
         )
         store.commit()
     files = store.manifest["tables"]["nodes/X"]["files"]
@@ -174,9 +175,9 @@ def test_shared_file_compaction_restores_exclusive_layout(spark, tmp_path):
     schema = T.StructType([T.StructField("_id", T.StringType())])
     store.create_table("nodes/M", {"kind": "node", "label": "M"}, schema)
     for i in range(4):
-        store.append(
+        store.write(
             "nodes/M",
-            spark.range(10)
+            append=spark.range(10)
             .select(
                 F.concat(F.lit(f"m{i}-"), F.col("id")).alias("_id")
             )
@@ -271,17 +272,17 @@ def test_replace_buckets_validates_before_mutating(spark, tmp_path):
     schema = T.StructType([T.StructField("_id", T.StringType())])
     store.create_table("nodes/Y", {"kind": "node", "label": "Y"}, schema)
     ids = [f"id{i}" for i in range(20)]
-    store.append("nodes/Y", spark.createDataFrame([(i,) for i in ids], schema))
+    store.write("nodes/Y", append=spark.createDataFrame([(i,) for i in ids], schema))
     store.commit()
     before = copy.deepcopy(store.manifest["tables"]["nodes/Y"]["files"])
-    # pick one real bucket, then feed replace_buckets the FULL table so
+    # pick one real bucket, then feed write(replace=) the FULL table so
     # some rows hash outside the touched set
     touched = [before[0]["buckets"][0]]
     full = store.read_table("nodes/Y")
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="outside touched"):
-        store.replace_buckets("nodes/Y", touched, full)
+        store.write("nodes/Y", replace=full, touched=touched)
     assert store.manifest["tables"]["nodes/Y"]["files"] == before
     store.commit()  # committing after the failed call stays consistent
     reopened = DurableTableStore(spark, str(tmp_path / "rb"), n_buckets=4)
@@ -308,9 +309,9 @@ def test_hadoop_commit_plane_roundtrip(spark, tmp_path):
         ]
     )
     store.create_table("nodes/H", {"kind": "node", "label": "H"}, schema)
-    store.append(
+    store.write(
         "nodes/H",
-        spark.createDataFrame([(f"h{i}", i) for i in range(10)], schema),
+        append=spark.createDataFrame([(f"h{i}", i) for i in range(10)], schema),
     )
     store.commit()
     # rewrite a touched subset, commit again
@@ -320,7 +321,7 @@ def test_hadoop_commit_plane_roundtrip(spark, tmp_path):
     updated = store.read_table("nodes/H", touched).withColumn(
         "v", F.col("v") + 100
     )
-    store.replace_buckets("nodes/H", touched, updated)
+    store.write("nodes/H", replace=updated, touched=touched)
     store.commit()
     # reopen through a fresh plane: recovery must see both commits
     reopened = DurableTableStore(
@@ -409,9 +410,9 @@ def test_pre_v2_manifest_loads(spark, tmp_path):
     store = DurableTableStore(spark, root, n_buckets=2)
     schema = T.StructType([T.StructField("_id", T.StringType())])
     store.create_table("nodes/O", {"kind": "node", "label": "O"}, schema)
-    store.append(
+    store.write(
         "nodes/O",
-        spark.createDataFrame([(f"o{i}",) for i in range(6)], schema),
+        append=spark.createDataFrame([(f"o{i}",) for i in range(6)], schema),
     )
     store._compact_shared("nodes/O")  # exclusive files → expressible in v1
     store.commit()
@@ -443,8 +444,8 @@ def test_load_falls_back_to_newest_version_when_current_missing(
     store = DurableTableStore(spark, root, n_buckets=2)
     schema = T.StructType([T.StructField("_id", T.StringType())])
     store.create_table("nodes/C", {"kind": "node", "label": "C"}, schema)
-    store.append(
-        "nodes/C", spark.createDataFrame([("c1",), ("c2",)], schema)
+    store.write(
+        "nodes/C", append=spark.createDataFrame([("c1",), ("c2",)], schema)
     )
     store.commit()
     _os.remove(_os.path.join(root, "_manifest", "CURRENT"))
@@ -492,3 +493,157 @@ def test_retention_bounds_files_and_time_travel_reads(spark, tmp_path):
     # current state survives a restart after vacuum
     eng2 = _engine(spark, path)
     assert eng2.query("MATCH (n:N) RETURN n.v AS v") == [{"v": 12}]
+
+
+class _Crash(Exception):
+    pass
+
+
+class _FaultyPlane(LocalCommitPlane):
+    """Local commit plane that raises at one step of write + commit."""
+
+    def __init__(self):
+        self.step = None
+
+    def listdir(self, path):
+        if self.step == "staged" and "_staging" in path:
+            raise _Crash("after the staging write")
+        return super().listdir(path)
+
+    def move(self, src, dst):
+        super().move(src, dst)
+        if self.step == "moved":
+            raise _Crash("after the first file move")
+
+    def write_text_atomic(self, path, text):
+        if self.step == "manifest" and path.endswith(".json"):
+            raise _Crash("on the manifest write")
+        if self.step == "swing" and path.endswith("CURRENT"):
+            raise _Crash("between the manifest write and the CURRENT swing")
+        super().write_text_atomic(path, text)
+
+
+@pytest.mark.parametrize("step", ["staged", "moved", "manifest", "swing"])
+def test_crash_at_each_write_and_commit_step(spark, tmp_path, step):
+    """A crash at any step of a fused replace + append write or of its
+    commit leaves the previous version live: the in-memory manifest is
+    unchanged when the write raised, a reopen reads the prior rows, and
+    vacuum() clears every orphan (data files and staging leftovers)."""
+    import copy
+
+    from pyspark.sql import types as T
+
+    root = str(tmp_path / "crash")
+    fs = _FaultyPlane()
+    store = DurableTableStore(spark, root, n_buckets=4, fs=fs)
+    schema = T.StructType(
+        [T.StructField("_id", T.StringType()), T.StructField("v", T.LongType())]
+    )
+    store.create_table("nodes/F", {"kind": "node", "label": "F"}, schema)
+    prior = [(f"f{i}", 0) for i in range(10)]
+    store.write("nodes/F", append=spark.createDataFrame(prior, schema))
+    store.commit()
+    before = copy.deepcopy(store.manifest)
+    touched = store.touched_buckets(spark.createDataFrame([("f1",)], "_id string"))
+    fs.step = step
+    with pytest.raises(_Crash):
+        store.write(
+            "nodes/F",
+            replace=store.read_table("nodes/F", touched).withColumn(
+                "v", F.lit(1).cast("long")
+            ),
+            touched=touched,
+            append=spark.createDataFrame([("new", 2)], schema),
+            est_bytes=4096,
+        )
+        assert step in ("manifest", "swing")  # the write itself got through
+        store.commit()
+    if step in ("staged", "moved"):
+        assert store.manifest == before
+    reopened = DurableTableStore(spark, root)
+    assert reopened.manifest["version"] == before["version"]
+    assert sorted(
+        (r._id, r.v) for r in reopened.read_table("nodes/F").collect()
+    ) == sorted(prior)
+    reopened.vacuum()
+    ddir = os.path.join(root, "data", "nodes/F")
+    live = {e["name"] for e in reopened.manifest["tables"]["nodes/F"]["files"]}
+    assert {f for f in os.listdir(ddir) if f.endswith(".parquet")} == live
+    assert os.listdir(os.path.join(root, "_staging")) == []
+
+
+def test_fanout_write_rejects_stray_rows(spark, tmp_path):
+    """The rows-outside-touched check holds on the fan-out path too."""
+    import copy
+
+    from pyspark.sql import types as T
+
+    store = DurableTableStore(spark, str(tmp_path / "fo"), n_buckets=4)
+    store.small_write_bytes = 0  # every write fans out
+    schema = T.StructType([T.StructField("_id", T.StringType())])
+    store.create_table("nodes/Y", {"kind": "node", "label": "Y"}, schema)
+    ids = [f"id{i}" for i in range(20)]
+    store.write("nodes/Y", append=spark.createDataFrame([(i,) for i in ids], schema))
+    store.commit()
+    before = copy.deepcopy(store.manifest["tables"]["nodes/Y"]["files"])
+    assert all(len(e["buckets"]) == 1 for e in before)  # fan-out layout
+    touched = [before[0]["buckets"][0]]
+    with pytest.raises(ValueError, match="outside touched"):
+        store.write("nodes/Y", replace=store.read_table("nodes/Y"), touched=touched)
+    assert store.manifest["tables"]["nodes/Y"]["files"] == before
+    assert sorted(r._id for r in store.read_table("nodes/Y").collect()) == sorted(ids)
+
+
+def test_fused_upsert_on_fanout_path(spark, tmp_path):
+    """A terminal MERGE's created rows ride its ON MATCH rewrite as one
+    write on the fan-out path: created and updated rows land in one
+    manifest version, and a null key aborts with the manifest untouched."""
+    from nicefox_graphdb_spark.graph_store import CypherRuntimeError
+
+    eng = _engine(spark, tmp_path / "g")
+    eng.query("UNWIND range(1, 5) AS i CREATE (:X {id: i, v: 0})")
+    store = eng.store.tables
+    store.small_write_bytes = 0
+    v0 = store.manifest["version"]
+    eng.query("UNWIND [2, 6] AS k MERGE (a:X {id: k}) ON MATCH SET a.v = 1")
+    assert store.manifest["version"] == v0 + 1
+    files = store.manifest["tables"][node_key("X")]["files"]
+    assert all(len(e["buckets"]) == 1 for e in files)
+    assert eng.query("MATCH (a:X) RETURN a.id AS id, a.v AS v ORDER BY id") == [
+        {"id": 1, "v": 0}, {"id": 2, "v": 1}, {"id": 3, "v": 0},
+        {"id": 4, "v": 0}, {"id": 5, "v": 0}, {"id": 6, "v": None},
+    ]
+    before = json.loads(json.dumps(store.manifest))
+    with pytest.raises(CypherRuntimeError, match="null property value"):
+        eng.query(
+            "UNWIND [3, null] AS k MERGE (a:X {id: k}) ON MATCH SET a.v = 2"
+        )
+    assert store.manifest == before
+    assert eng.query("MATCH (a:X) RETURN count(*) AS c, sum(a.v) AS s") == [
+        {"c": 6, "s": 1}
+    ]
+
+
+@pytest.mark.parametrize("durable", [True, False])
+def test_terminal_merge_on_match_targets_other_tables(spark, tmp_path, durable):
+    """ON MATCH that sets another label and a relationship, never the
+    merged label: the staged created rows are not consumed by those
+    rewrites and still land when the window closes, in one version."""
+    eng = (
+        _engine(spark, tmp_path / "g") if durable
+        else CypherEngine(spark, GraphCatalog(spark), mutable=True)
+    )
+    eng.query("CREATE (:Y {n: 1})-[:R]->(:Z), (:X {id: 1})")
+    v0 = eng.store.tables.manifest["version"] if durable else None
+    eng.query(
+        "MATCH (b:Y)-[r:R]->(:Z) UNWIND [1, 2] AS k "
+        "MERGE (a:X {id: k}) ON MATCH SET b.y = 1, r.w = 2"
+    )
+    if durable:
+        assert eng.store.tables.manifest["version"] == v0 + 1
+    assert eng.query("MATCH (a:X) RETURN a.id AS id ORDER BY id") == [
+        {"id": 1}, {"id": 2}
+    ]
+    assert eng.query("MATCH (b:Y)-[r:R]->() RETURN b.y AS y, r.w AS w") == [
+        {"y": 1, "w": 2}
+    ]

@@ -492,7 +492,9 @@ def test_merge_job_budget_both_bound(spark, dengine):
         lambda: dengine.query(q, {"a": 5, "b": 6, "amt": 7}),
         "merge-both-bound-create",
     )
-    assert n_create <= 20, n_create
+    # ON CREATE SET r.amt folds into the created relationship rows: no
+    # separate rewrite (measured 8 jobs + 2)
+    assert n_create <= 10, n_create
     n_match = _jobs_during(
         spark,
         lambda: dengine.query(q, {"a": 5, "b": 6, "amt": 8}),
@@ -560,6 +562,30 @@ def test_merge_job_budget_correlated(
     ]
     assert all(n <= b for n, b in zip(counts, budgets)), counts
     assert dengine.query(check) == [expected]
+
+
+def test_merge_rel_on_create_folds_only_self_contained_items(wengine):
+    """ON CREATE items reading only the created element fold into its
+    appended rows; an item reading another variable runs as a rewrite,
+    and an element another item reads is not folded, so every item sees
+    the values the items before it set."""
+    wengine.query("CREATE (:P {id: 1}), (:P {id: 2}), (:P {id: 3})")
+    wengine.query(
+        "MATCH (a:P {id: 1}), (b:P {id: 2}) "
+        "MERGE (a)-[r:L]->(c:Q {k: 5}) "
+        "ON CREATE SET r.w = $w, c.z = c.k * 2, a.seen = b.id",
+        {"w": 4},
+    )
+    assert wengine.query(
+        "MATCH (a:P {id: 1})-[r:L]->(c:Q) RETURN r.w AS w, c.z AS z, a.seen AS s"
+    ) == [{"w": 4, "z": 10, "s": 2}]
+    wengine.query(
+        "MATCH (a:P {id: 1}), (b:P {id: 3}) MERGE (a)-[r:L]->(b) "
+        "ON CREATE SET r.w = 7, b.got = r.w"
+    )
+    assert wengine.query(
+        "MATCH (:P {id: 1})-[r:L]->(b:P) RETURN r.w AS w, b.got AS g"
+    ) == [{"w": 7, "g": 7}]
 
 
 def test_merge_keyless_zero_input_creates_nothing(wengine):
