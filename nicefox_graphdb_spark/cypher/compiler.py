@@ -1101,18 +1101,11 @@ class CypherToSpark:
                 F.col("__to"),
                 F.col(vcol("__vle", "eid")).alias("__eid"),
             )
-            max_h = rel.max_hops if rel.max_hops is not None else self.max_hops
-            if max_h > 1:
-                # materialize the edge set once — every BFS hop re-reads it,
-                # and recomputing a derived edge view (joins/windows) per hop
-                # is the recursive-CTE equivalent of forgetting to memoize
-                # the base case
-                edges = edges.localCheckpoint(eager=True)
             seed = df.select(F.col(vcol(left_var, "id"))).distinct()
             expansion = vl.var_length_expand(
                 edges,
                 max(min_h, 1),
-                max_h,
+                rel.max_hops if rel.max_hops is not None else self.max_hops,
                 seed_ids=seed,
                 max_rows=getattr(self, "_vl_max_rows", None),
             )

@@ -3,8 +3,9 @@
 The BASELINE north star calls for GraphX-class analytics; GraphX has no
 Python binding, so these are the same message-passing shapes expressed as
 DataFrame joins (what GraphFrames does under the hood): per superstep,
-messages = edges ⋈ vertex-state, new state = aggregate(messages), with
-`localCheckpoint` lineage cuts per iteration. Every superstep is one
+messages = edges ⋈ vertex-state, new state = aggregate(messages), and
+every loop runs on the one superstep driver (``operators.superstep``):
+one observed lineage cut per step. Every superstep is one
 distributed join+aggregate — exactly the shape that scales to a
 1000-executor cluster.
 
@@ -14,67 +15,11 @@ sets are derived or passed explicitly.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nicefox_graphdb_spark.operators.common import shuffle_partitions
-
-CHECKPOINT_EVERY = 4
-
-
-def _reliable_every_k() -> int:
-    """Reliable-checkpoint cadence for the iterative algorithms (0 = off).
-
-    The per-iteration lineage cuts use ``localCheckpoint`` —
-    executor-storage-backed and non-replayable, so on a real cluster an
-    executor loss mid-run aborts the job (the same trade GraphX makes).
-    Set ``NICEFOX_RELIABLE_CHECKPOINT_EVERY_K=k`` (with
-    ``sparkContext.setCheckpointDir`` pointing at durable storage) to
-    route every k-th iteration's cut through the reliable checkpoint
-    path instead: replayable across executor loss, at the cost of a
-    distributed write. Off by default locally — the bench's single host
-    has no executor to lose."""
-    try:
-        return int(
-            os.environ.get("NICEFOX_RELIABLE_CHECKPOINT_EVERY_K", "0") or 0
-        )
-    except ValueError:
-        return 0
-
-
-def _cut(df: DataFrame, i: int = 0) -> DataFrame:
-    """One per-iteration lineage cut (guide §5): localCheckpoint, or the
-    reliable checkpoint on every k-th iteration when the durability knob
-    is set (``_reliable_every_k``)."""
-    k = _reliable_every_k()
-    if k and (i + 1) % k == 0:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _cut_copartitioned(df: DataFrame, i: int = 0) -> DataFrame:
-    """Lineage cut that RECORDS the frame's hash partitioning on the
-    checkpointed RDD. Under AQE the executed plan's root is
-    AdaptiveSparkPlanExec, which reports UnknownPartitioning —
-    ``Dataset.checkpoint`` then stamps the new LogicalRDD Unknown and
-    every downstream same-key join re-shuffles the frame from scratch.
-    Disabling AQE for just this action keeps the physical plan's
-    HashPartitioning visible, so per-superstep ``edges ⋈ state`` joins
-    reuse BOTH sides' recorded partitioning (zero join Exchange — the
-    co-partitioned GraphX shape; AQE coalesce/skew handling is traded
-    away for the superstep job, whose shuffle count this removes). The
-    conf flip is session-scoped; the only callers are the
-    single-threaded driver iteration loops below."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _cut(df, i)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
+from nicefox_graphdb_spark.operators.superstep import cut, supersteps
 
 # per-partition edge-row budget for the local union-find contraction in
 # connected_components: bounds each Arrow batch's numpy arrays (and the
@@ -82,14 +27,17 @@ def _cut_copartitioned(df: DataFrame, i: int = 0) -> DataFrame:
 _CC_ROWS_PER_PART = 4_000_000
 
 
-def _vertices(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    if vertices is not None:
-        return vertices.select(F.col(vertices.columns[0]).alias("id")).distinct()
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+def _both_ways(edges: DataFrame) -> DataFrame:
+    """``edges``' (src, dst) pairs in both directions."""
+    return edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+
+
+def _vertices(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    if vertices is None:
+        return _both_ways(edges).select(F.col("src").alias("id")).distinct()
+    return vertices.select(F.col(vertices.columns[0]).alias("id")).distinct()
 
 
 def degrees(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
@@ -104,15 +52,8 @@ def degrees(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
     return (
         verts.join(out_deg, on="id", how="left")
         .join(in_deg, on="id", how="left")
-        .select(
-            "id",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
-            (
-                F.coalesce("out_degree", F.lit(0))
-                + F.coalesce("in_degree", F.lit(0))
-            ).alias("degree"),
-        )
+        .fillna(0, ["out_degree", "in_degree"])
+        .withColumn("degree", F.col("out_degree") + F.col("in_degree"))
     )
 
 
@@ -138,39 +79,26 @@ def connected_components(
     50+ rounds on a randomly-labeled 99-chain), which is why the star
     phases remain the distributed fallback.
 
-    Edges with a NULL endpoint are DROPPED (documented, ADVICE r11): NULL
-    is not a vertex id, and the least/greatest canonicalization below
-    would otherwise silently collapse such an edge to a self-loop on the
-    non-NULL endpoint. Pass ``vertices`` explicitly to include isolated
-    vertices in the output.
+    An edge with a NULL endpoint connects nothing: NULL is not a vertex
+    id. Its non-NULL endpoint still counts as a vertex (``least`` and
+    ``greatest`` skip NULL, so the edge canonicalizes to a self-loop on
+    it), and comes back as its own component unless another edge joins
+    it to one. Pass ``vertices`` explicitly to include isolated vertices
+    in the output.
     """
-    # Materialize the canonicalized edges ONCE (self-loops kept so the
-    # vertex set stays exact) with the non-loop row count riding the same
-    # job as an Observation: the input lineage — often a window/join
-    # pipeline, not a bare scan — previously re-executed three times (the
-    # pre-loop count, the first contraction, and the final _vertices join).
-    # r11, guide §5 (localCheckpoint to cut lineage) — measured 3.0 s →
-    # ~2.2 s on the 100k-event gate.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    canon0 = (
-        edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .select(
+    # Canonicalize the edges ONCE (self-loops kept so the vertex set stays
+    # exact) with the non-loop row count riding the cut: the input lineage,
+    # often a window/join pipeline rather than a bare scan, would otherwise
+    # re-run for the count, the first contraction and the vertex join.
+    nonloop = F.count_if(F.col("u") != F.col("v"))
+    canon, seen = cut(
+        edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .observe(
-            obs,
-            F.coalesce(
-                F.sum(F.when(F.col("u") != F.col("v"), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("__edges"),
-        )
-        .localCheckpoint(eager=True)
+        ).where(F.col("u").isNotNull()),
+        rows=nonloop,
     )
-    n_edges = int(obs.get["__edges"])
     verts = (
-        _vertices(canon0.select(F.col("u").alias("src"), F.col("v").alias("dst")), None)
+        _vertices(canon.select(F.col("u").alias("src"), F.col("v").alias("dst")), None)
         if vertices is None
         else _vertices(edges, vertices)
     )
@@ -178,7 +106,7 @@ def connected_components(
     # idempotent under duplicate edges, so the pre-pass needs no shuffle at
     # all — dedup happens on the (much smaller) star-forest mapping that
     # each contraction emits.
-    e = canon0.where(F.col("u") != F.col("v"))
+    e = canon.where(F.col("u") != F.col("v"))
 
     # Per-partition union-find pre-contraction (mapInPandas, Arrow batches):
     # each partition's edge subset collapses to a spanning star forest in one
@@ -228,96 +156,83 @@ def connected_components(
         out = pd.DataFrame({"u": uniq[parent[sel]], "v": uniq[sel]})
         yield out if len(out) else pd.DataFrame({"u": [], "v": []})
 
-    def _contract(df: DataFrame) -> DataFrame:
+    def width(e: DataFrame, rows: int) -> int:
+        # partitions the residual needs under the per-partition row budget
+        return min(-(-rows // _CC_ROWS_PER_PART), max(1, e.rdd.getNumPartitions()))
+
+    def level(e: DataFrame, seen: dict) -> DataFrame:
+        # COALESCE the survivors (a narrow dependency, no shuffle) into as
+        # few partitions as the row budget allows and contract each one
         return (
-            df.mapInPandas(_local_contract, "u string, v string")
+            e.coalesce(width(e, seen["rows"]))
+            .mapInPandas(_local_contract, "u string, v string")
             # UF emits (node, root) with root < node; canonicalize to (u<v)
             .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
 
-    # Multi-level local contraction: contract each partition's edge subset
-    # to a star forest (shuffle-free), then COALESCE the survivors into as
-    # few partitions as the per-partition row budget allows — a narrow
-    # dependency, no shuffle — and contract again. Rows-per-partition stays
-    # bounded (each partition's arrays are O(rows-in-partition)), so
-    # executor memory is safe at any scale; once the residual fits ONE
-    # partition the pass reaches the global fixpoint and the star-phase
-    # loop below exits on its first convergence check. Star phases remain
-    # the fallback for residuals too big to coalesce further.
-    rows = n_edges  # rode the canon0 checkpoint job — no extra pass (r11)
-    solved = False
-    while rows:
-        nparts = max(1, e.rdd.getNumPartitions())
-        target = min(max(1, -(-rows // _CC_ROWS_PER_PART)), nparts)
-        src = e.coalesce(target) if target < nparts else e
-        if target == 1:
-            # the whole residual passes through ONE union-find: the output
-            # is min-rooted disjoint stars by construction — global
-            # fixpoint. No star phases, no convergence probes, and (r11)
-            # no dedup/checkpoint/count either: the UF emits each member
-            # node exactly once with root < node, and the single consumer
-            # below (the assign join) reads it once.
-            e = src.mapInPandas(_local_contract, "u string, v string")
-            solved = True
-            break
-        e = _contract(src)
-        new_rows = e.count()
-        if new_rows >= rows:
-            rows = new_rows
-            break
-        rows = new_rows
+    # Multi-level local contraction: rows-per-partition stays bounded (each
+    # partition's arrays are O(rows-in-partition)), so executor memory is
+    # safe at any scale. A level that does not shrink the residual hands it
+    # to the star rounds, the fallback for residuals too big to coalesce.
+    rows = seen["rows"]
+    if width(e, rows) > 1:
+        for e, seen in supersteps(level, e, seen, rows=nonloop):
+            last, rows = rows, seen["rows"]
+            if rows >= last or width(e, rows) <= 1:
+                break
 
     def _phase(cur: DataFrame, large: bool) -> DataFrame:
         # neighborhood minimum via a WINDOW over the symmetrized edges —
         # one shuffle per phase instead of the groupBy + re-join pair
-        # (measured 58 s -> 38 s on a 1M-edge chain graph at 7 rounds)
-        from pyspark.sql import Window
-
-        sym = cur.unionByName(
+        # (measured 58 s -> 38 s on a 1M-edge chain graph at 7 rounds).
+        # `cur` is disjoint min-rooted stars iff no node has both a smaller
+        # neighbour and a second one (`__bad`): the same window flags such
+        # nodes, and in the small phase each one's (node, m) row carries
+        # the flag to the output.
+        w = Window.partitionBy("u")
+        j = cur.select("u", "v").unionByName(
             cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).select(
+            "u",
+            "v",
+            F.least(F.min("v").over(w), F.col("u")).alias("m"),
+            (
+                (F.min("v").over(w) < F.col("u")) & (F.count("*").over(w) > 1)
+            ).alias("__bad"),
         )
-        j = sym.withColumn(
-            "m", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
+        out = j.where(F.col("v") > F.col("u")).select(
+            F.col("v").alias("a"), "m", "__bad"
         )
-        if large:
-            out = j.where(F.col("v") > F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
-            )
-        else:
-            out = j.where(F.col("v") <= F.col("u")).select(
-                F.col("v").alias("a"), F.col("m").alias("b")
+        if not large:
+            out = j.where(F.col("v") < F.col("u")).select(
+                F.col("v").alias("a"), "m", "__bad"
             ).unionByName(
-                j.select(
-                    F.col("u").alias("a"), F.col("m").alias("b")
-                ).dropDuplicates(["a"])
+                j.select(F.col("u").alias("a"), "m", "__bad").dropDuplicates(["a"])
             )
         return (
-            out.where(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .distinct()
+            out.where(F.col("a") != F.col("m"))
+            .groupBy(F.least("a", "m").alias("u"), F.greatest("a", "m").alias("v"))
+            .agg(F.bool_or("__bad").alias("__bad"))
         )
 
-    def _is_disjoint_stars(cur: DataFrame) -> bool:
-        # converged iff no member belongs to two stars and no member is
-        # itself a center — two limit-1 probes on the checkpointed frame
-        dup = cur.groupBy("v").agg(F.count("*").alias("c")).where(F.col("c") > 1)
-        if not dup.isEmpty():
-            return False
-        member_center = cur.select("u").join(
-            cur.select(F.col("v").alias("u")), on="u"
-        )
-        return member_center.isEmpty()
+    if width(e, rows) <= 1:
+        # the whole residual passes through ONE union-find: the output is
+        # min-rooted disjoint stars by construction — the global fixpoint.
+        # No star rounds and no cut: the UF emits each member node exactly
+        # once with root < node, and the assign join below reads it once.
+        e = e.coalesce(1).mapInPandas(_local_contract, "u string, v string")
+    else:
+        # alternating large-star / small-star rounds; the round whose
+        # large-star output is already disjoint stars is the fixpoint
+        def star_round(cur: DataFrame, _seen) -> DataFrame:
+            return _phase(_phase(cur, large=True), large=False)
 
-    for it in range(max_iter if not solved else 0):
-        if _is_disjoint_stars(e):
-            break
-        e = _phase(e, large=True)
-        e = _cut(_phase(e, large=False), it)
+        bad = F.count_if("__bad")
+        for e, seen in supersteps(star_round, e, None, max_iter, bad=bad):
+            if not seen["bad"]:
+                break
     # fixpoint: e is a union of stars rooted at each component's min id
     assign = e.select(F.col("v").alias("id"), F.col("u").alias("component"))
     return verts.join(assign, on="id", how="left").select(
@@ -337,65 +252,48 @@ def pagerank(
     rank = (1-d) + d * (incoming + dangling mass / N). Rank sum stays N.
     """
     # Materialize the edge input once, HASH-PARTITIONED on the superstep
-    # join key (r12; r11 checkpointed it unpartitioned): every superstep
-    # joins `edges` on src, so one setup shuffle here replaces an edges
-    # Exchange in all n_iter superstep jobs — the co-partitioned GraphX
-    # shape. The checkpoint records the partitioning (_cut_copartitioned),
-    # which a plain localCheckpoint under AQE loses.
+    # join key: every superstep joins `edges` on src, so one setup shuffle
+    # here replaces an edges Exchange in all n_iter superstep jobs — the
+    # co-partitioned GraphX shape. The copartitioned cut records the
+    # partitioning, which a plain cut under AQE loses.
     n_part = shuffle_partitions(edges)
-    edges = _cut_copartitioned(
-        edges.select("src", "dst").repartition(n_part, "src")
+    edges, _ = cut(
+        edges.select("src", "dst").repartition(n_part, "src"), copartitioned=True
     )
-    verts = _vertices(edges, vertices)
-    n = verts.count()
     out_deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("out_degree")
     )
     state = (
-        verts.join(out_deg, on="id", how="left")
+        _vertices(edges, vertices)
+        .join(out_deg, on="id", how="left")
         .select(
             "id",
             F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
             F.lit(1.0).alias("rank"),
         )
-        # hash(id, n_part) — recorded by the superstep cuts below, so the
-        # state side of both per-superstep joins never re-shuffles either.
-        # Iterations ≥ 1 inherit hash(id, n_part) from the rank-update
-        # join's streamed side, so only this setup repartition is explicit.
+        # hash(id, n_part) — recorded by the superstep cuts, so the state
+        # side of both per-superstep joins never re-shuffles either. Later
+        # states inherit hash(id, n_part) from the rank-update join's
+        # streamed side, so only this setup repartition is explicit.
         .repartition(n_part, "id")
     )
-    from pyspark.sql import Observation
+    # the dangling mass each superstep spreads over all N vertices rides
+    # the previous state's cut (N rides the first one)
+    dang = F.coalesce(
+        F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))), F.lit(0.0)
+    )
+    state, seen = cut(state, copartitioned=True, n=F.count(F.lit(1)), dang=dang)
+    n = float(seen["n"])
 
-    for i in range(n_iter):
-        # Checkpoint the superstep ONCE and ride the dangling-mass sum on
-        # the same job as an Observation (r11). The previous shape — a
-        # 1-row dangling aggregate FRAME broadcast into the next superstep
-        # — scheduled a broadcast-build job per iteration that re-executed
-        # the whole un-checkpointed state lineage (quadratic re-execution
-        # between the every-4th checkpoints). One job per superstep now;
-        # the observed sum is the same partial-aggregated double the
-        # broadcast frame produced (float-sum order was never deterministic
-        # across partitions — the oracle's round-6 tolerance covers both).
-        obs = Observation()
-        state = _cut_copartitioned(
-            state.observe(
-                obs,
-                F.coalesce(
-                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank"))),
-                    F.lit(0.0),
-                ).alias("__dang"),
-            ),
-            i,
-        )
-        dang = float(obs.get["__dang"])
+    def superstep(state: DataFrame, seen: dict) -> DataFrame:
         # shuffle_hash on the co-partitioned sides: the planner's stats
         # otherwise BROADCAST the full vertex state every superstep (a
         # driver collect + hash-relation build per iteration — measured
         # 14.6 s -> 8.8 s for 5 supersteps on the x10 graph with the hint).
-        # With both sides' hash partitioning recorded by the checkpoints,
-        # the SHJ needs NO exchange; the build side is one partition's
-        # share of the vertex state (vertices / n_part — the standard
-        # Pregel per-worker memory bound, near-uniform under id hashing).
+        # With both sides' hash partitioning recorded by the cuts, the SHJ
+        # needs NO exchange; the build side is one partition's share of
+        # the vertex state (vertices / n_part — the standard Pregel
+        # per-worker memory bound, near-uniform under id hashing).
         hs = state.hint("shuffle_hash")
         contribs = (
             edges.join(hs, edges["src"] == hs["id"])
@@ -407,7 +305,7 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("incoming"))
         )
-        state = (
+        return (
             state.select("id", "out_degree")
             .join(contribs.hint("shuffle_hash"), on="id", how="left")
             .select(
@@ -418,11 +316,16 @@ def pagerank(
                     + F.lit(damping)
                     * (
                         F.coalesce("incoming", F.lit(0.0))
-                        + F.lit(dang) / F.lit(float(n))
+                        + F.lit(float(seen["dang"])) / F.lit(n)
                     )
                 ).alias("rank"),
             )
         )
+
+    for state, _ in supersteps(
+        superstep, state, seen, n_iter, copartitioned=True, dang=dang
+    ):
+        pass
     return state.select("id", F.round("rank", 6).alias("rank"))
 
 
@@ -432,42 +335,39 @@ def label_propagation(
     max_iter: int = 5,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (mode of
-    neighbor labels; min-label tie-break keeps it deterministic)."""
+    neighbor labels; min-label tie-break keeps it deterministic). Stops
+    early at the first step that changes no label: a fixpoint."""
     # materialized once: `sym` is joined every iteration (r11). NOT
     # co-partitioned on src (unlike pagerank): recording sym's hash(src)
     # partitioning flipped the per-iteration state join from broadcast to
     # a full state shuffle — measured r12: 17.0 s -> 48.0 s on the x10
     # graph, reverted.
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    state = _vertices(sym, vertices).withColumn("label", F.col("id"))
-    for i in range(max_iter):
+    sym, _ = cut(_both_ways(edges))
+    w = Window.partitionBy("vid").orderBy(F.col("votes").desc(), F.col("label").asc())
+
+    def step(state: DataFrame, _seen) -> DataFrame:
         votes = (
             sym.join(state, sym["src"] == state["id"])
             .groupBy(F.col("dst").alias("vid"), F.col("label"))
             .agg(F.count("*").alias("votes"))
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("vid").orderBy(
-            F.col("votes").desc(), F.col("label").asc()
         )
         best = (
             votes.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select(F.col("vid").alias("id"), F.col("label").alias("new_label"))
         )
-        state = state.join(best, on="id", how="left").select(
-            "id", F.coalesce("new_label", F.col("label")).alias("label")
+        return state.join(best, on="id", how="left").select(
+            "id",
+            F.coalesce("new_label", F.col("label")).alias("label"),
+            (F.col("new_label") != F.col("label")).alias("__changed"),
         )
-        if i % CHECKPOINT_EVERY == CHECKPOINT_EVERY - 1:
-            state = _cut(state, i)
-    return state
+
+    state = _vertices(sym, vertices).withColumn("label", F.col("id"))
+    changed = F.count_if("__changed")
+    for state, seen in supersteps(step, state, None, max_iter, changed=changed):
+        if not seen["changed"]:
+            break
+    return state.select("id", "label")
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -481,18 +381,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     O(√m) — a hot vertex of degree d no longer contributes d² candidate
     pairs, which is what kills the naive sum-deg² plan on skewed graphs
     at 100 TB."""
-    und = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+    und, _ = cut(
+        _both_ways(edges)
         .where(F.col("src") < F.col("dst"))
         .distinct()
         # und feeds THREE consumers (degree agg, the oriented join, and the
         # closing-edge lookup): materialize once instead of re-running the
         # input lineage + distinct per consumer (r11)
-        .localCheckpoint(eager=True)
     )
     deg = (
         und.select(F.col("src").alias("id"))
@@ -545,33 +440,26 @@ def shortest_path_lengths(
     # broadcast-small every hop, so the planner never uses the edge-side
     # partitioning — measured r12: the setup repartition alone regressed
     # the gate +6% at x10 / +13% at sf0.1, reverted.
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    edges, _ = cut(edges.select("src", "dst"))
     src0 = sources.select(F.col(sources.columns[0]).alias("start"))
     settled = src0.select(
         "start", F.col("start").alias("id"), F.lit(0).alias("dist")
     )
-    frontier = settled
-    from pyspark.sql import Observation
 
-    for hop in range(1, max_hops + 1):
-        nxt = (
+    def hop(frontier: DataFrame, _seen) -> DataFrame:
+        # `settled` is read when the step is built, after the loop below
+        # has added the previous frontier to it
+        return (
             frontier.join(edges, frontier["id"] == edges["src"])
-            .select("start", F.col("dst").alias("id"), F.lit(hop).alias("dist"))
+            .select("start", F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
             .distinct()
             .join(settled.select("start", "id"), on=["start", "id"], how="left_anti")
         )
-        # Checkpoint EVERY hop with the frontier size riding the same
-        # action: the isEmpty() convergence probe otherwise executes the
-        # hop's full join+distinct+anti plan, and the un-checkpointed
-        # lineage then re-executed it again inside the next hop (r11 — one
-        # checkpoint per hop now, and the settled union reads materialized
-        # frontiers). Under AQE each shuffle stage of that checkpoint runs
-        # as its own Spark job: about 7 jobs per hop (88-90 jobs for 12 hops
-        # on a 30-vertex chain, counted by job group).
-        obs = Observation()
-        nxt = _cut(nxt.observe(obs, F.count(F.lit(1)).alias("__n")), hop)
-        if not obs.get["__n"]:
+
+    # each hop's frontier is cut with its size riding the cut, so the
+    # settled set is a union of materialized frontiers
+    for frontier, seen in supersteps(hop, settled, None, max_hops, n=F.count(F.lit(1))):
+        if not seen["n"]:
             break
-        settled = settled.unionByName(nxt)
-        frontier = nxt
+        settled = settled.unionByName(frontier)
     return settled

@@ -14,8 +14,11 @@ Scale design:
   expansion happens.
 - **Cycle check** is `array_contains(path_eids, eid)` per candidate edge —
   Cypher relationship-isomorphism (no edge reused within one path).
-- **Lineage control**: `localCheckpoint` every few hops keeps the plan from
-  growing superlinearly (a recursive CTE's memo table, re-expressed).
+- **One observed cut per hop**: the hops run on the superstep driver
+  (``operators.superstep``). The edge set is cut once and every hop's
+  frontier is cut with its row count riding the cut, so the result is a
+  union of materialized frontiers (a recursive CTE's memo table,
+  re-expressed) and no hop runs a separate count or emptiness probe.
 - **Early stop**: expansion halts when the frontier is empty; callers with a
   LIMIT can pass ``max_rows`` to stop once enough rows are accumulated
   (reference caps at min(limit*10, 10000), src/translator.ts:3355-3359).
@@ -23,11 +26,14 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nicefox_graphdb_spark.operators.superstep import cut, supersteps
+
 DEFAULT_MAX_HOPS = 12
-CHECKPOINT_EVERY = 3
 
 START, END, PATH_EIDS, PATH_NODES, HOPS = (
     "__vl_start",
@@ -54,6 +60,11 @@ def var_length_expand(
     """
     min_hops = max(min_hops, 1)
     max_hops = max_hops if max_hops is not None else DEFAULT_MAX_HOPS
+    if max_hops > 1:
+        # every hop re-reads the edge set: a derived edge view (joins,
+        # windows) recomputed per hop would be the recursive-CTE equivalent
+        # of forgetting to memoize the base case
+        edges, _ = cut(edges.select("__from", "__to", "__eid"))
 
     base = edges.select(
         F.col("__from").alias(START),
@@ -73,48 +84,36 @@ def var_length_expand(
             on=START,
             how="left_semi",
         )
+    if max_hops == 1:
+        return base  # one hop: nothing to iterate
 
-    frontier = base
-    results: list[DataFrame] = []
-    if min_hops <= 1:
-        results.append(frontier)
-    collected = frontier.count() if max_rows is not None and min_hops <= 1 else 0
-
-    for hop in range(2, max_hops + 1):
-        if max_rows is not None and collected >= max_rows:
-            break
-        step = edges.select(
-            F.col("__from").alias("__s_from"),
-            F.col("__to").alias("__s_to"),
-            F.col("__eid").alias("__s_eid"),
-        )
-        frontier = (
-            frontier.join(step, frontier[END] == F.col("__s_from"))
-            .where(~F.array_contains(F.col(PATH_EIDS), F.col("__s_eid")))
+    def hop(frontier: DataFrame | None, _seen) -> DataFrame:
+        if frontier is None:
+            return base
+        return (
+            frontier.join(edges, frontier[END] == F.col("__from"))
+            .where(~F.array_contains(F.col(PATH_EIDS), F.col("__eid")))
             .select(
                 F.col(START),
-                F.col("__s_to").alias(END),
-                F.concat(F.col(PATH_EIDS), F.array(F.col("__s_eid"))).alias(
-                    PATH_EIDS
-                ),
-                F.concat(F.col(PATH_NODES), F.array(F.col("__s_to"))).alias(
-                    PATH_NODES
-                ),
+                F.col("__to").alias(END),
+                F.concat(F.col(PATH_EIDS), F.array(F.col("__eid"))).alias(PATH_EIDS),
+                F.concat(F.col(PATH_NODES), F.array(F.col("__to"))).alias(PATH_NODES),
                 (F.col(HOPS) + 1).alias(HOPS),
             )
         )
-        if hop % CHECKPOINT_EVERY == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-        if frontier.isEmpty():
+
+    results: list[DataFrame] = []
+    collected = 0
+    hops = supersteps(hop, None, None, max_hops, rows=F.count(F.lit(1)))
+    for n, (frontier, seen) in enumerate(hops, 1):
+        if not seen["rows"]:
             break
-        if hop >= min_hops:
+        if n >= min_hops:
             results.append(frontier)
-            if max_rows is not None:
-                collected += frontier.count()
+            collected += seen["rows"]
+            if max_rows is not None and collected >= max_rows:
+                break
 
     if not results:
         return base.where(F.lit(False))
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    return functools.reduce(DataFrame.unionByName, results)

@@ -39,12 +39,18 @@ def codegen_compiles(spark: SparkSession) -> int:
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
+def local_cpus() -> int:
+    """Cores for a ``local[N]`` session and its default shuffle width:
+    ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "nicefox-graphdb-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("NICEFOX_SHUFFLE_PARTITIONS", cpus)

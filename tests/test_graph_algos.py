@@ -1,9 +1,27 @@
-"""Graph analytics tests on known small graphs."""
+"""Graph analytics tests on known small graphs, and pins on the superstep
+driver every iterative loop runs on: one observed lineage cut per step,
+copartitioned cuts that record hash partitioning without touching the
+shared session's AQE, and the reliable-checkpoint cadence."""
+
+import io
+from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
 from nicefox_graphdb_spark.operators import graph_algos as ga
+from nicefox_graphdb_spark.operators.superstep import cut
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 @pytest.fixture(scope="module")
@@ -197,3 +215,193 @@ def test_connected_components_multipartition_paths(spark, monkeypatch):
         for r in ga.connected_components(df).collect()
     }
     assert got2 == expected
+
+
+def test_pagerank_lineage_is_cut_per_superstep(spark):
+    # every superstep is cut with the dangling mass riding the cut as an
+    # Observation: the RETURNED frame's lineage must span at most one
+    # superstep over a LogicalRDD checkpoint, not the whole iteration
+    # history (a separate dangling-mass probe re-ran the uncut supersteps)
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(30)], "src string, dst string"
+    )
+    plan = _analyzed(ga.pagerank(edges, n_iter=4))
+    assert "LogicalRDD" in plan
+    assert plan.count("Join") <= 3, plan
+
+
+def test_sssp_frontiers_are_materialized(spark):
+    # per-hop cut with the frontier count riding it: the returned settled
+    # set must be a union of materialized frontiers (LogicalRDDs) with NO
+    # join left in its lineage (an isEmpty probe on a lazy frontier ran
+    # each hop's join twice)
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(12)], "src string, dst string"
+    )
+    sources = spark.createDataFrame([("n0",)], "start string")
+    plan = _analyzed(ga.shortest_path_lengths(edges, sources, max_hops=5))
+    assert "LogicalRDD" in plan
+    assert "Join" not in plan, plan
+
+
+def test_cc_solved_path_results(spark):
+    # two components + one self-loop-only vertex (the canonical edge cut
+    # keeps self-loops precisely so this vertex stays in the vertex set)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")],
+        "src string, dst string",
+    )
+    got = {
+        (r["id"], r["component"])
+        for r in ga.connected_components(edges).collect()
+    }
+    assert got == {
+        ("a", "a"), ("b", "a"), ("c", "a"),
+        ("x", "x"), ("y", "x"),
+        ("z", "z"),
+    }
+
+
+def test_copartitioned_cut_records_hash_partitioning(spark):
+    """A copartitioned cut must stamp the checkpointed RDD with the plan's
+    hash partitioning (a plain localCheckpoint under AQE records
+    UnknownPartitioning, and every downstream same-key join re-shuffles)."""
+    df = spark.range(100).select(
+        F.col("id").cast("string").alias("id"), F.lit(1.0).alias("rank")
+    )
+    ck, _ = cut(df.repartition(8, "id"), copartitioned=True)
+    plan = _formatted(ck.where(F.col("rank") > 0))
+    assert "hashpartitioning(id" in plan, plan
+    # control: the AQE-wrapped checkpoint loses it
+    plain = df.repartition(8, "id").localCheckpoint(eager=True)
+    assert "UnknownPartitioning" in _formatted(plain.where(F.col("rank") > 0))
+
+
+def test_copartitioned_join_has_no_join_side_exchange(spark):
+    """Two frames cut with recorded hash partitioning on the join key must
+    join (shuffle_hash) with ZERO exchange — the pagerank superstep shape."""
+    edges = spark.range(1000).select(
+        (F.col("id") % 100).cast("string").alias("src"),
+        ((F.col("id") * 7) % 100).cast("string").alias("dst"),
+    )
+    state = spark.range(100).select(
+        F.col("id").cast("string").alias("id"), F.lit(1.0).alias("rank")
+    )
+    e_ck, _ = cut(edges.repartition(8, "src"), copartitioned=True)
+    s_ck, _ = cut(state.repartition(8, "id"), copartitioned=True)
+    hs = s_ck.hint("shuffle_hash")
+    joined = e_ck.join(hs, e_ck["src"] == hs["id"]).select("dst", "rank")
+    plan = _formatted(joined)
+    assert "ShuffledHashJoin" in plan, plan
+    # no Exchange feeds the join: both sides read the recorded partitioning
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
+def test_pagerank_matches_unpartitioned_reference(spark):
+    """Co-partitioning + shuffle_hash must not change pagerank's results
+    (rank rounded to 6 by the public API)."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
+        "src string, dst string",
+    )
+    got = {
+        r["id"]: r["rank"] for r in ga.pagerank(edges, n_iter=8).collect()
+    }
+    # hand-rolled reference power iteration (same damping/iterations)
+    ranks = {v: 1.0 for v in "abcd"}
+    out_deg = {"a": 2, "b": 1, "c": 1, "d": 1}
+    adj = {"a": ["b", "c"], "b": ["c"], "c": ["a"], "d": ["a"]}
+    for _ in range(8):
+        incoming = {v: 0.0 for v in ranks}
+        for u, vs in adj.items():
+            for v in vs:
+                incoming[v] += ranks[u] / out_deg[u]
+        ranks = {v: 0.15 + 0.85 * incoming[v] for v in ranks}
+    for v, r in ranks.items():
+        assert got[v] == pytest.approx(r, abs=2e-6), (v, got[v], r)
+
+
+def test_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
+    """NICEFOX_RELIABLE_CHECKPOINT_EVERY_K routes every k-th iteration cut
+    through the reliable checkpoint dir; results are unchanged."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")],
+        "src string, dst string",
+    )
+    base = {r["id"]: r["rank"] for r in ga.pagerank(edges, n_iter=4).collect()}
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    monkeypatch.setenv("NICEFOX_RELIABLE_CHECKPOINT_EVERY_K", "2")
+    durable = {
+        r["id"]: r["rank"] for r in ga.pagerank(edges, n_iter=4).collect()
+    }
+    assert durable == base
+    # the reliable checkpoints actually landed in the checkpoint dir
+    ckpt_files = list((tmp_path / "ckpt").rglob("*"))
+    assert ckpt_files, "no reliable checkpoint files written"
+
+
+def test_cc_keeps_half_null_edge_endpoint(spark):
+    # (a, NULL) connects nothing, but its non-NULL endpoint is still a
+    # vertex of the derived vertex set: it comes back as its own component
+    edges = spark.createDataFrame(
+        [("a", None), ("b", "c"), (None, "d"), (None, None), ("c", None)],
+        "src string, dst string",
+    )
+    got = {
+        (r["id"], r["component"])
+        for r in ga.connected_components(edges).collect()
+    }
+    assert got == {("a", "a"), ("b", "b"), ("c", "b"), ("d", "d")}
+
+
+def test_label_propagation_stops_at_fixpoint(spark):
+    # two disjoint triangles settle after one step; the step after it
+    # changes no label, so a large max_iter runs no further supersteps
+    tri = [("A", "B"), ("B", "C"), ("A", "C"), ("X", "Y"), ("Y", "Z"), ("X", "Z")]
+    edges = spark.createDataFrame(tri, "src string, dst string")
+    sc = spark.sparkContext
+
+    def run(max_iter):
+        tag = f"lpa-{max_iter}"
+        sc.setJobGroup(tag, tag)
+        try:
+            rows = sorted(ga.label_propagation(edges, max_iter=max_iter).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    few, few_jobs = run(3)
+    many, many_jobs = run(10)
+    assert many == few
+    assert many_jobs == few_jobs, (few_jobs, many_jobs)
+
+
+def test_pagerank_leaves_concurrent_plans_adaptive(spark):
+    # the copartitioned cuts run in a clone of the session with AQE off:
+    # another thread planning a join on the shared session meanwhile (an
+    # HTTP server thread) must still get an adaptive plan
+    import threading
+
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 1) % 40}") for i in range(40)],
+        "src string, dst string",
+    )
+    left = spark.range(50).withColumnRenamed("id", "k")
+    seen: set[str] = set()
+    done = threading.Event()
+
+    def plan_joins():
+        while not done.is_set():
+            joined = left.join(spark.range(50).withColumnRenamed("id", "k"), "k")
+            plan = joined._jdf.queryExecution().executedPlan()
+            seen.add(plan.getClass().getSimpleName())
+
+    watcher = threading.Thread(target=plan_joins)
+    watcher.start()
+    try:
+        ga.pagerank(edges, n_iter=6).collect()
+    finally:
+        done.set()
+        watcher.join()
+    assert seen == {"AdaptiveSparkPlanExec"}, seen

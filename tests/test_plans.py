@@ -245,6 +245,39 @@ def test_repeated_work_compiles_once(engine, spark):
     assert compiles <= 0 + 2, f"second run compiled {compiles} classes"
 
 
+def test_local_cpus_default(monkeypatch):
+    # unset, the local[N] width and default shuffle partitions come from
+    # the CPUs this process may run on, not a fixed 32
+    import os
+
+    from nicefox_graphdb_spark.session import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
+
+
+def test_var_length_read_job_budget(engine, spark):
+    # a keyed var-length read, compile + collect. Every hop is one cut
+    # with its row count riding it, so no count or isEmpty probe re-runs a
+    # hop: *1..3 measured 14 (22 with a probe per hop and the edge cut in
+    # the compiler). *1..1 has nothing to iterate and cuts nothing: 8 jobs.
+    q = (
+        "MATCH (e:Event {event_id: $k})-[:NEXT*%s]->(x:Event) "
+        "RETURN x.event_id AS id ORDER BY id"
+    )
+    for hops, budget in (("1..3", 14), ("1..1", 8)):
+        query = q % hops
+        engine.query(query, {"k": 3})  # warm compile
+        n = _jobs_during(
+            spark,
+            lambda: engine.dataframe(query, {"k": 9}).collect(),
+            f"var-length-{hops}",
+        )
+        assert n <= budget, f"*{hops} read scheduled {n} jobs (budget {budget})"
+
+
 def _mini_write_engine(spark):
     from nicefox_graphdb_spark import CypherEngine
     from nicefox_graphdb_spark.catalog import GraphCatalog

@@ -5,10 +5,9 @@ is a test failure rather than a silent wall-clock cliff:
 - the candidate verify re-spread (AQE coalesces 16-byte pairs to one task
   by byte size — the repartition must stay ahead of the CPU-bound verify);
 - single-evaluation tokenization (one regex split per row in the fused
-  text expressions);
-- iterative algorithms ride their convergence/aggregate probes on the
-  per-step checkpoint job, so the returned lineage spans one step (plan
-  pins: LogicalRDD checkpoints present, join depth bounded).
+  text expressions).
+
+The iterative-algorithm pins live in test_graph_algos.py.
 """
 
 from __future__ import annotations
@@ -103,58 +102,6 @@ def test_quality_and_langid_match_unbound_forms(spark, docs):
         tx.quality_score(F.col("text")).alias("opt"), naive.alias("naive")
     ).collect()
     assert all(r["opt"] == r["naive"] for r in rows)
-
-
-def test_pagerank_lineage_is_cut_per_superstep(spark):
-    # every superstep checkpoints with the dangling mass riding the
-    # checkpoint as an Observation: the RETURNED frame's lineage must span
-    # only the LAST superstep (joins over a LogicalRDD checkpoint), not the
-    # whole iteration history (the old shape re-executed up to
-    # CHECKPOINT_EVERY supersteps per dangling-mass broadcast probe)
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{i+1}") for i in range(30)], "src string, dst string"
-    )
-    plan = _analyzed(ga.pagerank(edges, n_iter=4))
-    assert "LogicalRDD" in plan
-    assert plan.count("Join") <= 3, plan
-
-
-def test_sssp_frontiers_are_materialized(spark):
-    # per-hop checkpoint with the frontier count riding it: the returned
-    # settled set must be a union of materialized frontiers (LogicalRDDs)
-    # with NO join left in its lineage (the old isEmpty probe + lazy
-    # frontier re-executed each hop's join twice)
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{i+1}") for i in range(12)], "src string, dst string"
-    )
-    sources = spark.createDataFrame([("n0",)], "start string")
-    plan = _analyzed(ga.shortest_path_lengths(edges, sources, max_hops=5))
-    assert "LogicalRDD" in plan
-    assert "Join" not in plan, plan
-
-
-def test_cc_solved_path_results(spark):
-    # two components + one self-loop-only vertex (the canon0 checkpoint
-    # keeps self-loops precisely so this vertex stays in the vertex set)
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")],
-        "src string, dst string",
-    )
-    got = {
-        (r["id"], r["component"])
-        for r in ga.connected_components(edges).collect()
-    }
-    assert got == {
-        ("a", "a"), ("b", "a"), ("c", "a"),
-        ("x", "x"), ("y", "x"),
-        ("z", "z"),
-    }
 
 
 def test_write_only_result_is_single_partition(spark, tmp_path):

@@ -2,27 +2,16 @@
 
 - the candidate dedup + verify-spread fusion (ONE pair-key exchange where
   r11 had dropDuplicates' exchange PLUS a round-robin respread);
-- pagerank's co-partitioned superstep (the checkpoint records hash
-  partitioning — lost under AQE — so the per-superstep joins run with no
-  join-side Exchange, and shuffle_hash keeps the planner from
-  broadcasting the full vertex state every superstep);
-- the reliable-checkpoint durability knob for the iterative algorithms.
+- the terminal durable CREATE's single write action.
+
+Pagerank's co-partitioned superstep and the reliable-checkpoint knob are
+pinned in test_graph_algos.py.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def _formatted(df) -> str:
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def _analyzed(df) -> str:
@@ -57,72 +46,6 @@ def test_jaccard_dedup_and_spread_share_one_exchange(spark, docs):
     assert "RepartitionByExpression [id_a" in plan, plan
     # ...and NO round-robin repartition left anywhere in the pipeline
     assert "Repartition " not in plan, plan
-
-
-def test_copartitioned_cut_records_hash_partitioning(spark):
-    """_cut_copartitioned must stamp the checkpointed RDD with the plan's
-    hash partitioning (a plain localCheckpoint under AQE records
-    UnknownPartitioning, and every downstream same-key join re-shuffles)."""
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    df = spark.range(100).select(
-        F.col("id").cast("string").alias("id"), F.lit(1.0).alias("rank")
-    )
-    ck = ga._cut_copartitioned(df.repartition(8, "id"))
-    plan = _formatted(ck.where(F.col("rank") > 0))
-    assert "hashpartitioning(id" in plan, plan
-    # control: the AQE-wrapped checkpoint loses it
-    plain = df.repartition(8, "id").localCheckpoint(eager=True)
-    assert "UnknownPartitioning" in _formatted(plain.where(F.col("rank") > 0))
-
-
-def test_copartitioned_join_has_no_join_side_exchange(spark):
-    """Two frames cut with recorded hash partitioning on the join key must
-    join (shuffle_hash) with ZERO exchange — the pagerank superstep shape."""
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    edges = spark.range(1000).select(
-        (F.col("id") % 100).cast("string").alias("src"),
-        ((F.col("id") * 7) % 100).cast("string").alias("dst"),
-    )
-    state = spark.range(100).select(
-        F.col("id").cast("string").alias("id"), F.lit(1.0).alias("rank")
-    )
-    e_ck = ga._cut_copartitioned(edges.repartition(8, "src"))
-    s_ck = ga._cut_copartitioned(state.repartition(8, "id"))
-    hs = s_ck.hint("shuffle_hash")
-    joined = e_ck.join(hs, e_ck["src"] == hs["id"]).select("dst", "rank")
-    plan = _formatted(joined)
-    assert "ShuffledHashJoin" in plan, plan
-    # no Exchange feeds the join: both sides read the recorded partitioning
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert "BroadcastExchange" not in plan, plan
-
-
-def test_pagerank_matches_unpartitioned_reference(spark):
-    """Co-partitioning + shuffle_hash must not change pagerank's results
-    (rank rounded to 6 by the public API)."""
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
-        "src string, dst string",
-    )
-    got = {
-        r["id"]: r["rank"] for r in ga.pagerank(edges, n_iter=8).collect()
-    }
-    # hand-rolled reference power iteration (same damping/iterations)
-    ranks = {v: 1.0 for v in "abcd"}
-    out_deg = {"a": 2, "b": 1, "c": 1, "d": 1}
-    adj = {"a": ["b", "c"], "b": ["c"], "c": ["a"], "d": ["a"]}
-    for _ in range(8):
-        incoming = {v: 0.0 for v in ranks}
-        for u, vs in adj.items():
-            for v in vs:
-                incoming[v] += ranks[u] / out_deg[u]
-        ranks = {v: 0.15 + 0.85 * incoming[v] for v in ranks}
-    for v, r in ranks.items():
-        assert got[v] == pytest.approx(r, abs=2e-6), (v, got[v], r)
 
 
 def test_terminal_durable_create_is_single_action(spark, tmp_path):
@@ -166,24 +89,3 @@ def test_nonterminal_create_still_freezes_ids(spark, tmp_path):
     )
     stored = eng.query("MATCH (n:Fz) RETURN id(n) AS id ORDER BY id")
     assert [r["id"] for r in returned] == [r["id"] for r in stored]
-
-
-def test_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
-    """NICEFOX_RELIABLE_CHECKPOINT_EVERY_K routes every k-th iteration cut
-    through the reliable checkpoint dir; results are unchanged."""
-    from nicefox_graphdb_spark.operators import graph_algos as ga
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")],
-        "src string, dst string",
-    )
-    base = {r["id"]: r["rank"] for r in ga.pagerank(edges, n_iter=4).collect()}
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    monkeypatch.setenv("NICEFOX_RELIABLE_CHECKPOINT_EVERY_K", "2")
-    durable = {
-        r["id"]: r["rank"] for r in ga.pagerank(edges, n_iter=4).collect()
-    }
-    assert durable == base
-    # the reliable checkpoints actually landed in the checkpoint dir
-    ckpt_files = list((tmp_path / "ckpt").rglob("*"))
-    assert ckpt_files, "no reliable checkpoint files written"
