@@ -222,11 +222,6 @@ class GraphCatalog:
         self._union_cache[key] = out
         return out
 
-    def labels_of(self, label: str) -> list[str]:
-        """All labels that a node of the given primary table carries (here:
-        one table per label; multi-label = same _id in several tables)."""
-        return [label] if label else []
-
     def label_membership(self) -> DataFrame:
         """``(_id, _labels)`` — the full, sorted label set of every node id
         (reference returns the whole normalized label array,

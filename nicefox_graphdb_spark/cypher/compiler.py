@@ -39,6 +39,7 @@ from nicefox_graphdb_spark.cypher.expressions import (
     widen_prop_dtype,
 )
 from nicefox_graphdb_spark.cypher.scope import Scope, VarInfo, pcol, vcol
+from nicefox_graphdb_spark.graph_store import gated
 from nicefox_graphdb_spark.operators import var_length as vl
 
 
@@ -888,14 +889,21 @@ class CypherToSpark:
         return state
 
     def _add_node(
-        self, state: CompileState, np_: ast.NodePattern
+        self, state: CompileState, np_: ast.NodePattern, to: str | None = None
     ) -> tuple[CompileState, str]:
+        """Bind a pattern node to the frame. `to` names the column holding
+        the id a hop just reached (dropped once used). A bound variable
+        checks id equality with it, the pattern's labels and its inline
+        property map; an unbound one joins its filtered scan on it, on the
+        map entries that read bound variables, or crosses onto the rows."""
         var = np_.var or self.gensym("n")
         existing = state.scope.get(var)
         if existing is not None:
             if existing.kind != "node":
                 raise CypherCompileError(f"variable `{var}` is not a node")
             df = state.require_df()
+            if to is not None:
+                df = df.where(F.col(vcol(var, "id")) == F.col(to)).drop(to)
             if np_.labels:
                 tc = ExprCompiler(self._ctx(state)).compile(
                     ast.LabelPred(base=ast.Var(var), labels=np_.labels)
@@ -910,10 +918,14 @@ class CypherToSpark:
         scope.bind(info)
         if state.df is None:
             return CompileState(df=ndf, scope=scope), var
-        if on:
-            joined = state.df.join(ndf, functools.reduce(operator.and_, on))
-            return CompileState(df=joined, scope=scope), var
-        return CompileState(df=state.df.crossJoin(ndf), scope=scope), var
+        if to is not None:
+            on = [state.df[to] == ndf[vcol(var, "id")], *on]
+        if not on:
+            return CompileState(df=state.df.crossJoin(ndf), scope=scope), var
+        joined = state.df.join(ndf, functools.reduce(operator.and_, on))
+        if to is not None:
+            joined = joined.drop(to)
+        return CompileState(df=joined, scope=scope), var
 
     def _add_hop(
         self,
@@ -978,37 +990,18 @@ class CypherToSpark:
                 )
             scope = state.scope.copy()
             scope.bind(rinfo)
-            if right_np.var and right_existing is None:
+            if right_np.var:
                 state2, rv = self._add_node(
                     CompileState(df=df, scope=scope), right_np
                 )
                 return state2, rv, rinfo
-            return CompileState(df=df, scope=scope), right_np.var or left_var, rinfo
+            return CompileState(df=df, scope=scope), left_var, rinfo
         edf, on = self._scan_prop_filter(edf, state, rinfo, rel.props)
         on = [df[vcol(left_var, "id")] == edf["__from"], *on]
         joined = df.join(edf, functools.reduce(operator.and_, on)).drop("__from")
         scope = state.scope.copy()
         scope.bind(rinfo)
         state = CompileState(df=joined, scope=scope)
-        # right node
-        if right_existing is not None:
-            var = right_np.var  # type: ignore[assignment]
-            df2 = state.require_df()
-            df2 = df2.where(F.col(vcol(var, "id")) == F.col("__to")).drop("__to")
-            state = CompileState(df=df2, scope=state.scope)
-            if right_np.labels:
-                tc = ExprCompiler(self._ctx(state)).compile(
-                    ast.LabelPred(base=ast.Var(var), labels=right_np.labels)
-                )
-                state = CompileState(df=state.df.where(tc.col), scope=state.scope)
-            if right_np.props is not None:
-                state = CompileState(
-                    df=self._inline_prop_filter(
-                        state.require_df(), state, right_existing, right_np.props
-                    ),
-                    scope=state.scope,
-                )
-            return state, var, rinfo
         if elide:
             # bind only the id (renamed from the edge's far endpoint);
             # props stay empty — by construction nothing ever reads them
@@ -1038,14 +1031,9 @@ class CypherToSpark:
                     scope=state.scope,
                 )
             return state, rvar, rinfo
-        ndf, ninfo = self._node_scan(rvar, right_np.labels)
-        ndf, on = self._scan_prop_filter(ndf, state, ninfo, right_np.props)
-        df3 = state.require_df()
-        on = [df3["__to"] == ndf[vcol(rvar, "id")], *on]
-        joined2 = df3.join(ndf, functools.reduce(operator.and_, on)).drop("__to")
-        scope2 = state.scope.copy()
-        scope2.bind(ninfo)
-        return CompileState(df=joined2, scope=scope2), rvar, rinfo
+        # a bound far node, or one that needs its scan
+        state, rvar = self._add_node(state, replace(right_np, var=rvar), to="__to")
+        return state, rvar, rinfo
 
     def _add_var_length_hop(
         self,
@@ -1148,24 +1136,10 @@ class CypherToSpark:
                 F.lit(rel.types[0] if rel.types else None).cast("string"),
             )
         )
-        state = CompileState(df=joined, scope=scope)
-        # right node
-        right_existing = state.scope.get(right_np.var) if right_np.var else None
-        if right_existing is not None:
-            var = right_np.var  # type: ignore[assignment]
-            df2 = state.require_df().where(
-                F.col(vcol(var, "id")) == F.col("__to")
-            ).drop("__to")
-            return CompileState(df=df2, scope=state.scope), var, rinfo
-        rvar = right_np.var or self.gensym("n")
-        ndf, ninfo = self._node_scan(rvar, right_np.labels)
-        ndf, on = self._scan_prop_filter(ndf, state, ninfo, right_np.props)
-        df3 = state.require_df()
-        on = [df3["__to"] == ndf[vcol(rvar, "id")], *on]
-        joined2 = df3.join(ndf, functools.reduce(operator.and_, on)).drop("__to")
-        scope2 = state.scope.copy()
-        scope2.bind(ninfo)
-        return CompileState(df=joined2, scope=scope2), rvar, rinfo
+        state, rvar = self._add_node(
+            CompileState(df=joined, scope=scope), right_np, to="__to"
+        )
+        return state, rvar, rinfo
 
     def _apply_edge_uniqueness(
         self, state: CompileState, edge_vars: list[VarInfo]
@@ -3334,50 +3308,10 @@ class CypherToSpark:
             return CompileState(df=self.spark.range(0, 1, 1, 1).select(), scope=state.scope)
         return state
 
-    def _single_label(self, np_: ast.NodePattern, var: str) -> str:
-        if len(np_.labels) != 1:
-            raise CypherCompileError(
-                f"CREATE/MERGE node `{var}` requires exactly one label "
-                f"(got {np_.labels})"
-            )
-        return np_.labels[0]
-
-    def _merge_existing_filter(self, labels: list[str], df: DataFrame) -> DataFrame:
-        """Restrict a primary-label node table to ids that ALSO belong to
-        every extra label table (multi-label MERGE intersection)."""
-        for extra in labels[1:]:
-            if not self.store.catalog.has_label(extra):
-                return df.limit(0)
-            df = df.join(
-                self.store.catalog.node(extra).df.select("_id"),
-                on="_id",
-                how="left_semi",
-            )
-        return df
-
     def _merge_add_extra_labels(self, labels: list[str], ids: DataFrame) -> None:
         """Created multi-label MERGE nodes join each extra label table."""
         for extra in labels[1:]:
             self.store.add_label_to_nodes(labels[0], ids, extra)
-
-    def _merge_node_table(self, labels: list[str]) -> DataFrame:
-        """_id + property columns of every node carrying ALL given labels —
-        every node in the graph for an unlabeled MERGE (Neo4j: MERGE
-        (a {k: 1}) matches ANY node with k=1 regardless of label)."""
-        if labels:
-            return self._merge_existing_filter(
-                labels, self.store.catalog.node(labels[0]).df
-            )
-        if not self.store.catalog._nodes:
-            return self.spark.createDataFrame(
-                [], T.StructType([T.StructField("_id", T.StringType())])
-            )
-        mv = self.gensym("mm")
-        scan, sinfo = self._node_scan(mv, [])
-        return scan.select(
-            F.col(vcol(mv, "id")).alias("_id"),
-            *[F.col(pcol(mv, k)).alias(k) for k in sinfo.props],
-        )
 
     @staticmethod
     def _validate_storable(key: str, tc: TypedCol) -> None:
@@ -3963,11 +3897,13 @@ class CypherToSpark:
         merge interpreters, src/executor.ts:6835-7121, 7346-7610).
 
         Vectorized: distinct (bound ids, computed key values) tuples →
-        anti-join against existing FULL-chain matches
-        (relationship-isomorphic) → one fresh node-per-unbound/edge-per-hop
-        set per missing tuple; rows sharing a tuple bind the same created
-        elements. Full-pattern atomicity: a partially-existing chain is
-        never extended — the whole chain is created.
+        anti-join against existing FULL-chain matches → one fresh
+        node-per-unbound/edge-per-hop set per missing tuple; rows sharing a
+        tuple bind the same created elements. Full-pattern atomicity: a
+        partially-existing chain is never extended — the whole chain is
+        created. The existence match and the re-bind of every row are
+        `compile_match` over the pattern, its property maps rewritten to
+        read the key values as value variables.
         """
         elements = m.path.elements
         nodes = [el for el in elements[0::2]]
@@ -4024,28 +3960,41 @@ class CypherToSpark:
             node_labels.append(labels)
 
         df = state.require_df()
-        # per-element computed key columns (may reference outer variables)
-        node_keys: list[dict[str, str]] = []
-        rel_keys: list[dict[str, str]] = []
-        for i, np_ in enumerate(nodes):
+        # each computed key value (it may read outer variables) is bound as
+        # a value variable, and the pattern's property maps read those
+        # variables: the MATCH compiler joins them like any correlated map
+        key_scope = state.scope.copy()
+        elem_keys: list[dict[str, str]] = []  # per element: key -> variable
+        els: list = []
+        for n, el in enumerate(elements):
             key: dict[str, str] = {}
-            for k, tc in self._compiled_props(state, np_.props).items():
-                tmp = f"__nk{i}_{k}"
-                df = df.withColumn(tmp, tc.col)
-                key[k] = tmp
-            node_keys.append(key)
-        for j, r in enumerate(rels):
-            key = {}
-            for k, tc in self._compiled_props(state, r.props).items():
-                tmp = f"__ek{j}_{k}"
-                df = df.withColumn(tmp, tc.col)
-                key[k] = tmp
-            rel_keys.append(key)
+            for k, tc in self._compiled_props(state, el.props).items():
+                kv = f"__mk{n}_{len(key)}"
+                df = df.withColumn(vcol(kv, "val"), tc.col)
+                key_scope.bind(self._val_info(kv, tc))
+                key[k] = kv
+            elem_keys.append(key)
+            props = (
+                ast.MapLit([(k, ast.Var(kv)) for k, kv in key.items()])
+                if key
+                else None
+            )
+            i = n // 2
+            if n % 2:
+                els.append(replace(el, var=rel_vars[i], props=props))
+            else:
+                own = not bound[i] and canon[i] == i
+                els.append(
+                    ast.NodePattern(
+                        var=node_vars[i],
+                        labels=node_labels[i] if own else [],
+                        props=props,
+                    )
+                )
+        pattern = ast.Match(paths=[replace(m.path, elements=els)])
+        node_keys, rel_keys = elem_keys[0::2], elem_keys[1::2]
         df = df.localCheckpoint(eager=True)
-        tmp_cols = [
-            *(t for key in node_keys for t in key.values()),
-            *(t for key in rel_keys for t in key.values()),
-        ]
+        tmp_cols = [vcol(kv, "val") for key in elem_keys for kv in key.values()]
         bound_id_cols = sorted(
             {vcol(node_vars[i], "id") for i in range(len(nodes)) if bound[i]}
         )
@@ -4057,142 +4006,12 @@ class CypherToSpark:
             tmp_cols = ["__mg"]
             group_cols = ["__mg"]
 
-        def _left_col(j: int) -> str:
-            # hop j's endpoint at nodes[j] / nodes[j+1], honoring direction;
-            # undirected hops read the orientation-expanded pl/pr columns
-            if rels[j].direction == "both":
-                return vcol(rel_vars[j], "pl")
-            return vcol(rel_vars[j], "src" if rels[j].direction == "out" else "dst")
-
-        def _right_col(j: int) -> str:
-            if rels[j].direction == "both":
-                return vcol(rel_vars[j], "pr")
-            return vcol(rel_vars[j], "dst" if rels[j].direction == "out" else "src")
-
-        orient_cols = [
-            vcol(rel_vars[j], side)
-            for j, r in enumerate(rels)
-            if r.direction == "both"
-            for side in ("pl", "pr")
-        ]
-
-        def _pattern(base, rebind=False):
-            """base rows joined to every existing relationship-isomorphic
-            full-chain match whose element properties equal the row's
-            computed key values. Returns (joined, infos_to_bind); joined
-            is None when a relationship type has no table, unless
-            `rebind`, which stands an empty scan in for it so every
-            pattern variable is still bound (zero key tuples against a
-            type that was never created: zero rows out)."""
-            pat = base
-            infos = []
-            dead = False
-            cond_false = F.lit(False)
-            for j, r in enumerate(rels):
-                edf, rinfo, _ = self._edge_scan(
-                    rel_vars[j], [r.types[0]], "out", None, None
-                )
-                if edf is None:
-                    if not rebind:
-                        return None, []
-                    props = {
-                        k: df.schema[tmp].dataType
-                        for k, tmp in rel_keys[j].items()
-                    }
-                    edf = self.spark.createDataFrame(
-                        [],
-                        T.StructType(
-                            [
-                                T.StructField(vcol(rel_vars[j], c), T.StringType())
-                                for c in ("eid", "src", "dst", "type")
-                            ]
-                            + [
-                                T.StructField(pcol(rel_vars[j], k), t)
-                                for k, t in props.items()
-                            ]
-                        ),
-                    )
-                    rinfo = VarInfo(
-                        name=rel_vars[j], kind="edge", types=[r.types[0]],
-                        props=props,
-                    )
-                edf = edf.drop("__from", "__to")
-                if r.direction == "both":
-                    # undirected hop: expand to both orientations behind
-                    # canonical pl/pr endpoint columns (two hash-joinable
-                    # branches, not a disjunctive join condition);
-                    # self-loops match once (second orientation excluded)
-                    s, d = vcol(rel_vars[j], "src"), vcol(rel_vars[j], "dst")
-                    pl, pr = _left_col(j), _right_col(j)
-                    fwd = edf.withColumn(pl, F.col(s)).withColumn(pr, F.col(d))
-                    rev = (
-                        edf.withColumn(pl, F.col(d))
-                        .withColumn(pr, F.col(s))
-                        .where(F.col(s) != F.col(d))
-                    )
-                    edf = fwd.unionByName(rev)
-                conds = []
-                # chain to the previous hop through an unbound middle node
-                if j > 0 and not bound[j]:
-                    conds.append(F.col(_right_col(j - 1)) == F.col(_left_col(j)))
-                # bound endpoints tie directly to the base row
-                if bound[j]:
-                    conds.append(
-                        F.col(_left_col(j)) == F.col(vcol(node_vars[j], "id"))
-                    )
-                if bound[j + 1]:
-                    conds.append(
-                        F.col(_right_col(j)) == F.col(vcol(node_vars[j + 1], "id"))
-                    )
-                # relationship isomorphism vs every earlier hop
-                for j2 in range(j):
-                    conds.append(
-                        F.col(vcol(rel_vars[j], "eid"))
-                        != F.col(vcol(rel_vars[j2], "eid"))
-                    )
-                # edge property keys
-                for k, tmp in rel_keys[j].items():
-                    if k in rinfo.props:
-                        conds.append(F.col(pcol(rel_vars[j], k)) == F.col(tmp))
-                    else:
-                        dead = True
-                cond = None
-                for c_ in conds:
-                    cond = c_ if cond is None else cond & c_
-                pat = (
-                    pat.join(edf, cond) if cond is not None else pat.crossJoin(edf)
-                )
-                infos.append(rinfo)
-            for i, np_ in enumerate(nodes):
-                if bound[i]:
-                    continue
-                adj = _right_col(i - 1) if i > 0 else _left_col(0)
-                if canon[i] != i:
-                    # repeated unbound variable: its scan is already joined
-                    # at the first occurrence — this occurrence only pins
-                    # the adjacent edge endpoint to the SAME node id
-                    pat = pat.where(
-                        F.col(adj) == F.col(vcol(node_vars[i], "id"))
-                    )
-                    continue
-                nscan, ninfo = self._node_scan(node_vars[i], node_labels[i])
-                conds = []
-                # id equality with ONE adjacent edge endpoint (edges are
-                # already chained to each other / to base)
-                conds.append(F.col(adj) == F.col(vcol(node_vars[i], "id")))
-                for k, tmp in node_keys[i].items():
-                    if k in ninfo.props:
-                        conds.append(F.col(pcol(node_vars[i], k)) == F.col(tmp))
-                    else:
-                        dead = True
-                cond = None
-                for c_ in conds:
-                    cond = c_ if cond is None else cond & c_
-                pat = pat.join(nscan, cond)
-                infos.append(ninfo)
-            if dead:
-                pat = pat.where(cond_false)
-            return pat, infos
+        def match(rows: DataFrame) -> CompileState:
+            """rows joined to every existing full-chain match whose
+            element properties equal the row's key values"""
+            return self.compile_match(
+                CompileState(df=rows, scope=key_scope), pattern
+            )
 
         # a null bound endpoint (an OPTIONAL MATCH miss) merges nothing and
         # binds nothing: its tuples never reach the anti-join, and the
@@ -4207,14 +4026,15 @@ class CypherToSpark:
         # shuffle; otherwise the join keys are a strict subset of the
         # tuple, and joining the aggregate costs one more shuffle stage
         # (one more job under AQE) than joining the checkpointed rows
-        matched, _ = _pattern(all_tuples if all(bound) else live)
-        if matched is not None:
+        if all(self.catalog.edge_tables([r.types[0]]) for r in rels):
+            matched = match(all_tuples if all(bound) else live).require_df()
             have = matched.select(*group_cols).distinct()
             missing = all_tuples.join(have, on=group_cols, how="left_anti")
             matched_eids = matched.select(
                 F.col(vcol(rel_vars[0], "eid")).alias("_id")
             ).distinct()
         else:
+            # a relationship type with no table yet: nothing can match
             missing = all_tuples
             matched_eids = None
         created = missing
@@ -4239,14 +4059,14 @@ class CypherToSpark:
                 rows, on_create = self._fold_on_create(
                     VarInfo(
                         name=node_vars[i], kind="node", labels=node_labels[i],
-                        props={k: created.schema[t].dataType
-                               for k, t in node_keys[i].items()},
+                        props={k: created.schema[vcol(kv, "val")].dataType
+                               for k, kv in node_keys[i].items()},
                     ),
                     created.select(
                         F.col(new_node_cols[i]).alias("_id"),
                         *[
-                            F.col(tmp).alias(k)
-                            for k, tmp in node_keys[i].items()
+                            F.col(vcol(kv, "val")).alias(k)
+                            for k, kv in node_keys[i].items()
                         ],
                     ),
                     on_create,
@@ -4274,14 +4094,17 @@ class CypherToSpark:
                 rows, on_create = self._fold_on_create(
                     VarInfo(
                         name=rel_vars[j], kind="edge", types=[r.types[0]],
-                        props={k: created.schema[t].dataType
-                               for k, t in rel_keys[j].items()},
+                        props={k: created.schema[vcol(kv, "val")].dataType
+                               for k, kv in rel_keys[j].items()},
                     ),
                     created.select(
                         F.col(new_edge_cols[j]).alias("_id"),
                         F.col(src_col).alias("_src"),
                         F.col(dst_col).alias("_dst"),
-                        *[F.col(tmp).alias(k) for k, tmp in rel_keys[j].items()],
+                        *[
+                            F.col(vcol(kv, "val")).alias(k)
+                            for k, kv in rel_keys[j].items()
+                        ],
                     ),
                     on_create,
                 )
@@ -4292,12 +4115,14 @@ class CypherToSpark:
                     rows,
                 )
         # re-bind every row against the now-complete tables
-        joined, infos = _pattern(df, rebind=True)
-        joined = joined.drop(*tmp_cols, *orient_cols)
+        rebound = match(df)
         scope = state.scope.copy()
-        for info in infos:
-            scope.bind(info)
-        new_state = CompileState(df=joined, scope=scope)
+        for name, info in rebound.scope.vars.items():
+            if name not in key_scope:
+                scope.bind(info)
+        new_state = CompileState(
+            df=rebound.require_df().drop(*tmp_cols), scope=scope
+        )
         if on_create and not created_empty:
             new_state = self._apply_merge_sets(
                 new_state,
@@ -4334,13 +4159,18 @@ class CypherToSpark:
                     pos=getattr(self, "_clause_pos", None),
                 )
         df = state.require_df()
-        key_tmp = {}
-        for k, tc in props.items():
-            tmp = f"__mk_{k}"
-            df = df.withColumn(tmp, tc.col)
-            key_tmp[k] = tmp
+        # the key values are bound as value variables, read by the
+        # pattern's property map on the scans below
+        key_scope = state.scope.copy()
+        items: list[tuple[str, ast.Expr]] = []
+        for n, (k, tc) in enumerate(props.items()):
+            kv = f"__mk{n}"
+            df = df.withColumn(vcol(kv, "val"), tc.col)
+            key_scope.bind(self._val_info(kv, tc))
+            items.append((k, ast.Var(kv)))
+        key_cols = [vcol(kv.name, "val") for _, kv in items]
         n_input = None
-        if key_tmp:
+        if items:
             # the binding-row count rides the checkpoint as an Observation
             # (zero extra jobs) and row-gates the broadcast hints on every
             # key/id re-attach below — the checkpoint itself reports
@@ -4352,22 +4182,29 @@ class CypherToSpark:
                 obs, F.count(F.lit(1)).alias("__n")
             ).localCheckpoint(eager=True)
             n_input = obs.get["__n"]
-        table = self._merge_node_table(labels)
+        scan, info = self._node_scan(var, labels)
         key_names = list(props)
         key_types = {k: tc.dtype for k, tc in props.items()}
         created = None
         appended = False
         staged = None
-        if key_tmp:
-            keys = df.select(
-                *[F.col(tmp).alias(k) for k, tmp in key_tmp.items()]
-            ).distinct()
-            missing_keys = (
-                keys.join(table, on=key_names, how="left_anti")
-                if all(k in table.columns for k in key_names)
-                else keys
-            )
-            new_rows = missing_keys.withColumn("_id", F.expr("uuid()"))
+        if items:
+            keys = df.select(*key_cols).distinct()
+            if all(k in info.props for k in key_names):
+                on = functools.reduce(
+                    operator.and_,
+                    self._prop_conds(
+                        CompileState(df=df, scope=key_scope), info, items
+                    ),
+                )
+                missing_keys = keys.join(scan, on, "left_anti")
+                matched = scan.join(gated(keys, n_input), on, "left_semi")
+            else:  # a key no node carries yet: nothing matches
+                missing_keys = keys
+                matched = scan.where(F.lit(False))
+            new_rows = missing_keys.select(
+                *[F.col(c).alias(k) for c, k in zip(key_cols, key_names)]
+            ).withColumn("_id", F.expr("uuid()"))
             folded = (
                 self._fold_node_on_create(
                     var, label, new_rows, key_types, on_create
@@ -4409,7 +4246,7 @@ class CypherToSpark:
             else:
                 created, created_empty = self._checkpoint_created(
                     new_rows,
-                    list(key_tmp),
+                    key_names,
                     "Cannot merge node using null property value",
                 )
                 # refold over the CHECKPOINTED frame — the frozen uuids,
@@ -4431,9 +4268,9 @@ class CypherToSpark:
             # flag rides the created-set checkpoint via observe (round-9,
             # VERDICT r8 #2 — reference runs one transaction with no
             # pre-queries, src/executor.ts:446-456).
-            keys = None
+            matched = scan
             match_cnt = (
-                table.select("_id")
+                scan.select(vcol(var, "id"))
                 .limit(1)
                 .agg(F.count(F.lit(1)).alias("__match_n"))
             )
@@ -4459,74 +4296,36 @@ class CypherToSpark:
             # upsert storm); empty create sets skip the write entirely
             self.store.append_nodes(label, folded if folded is not None else created)
             self._merge_add_extra_labels(labels, created.select("_id"))
-        # ON CREATE / ON MATCH SET on the two disjoint id sets
-        created_ids = created.select("_id") if created is not None else None
-        if keys is None:
-            matched_ids = table.select("_id")
-        elif all(k in table.columns for k in key_names):
-            matched_ids = table.join(
-                self._gated(keys, n_input), on=key_names, how="left_semi"
-            ).select("_id")
-        else:
-            matched_ids = self.spark.createDataFrame(
-                [], T.StructType([T.StructField("_id", T.StringType())])
-            )
-        # bind var: join binding rows to the (now complete) table by keys.
-        # Unlabeled MERGE binds through the untyped scan (label column +
-        # spans-every-table VarInfo) so downstream SET/REMOVE reach the
-        # right label tables.
-        if labels:
-            matched_or_created = self._merge_node_table(labels)
-            node_scan = matched_or_created.select(
-                F.col("_id").alias(vcol(var, "id")),
-                *[
-                    F.col(c).alias(pcol(var, c))
-                    for c in matched_or_created.columns
-                    if c != "_id"
-                ],
-            )
-            prop_types = {
-                f.name: f.dataType
-                for f in matched_or_created.schema.fields
-                if f.name != "_id"
-            }
-            info = VarInfo(
-                name=var, kind="node", labels=labels, props=prop_types
-            )
-        else:
-            node_scan, info = self._node_scan(var, [])
-            prop_types = info.props
-        cond = None
-        dead = False
-        for k, tmp in key_tmp.items():
-            if pcol(var, k) not in node_scan.columns:
-                dead = True  # key prop exists nowhere: nothing can bind
-                continue
-            c = df[tmp] == node_scan[pcol(var, k)]
-            cond = c if cond is None else cond & c
-        out = (
-            df.join(node_scan, cond)
-            if cond is not None
-            else df.crossJoin(node_scan)
-        ).drop(*key_tmp.values())
-        if dead:
-            out = out.where(F.lit(False))
+        # bind var: join the binding rows to the (now complete) table by
+        # their keys. An unlabeled MERGE binds through the untyped scan, so
+        # downstream SET/REMOVE reach the right label tables.
+        rebound, _ = self._add_node(
+            CompileState(df=df, scope=key_scope),
+            ast.NodePattern(
+                var=var, labels=labels, props=ast.MapLit(items) if items else None
+            ),
+        )
         scope = state.scope.copy()
-        scope.bind(info)
-        new_state = CompileState(df=out, scope=scope)
+        scope.bind(rebound.scope.get(var))
+        new_state = CompileState(
+            df=rebound.require_df().drop(*key_cols), scope=scope
+        )
         if on_create and folded is None and not created_empty:
             new_state = self._apply_merge_sets(
                 new_state,
                 var,
-                self._gated(created_ids, self._last_created_n),
+                gated(created.select("_id"), self._last_created_n),
                 on_create,
             )
-        # matched_ids ≤ the distinct binding keys ≤ the observed input rows
+        # matched ids ≤ the distinct binding keys ≤ the observed input rows
         with (
             self.store.staged_append(**staged) if staged else contextlib.nullcontext()
         ):
             return self._apply_merge_sets(
-                new_state, var, self._gated(matched_ids, n_input), on_match
+                new_state,
+                var,
+                gated(matched.select(F.col(vcol(var, "id")).alias("_id")), n_input),
+                on_match,
             )
 
     def _fold_on_create(
@@ -4613,20 +4412,6 @@ class CypherToSpark:
         folded, rest = self._fold_on_create(info, rows, items)
         return None if rest else folded
 
-    # a materialized key/id set up to this many rows gets an explicit
-    # broadcast hint when re-attached by join: checkpointed frames report
-    # MaxValue plan stats, so the planner would otherwise shuffle BOTH
-    # sides of a probe whose build side is measurably tiny (same row-gated
-    # policy as durable_store._gated_keys; counts ride the checkpoint jobs
-    # as Observations, so the gate costs zero extra jobs). Oversized sets
-    # keep the planner's shuffle join — the correct corpus-scale shape.
-    _BROADCAST_KEYS_ROWS = 1_000_000
-
-    def _gated(self, df: DataFrame, n_rows: int | None) -> DataFrame:
-        if n_rows is not None and n_rows <= self._BROADCAST_KEYS_ROWS:
-            return F.broadcast(df)
-        return df
-
     def _checkpoint_created(
         self, frame: DataFrame, key_cols: list[str], err: str
     ) -> tuple[DataFrame, bool]:
@@ -4638,7 +4423,7 @@ class CypherToSpark:
         runtime MERGE-null check (reference src/translator.ts:829-842).
 
         The measured row count is kept on ``self._last_created_n`` for
-        broadcast gating by the caller (``_gated``)."""
+        broadcast gating by the caller (``graph_store.gated``)."""
         from pyspark.sql import Observation
 
         from nicefox_graphdb_spark.graph_store import (

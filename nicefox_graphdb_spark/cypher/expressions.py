@@ -275,18 +275,6 @@ _DUR_KEYS = {
 }
 
 
-def _dur_intervals(dc: Column) -> tuple[Column, Column]:
-    """(year-month interval, day-time interval) halves of a duration struct."""
-    ym = F.make_ym_interval(F.lit(0), dc.getField("__dmo").cast("int"))
-    dt = F.make_dt_interval(
-        dc.getField("__dd").cast("int"),
-        F.lit(0),
-        F.lit(0),
-        (dc.getField("__dus") / F.lit(1_000_000)).cast("decimal(18,6)"),
-    )
-    return ym, dt
-
-
 def _tag_value(tc: "TypedCol") -> Column:
     """Encode a typed value as a tagged-variant struct (see _TAGGED_T)."""
     cat = _order_category(tc.dtype)

@@ -399,27 +399,6 @@ class Parser:
             limit=limit,
         )
 
-    def _at_clause_boundary(self) -> bool:
-        return self.peek().type == "eof" or self.at_kw(
-            "MATCH",
-            "OPTIONAL",
-            "WHERE",
-            "WITH",
-            "RETURN",
-            "UNWIND",
-            "CREATE",
-            "MERGE",
-            "SET",
-            "REMOVE",
-            "DELETE",
-            "DETACH",
-            "ORDER",
-            "SKIP",
-            "LIMIT",
-            "UNION",
-            "CALL",
-        )
-
     def parse_return_item(self) -> ast.ReturnItem:
         expr = self.parse_expr()
         alias = None

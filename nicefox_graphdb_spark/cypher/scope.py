@@ -108,9 +108,3 @@ class Scope:
 
     def copy(self) -> "Scope":
         return Scope(vars=dict(self.vars))
-
-    def all_columns(self) -> list[str]:
-        out: list[str] = []
-        for info in self.vars.values():
-            out.extend(info.columns())
-        return out

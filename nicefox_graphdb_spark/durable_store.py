@@ -80,6 +80,7 @@ from nicefox_graphdb_spark.commit_plane import LocalCommitPlane
 from nicefox_graphdb_spark.graph_store import (
     CypherRuntimeError,
     MutableGraph,
+    gated,
     null_metrics,
 )
 
@@ -799,7 +800,7 @@ class DurableGraph(MutableGraph):
         return [
             i for i, et in enumerate(self.catalog._edges)
             if not et.df.select("_id").join(
-                self._gated_keys(keys, n_keys), on="_id", how="left_semi"
+                gated(keys, n_keys), on="_id", how="left_semi"
             ).isEmpty()
         ]
 
@@ -957,7 +958,7 @@ class DurableGraph(MutableGraph):
         self._bump()  # persist multi_label_dirty past the inner commit
 
     def _drop_ids(self, idcol: DataFrame, n_ids: int):
-        keys = self._gated_keys(idcol, n_ids)
+        keys = gated(idcol, n_ids)
         return lambda key, rows: {
             "replace": rows.join(keys, on="_id", how="left_anti")
         }
@@ -996,7 +997,7 @@ class DurableGraph(MutableGraph):
                 # the membership probe job
                 len(labels) > 1
                 and self.catalog.node(label).df.select("_id")
-                .join(self._gated_keys(idcol, n_ids), on="_id", how="left_semi")
+                .join(gated(idcol, n_ids), on="_id", how="left_semi")
                 .isEmpty()
             ):
                 continue  # label holds none of the ids: no adopt, no rewrite
@@ -1004,8 +1005,8 @@ class DurableGraph(MutableGraph):
         if detach:
             # edges bucket by edge _id, endpoints are the predicate: one
             # scan per table finds which buckets hold incident edges
-            src_keys = self._gated_keys(idcol.withColumnRenamed("_id", "_src"), n_ids)
-            dst_keys = self._gated_keys(idcol.withColumnRenamed("_id", "_dst"), n_ids)
+            src_keys = gated(idcol.withColumnRenamed("_id", "_src"), n_ids)
+            dst_keys = gated(idcol.withColumnRenamed("_id", "_dst"), n_ids)
 
             def detached(key: str, rows: DataFrame) -> dict:
                 return {"replace": rows.join(src_keys, on="_src", how="left_anti")

@@ -57,6 +57,26 @@ def null_metrics(cols) -> list:
     return [F.max(anynull).alias("__has_null")]
 
 
+# A materialized key or id set of up to this many rows is broadcast when a
+# join re-attaches it: a delete set's dangling probe and per-table
+# anti-joins, a durable rewrite's membership probes, a MERGE's key and id
+# re-attaches. Above it the planner's shuffle join stands, so a corpus-scale
+# set degrades instead of breaking the 8 GB broadcast limit. Bare 16-char
+# ids: 1M rows is tens of MB.
+BROADCAST_KEYS_ROWS = 1_000_000
+
+
+def gated(keys: DataFrame, n_rows: int | None) -> DataFrame:
+    """Row-gated broadcast hint for a materialized key set: hint only when
+    the measured count (an Observation riding the set's checkpoint job) is
+    known small. Checkpointed frames report MaxValue stats, so the planner
+    would otherwise shuffle both sides; unknown or large counts leave the
+    planner's join standing."""
+    if n_rows is not None and n_rows <= BROADCAST_KEYS_ROWS:
+        return F.broadcast(keys)
+    return keys
+
+
 _CHECKPOINT_EVERY = 8
 
 
@@ -339,12 +359,6 @@ class MutableGraph:
         if probe is not None and not probe.isEmpty():
             raise CypherRuntimeError(self._DANGLING_ERR)
 
-    # Delete sets up to this many ids broadcast for the dangling probe and
-    # the per-table anti-joins; above it the planner's shuffle join stands
-    # (an 8 GB-broadcast-breaking plain DELETE must degrade, not OOM —
-    # ADVICE r10). Bare 16-char ids: 1M rows ≈ tens of MB broadcast.
-    BROADCAST_DELETE_ROWS = 1_000_000
-
     def _dangling_probe(
         self, idcol: DataFrame, n_rows: int | None = None
     ) -> DataFrame | None:
@@ -368,17 +382,8 @@ class MutableGraph:
         for p in endpoint_parts[1:]:
             endpoints = endpoints.unionByName(p)
         return endpoints.join(
-            self._gated_keys(idcol, n_rows), on="_id", how="left_semi"
+            gated(idcol, n_rows), on="_id", how="left_semi"
         )
-
-    def _gated_keys(self, keys: DataFrame, n_rows: int | None) -> DataFrame:
-        """Row-gated broadcast hint for a materialized key set: hint only
-        when the measured count is known small (checkpointed frames report
-        MaxValue stats, so the planner would otherwise shuffle both sides);
-        unknown or large counts leave the planner's join standing."""
-        if n_rows is not None and n_rows <= self.BROADCAST_DELETE_ROWS:
-            return F.broadcast(keys)
-        return keys
 
     def delete_nodes(self, ids: DataFrame, detach: bool = False) -> None:
         from pyspark.sql import Observation

@@ -35,6 +35,11 @@ from nicefox_graphdb_spark.operators.common import (  # noqa: E402
     spread_scan as _spread_scan,
 )
 
+# A verify side of up to this many rows (the corpus, counted on its
+# checkpoint) is broadcast when the candidate pairs re-attach their
+# shingle arrays; larger corpora keep the planner's join.
+BROADCAST_VERIFY_ROWS = 200_000
+
 
 # -- shingling -------------------------------------------------------------
 def char_shingles(col: Column, n: int = 5) -> Column:
@@ -79,7 +84,6 @@ def jaccard_pairs(
     shingles_col: Column,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
-    broadcast_verify_rows: int = 200_000,
 ) -> DataFrame:
     """Pairs (id_a < id_b) with shingle-set Jaccard >= threshold.
 
@@ -230,7 +234,7 @@ def jaccard_pairs(
     full_b = base.select(
         F.col("id").alias("id_b"), F.col("hsh").alias("h_b"), F.col("sz").alias("zb")
     )
-    if n_base <= broadcast_verify_rows:
+    if n_base <= BROADCAST_VERIFY_ROWS:
         # low thresholds generate candidates >> corpus rows (measured 495k
         # candidates for 5k docs at t=0.2). AQE does rescue this join at
         # runtime (SMJ→BHJ from actual shuffle sizes — interleaved A/B at
@@ -271,7 +275,6 @@ def minhash_lsh_pairs(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.6,
-    broadcast_verify_rows: int = 200_000,
 ) -> DataFrame:
     """MinHash candidates via banding, verified with exact Jaccard.
 
@@ -351,7 +354,7 @@ def minhash_lsh_pairs(
     full_b = base.select(
         F.col("id").alias("id_b"), F.col("hsh").alias("h_b"), F.col("sz").alias("zb")
     )
-    if n_base <= broadcast_verify_rows:
+    if n_base <= BROADCAST_VERIFY_ROWS:
         # map-side re-attach of the shingle arrays (see jaccard_pairs —
         # checkpointed plan stats are MaxValue, AQE can't pick this alone)
         full_a, full_b = F.broadcast(full_a), F.broadcast(full_b)

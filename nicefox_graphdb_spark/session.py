@@ -45,6 +45,22 @@ def local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def driver_memory() -> str:
+    """Driver heap for a session (``spark.driver.memory``):
+    ``NICEFOX_DRIVER_MEM`` when set, else half of this process's share of
+    the host's physical memory, capped at 8g. The share is the share of
+    the host's CPUs it runs on (``local_cpus()`` / ``os.cpu_count()``): in
+    ``local[N]`` mode one heap holds the whole engine, so processes
+    sharing a host divide its memory the way they divide its cores. Half,
+    because the heap is not the whole process: off-heap buffers, the
+    Python driver and its workers take the rest."""
+    if os.environ.get("NICEFOX_DRIVER_MEM"):
+        return os.environ["NICEFOX_DRIVER_MEM"]
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    share_mb = phys_mb * local_cpus() // (2 * (os.cpu_count() or 1))
+    return f"{min(share_mb, 8192)}m"
+
+
 def get_spark(
     app_name: str = "nicefox-graphdb-spark",
     master: str | None = None,
@@ -94,6 +110,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # sized to the measured codegen working set (module docstring)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.driver.memory", os.environ.get("NICEFOX_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
     )
     return builder.getOrCreate()

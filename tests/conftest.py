@@ -23,6 +23,14 @@ def engine(spark, catalog):
     return CypherEngine(spark, catalog)
 
 
+@pytest.fixture()
+def g(spark):
+    """A fresh, empty in-memory mutable graph."""
+    from nicefox_graphdb_spark.catalog import GraphCatalog
+
+    return CypherEngine(spark, GraphCatalog(spark), mutable=True)
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
     from nicefox_graphdb_spark.sources import read_tables

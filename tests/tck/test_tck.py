@@ -3,7 +3,11 @@
 Every ``features/*.feature`` scenario runs against a fresh empty mutable
 graph. Scenarios listed in ``known_failing.txt`` are expected failures
 (xfail) — the conformance bar is everything else passing, mirroring the
-reference's pass-list discipline (test/tck/failing-tests.ts)."""
+reference's pass-list discipline (test/tck/failing-tests.ts).
+
+The full corpus is the opt-in ``tck`` tier (``pytest -m tck``); the default
+tier runs the first scenario of each feature file, so every feature keeps
+a conformance signal there."""
 
 from __future__ import annotations
 
@@ -27,7 +31,8 @@ FEATURE_DIR = os.path.join(os.path.dirname(__file__), "features")
 KNOWN_FAILING_PATH = os.path.join(os.path.dirname(__file__), "known_failing.txt")
 
 
-def _load_scenarios():
+def _load_features():
+    """Each feature file's scenarios, in file-name order."""
     # NICEFOX_TCK_SHARD="i/n" runs only every n-th feature file (offset i):
     # lets CI-style drivers split the corpus across parallel pytest
     # processes (each with its own SparkSession) without -k gymnastics
@@ -38,7 +43,7 @@ def _load_scenarios():
         if not fn.endswith(".feature") or j % mod != idx:
             continue
         with open(os.path.join(FEATURE_DIR, fn)) as f:
-            out.extend(parse_feature(f.read(), fn[:-8]))
+            out.append(parse_feature(f.read(), fn[:-8]))
     return out
 
 
@@ -53,7 +58,10 @@ def _known_failing() -> set[str]:
         }
 
 
-SCENARIOS = _load_scenarios()
+FEATURES = _load_features()
+SCENARIOS = [sc for feature in FEATURES for sc in feature]
+# the default tier's conformance slice: every feature file's first scenario
+FIRST_SCENARIOS = [feature[0] for feature in FEATURES if feature]
 KNOWN_FAILING = _known_failing()
 
 
@@ -85,6 +93,17 @@ def _norm_rows(rows: list[dict]) -> list:
 @pytest.mark.tck
 @pytest.mark.parametrize("sc", SCENARIOS, ids=[s.id for s in SCENARIOS])
 def test_tck_scenario(sc, spark):
+    _run_scenario(sc, spark)
+
+
+@pytest.mark.parametrize(
+    "sc", FIRST_SCENARIOS, ids=[s.id for s in FIRST_SCENARIOS]
+)
+def test_tck_feature_first_scenario(sc, spark):
+    _run_scenario(sc, spark)
+
+
+def _run_scenario(sc, spark):
     if sc.id in KNOWN_FAILING:
         pytest.xfail("listed in known_failing.txt")
     from nicefox_graphdb_spark import CypherEngine

@@ -1,12 +1,12 @@
 """Regression tests for round-2 semantic fixes (ADVICE.md r1):
 
-1. var-length relationship property filters apply to every edge in the path
-   (reference translator.ts edgePropConditions)
-2. LIMIT-bound traversal cap disabled when the right node var is pre-bound
-3. plain DELETE of a node with live relationships raises
-   (reference src/executor.ts:10162)
-4. OPTIONAL MATCH WHERE can reference outer value variables
-5. undirected patterns match a self-loop edge once (Neo4j semantics)
+- plain DELETE of a node with live relationships raises
+  (reference src/executor.ts:10162)
+- OPTIONAL MATCH WHERE can reference outer value variables
+
+The MATCH fixes of that round (var-length edge property filters, the
+LIMIT-bound cap, undirected self-loops, named-path elision) live in
+test_read_core.py, the MERGE and CREATE ones in test_writes.py.
 """
 
 import pytest
@@ -14,39 +14,6 @@ import pytest
 from nicefox_graphdb_spark import CypherEngine
 from nicefox_graphdb_spark.catalog import GraphCatalog
 from nicefox_graphdb_spark.graph_store import CypherRuntimeError
-
-
-@pytest.fixture()
-def g(spark):
-    return CypherEngine(spark, GraphCatalog(spark), mutable=True)
-
-
-def test_var_length_edge_props_filter_every_hop(g):
-    g.query("CREATE (a:N {name: 'a'})-[:T {w: 1}]->(b:N {name: 'b'})")
-    g.query(
-        "MATCH (b:N {name: 'b'}) CREATE (b)-[:T {w: 2}]->(c:N {name: 'c'})"
-    )
-    rows = g.query(
-        "MATCH (x:N {name: 'a'})-[:T*1..2 {w: 1}]->(y) "
-        "RETURN y.name AS name ORDER BY name"
-    )
-    # only the w=1 edge participates: reach b, NOT c (c needs the w=2 edge)
-    assert rows == [{"name": "b"}]
-    rows_all = g.query(
-        "MATCH (x:N {name: 'a'})-[:T*1..2]->(y) RETURN y.name AS name ORDER BY name"
-    )
-    assert rows_all == [{"name": "b"}, {"name": "c"}]
-
-
-def test_limit_bound_disabled_for_bound_right_var(g):
-    from nicefox_graphdb_spark.cypher.compiler import CypherToSpark
-    from nicefox_graphdb_spark.cypher.parser import parse
-
-    compiler = CypherToSpark(g.spark, g.catalog)
-    bound_q = parse("MATCH (a)-[:T*1..5]->(a) RETURN a LIMIT 3")
-    assert compiler._limit_bound_for_traversal(bound_q) is None
-    free_q = parse("MATCH (a)-[:T*1..5]->(b) RETURN b LIMIT 3")
-    assert compiler._limit_bound_for_traversal(free_q) == 30
 
 
 def test_delete_with_relationships_raises(g):
@@ -89,17 +56,6 @@ def test_labels_full_membership_after_set_label(g):
     assert g.query("MATCH (n:Admin) RETURN join(labels(n), '|') AS ls") == [
         {"ls": "Admin|Person"}
     ]
-
-
-def test_undirected_self_loop_matches_once(g):
-    g.query("CREATE (a:N {name: 'a'})")
-    g.query("MATCH (a:N) CREATE (a)-[:T]->(a)")
-    rows = g.query("MATCH (a:N)-[:T]-(x) RETURN count(*) AS c")
-    assert rows == [{"c": 1}]
-    # a normal (non-loop) edge still matches in both orientations
-    g.query("CREATE (p:M {name: 'p'})-[:U]->(q:M {name: 'q'})")
-    rows2 = g.query("MATCH (m:M)-[:U]-(x) RETURN count(*) AS c")
-    assert rows2 == [{"c": 2}]
 
 
 # --- round-4 fixes (ADVICE.md r3) ---------------------------------------
@@ -157,21 +113,6 @@ def test_entity_comprehension_where_keeps_empty_rows(g):
 # ---------------------------------------------------------------------------
 # round-5 regressions (ADVICE.md r4)
 # ---------------------------------------------------------------------------
-
-
-def test_named_path_endpoint_props_survive_elision(g):
-    # endpoints reachable only through nodes(p) must not be join-elided:
-    # the comprehension reads their property columns (ADVICE r4 #1)
-    g.query("CREATE (:PA {name: 'Alice'})-[:PR]->(:PB {name: 'Bob'})")
-    rows = g.query(
-        "MATCH p = (a:PA)-[r:PR]->(b) RETURN [n IN nodes(p) | n.name] AS names"
-    )
-    assert rows == [{"names": ["Alice", "Bob"]}]
-    rows2 = g.query(
-        "MATCH p = (a:PA)-[r:PR]->(b) "
-        "RETURN all(n IN nodes(p) WHERE n.name IS NOT NULL) AS ok"
-    )
-    assert rows2 == [{"ok": True}]
 
 
 def test_plan_cache_distinguishes_param_types(g):
@@ -242,21 +183,6 @@ def test_snapshot_includes_unlabeled_nodes(g, tmp_path):
         "MATCH (n) WHERE size(labels(n)) = 0 RETURN n.name AS name"
     )
     assert rows_bare == [{"name": "bare"}]
-
-
-def test_uncorrelated_multihop_merge_zero_input_rows(g):
-    """ADVICE r6 #2: MERGE runs per input row — a preceding MATCH with
-    zero rows must create NOTHING and return zero rows."""
-    g.query("CREATE (:Seed {k: 1})")
-    rows = g.query(
-        "MATCH (s:Nope) MERGE (a:A)-[:X]->(b:B)-[:Y]->(c:C) RETURN a, b, c"
-    )
-    assert rows == []
-    assert g.query("MATCH (n:A) RETURN count(*) AS c") == [{"c": 0}]
-    assert g.query("MATCH ()-[r:X]->() RETURN count(*) AS c") == [{"c": 0}]
-    # sanity: with one input row the same MERGE creates the chain once
-    g.query("MATCH (s:Seed) MERGE (a:A)-[:X]->(b:B)-[:Y]->(c:C)")
-    assert g.query("MATCH (n:A) RETURN count(*) AS c") == [{"c": 1}]
 
 
 def test_collect_distinct_skips_unmatched_optional(g):

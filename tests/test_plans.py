@@ -258,6 +258,26 @@ def test_local_cpus_default(monkeypatch):
     assert local_cpus() == 3
 
 
+def test_driver_memory_default(monkeypatch):
+    # unset, the driver heap is half of this process's CPU share of the
+    # host's memory, capped at 8g; starts no session
+    import os
+
+    from nicefox_graphdb_spark.session import driver_memory
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (16 << 30) // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    monkeypatch.setattr(os, "cpu_count", lambda: 8)
+    monkeypatch.delenv("NICEFOX_DRIVER_MEM", raising=False)
+    for cpus, heap in (("2", "2048m"), ("4", "4096m"), ("8", "8192m")):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        assert driver_memory() == heap
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+    assert driver_memory() == "8192m"  # 16g / 2: capped
+    monkeypatch.setenv("NICEFOX_DRIVER_MEM", "2g")
+    assert driver_memory() == "2g"
+
+
 def test_var_length_read_job_budget(engine, spark):
     # a keyed var-length read, compile + collect. Every hop is one cut
     # with its row count riding it, so no count or isEmpty probe re-runs a
@@ -384,17 +404,15 @@ def test_decontaminate_plans_no_expand(spark):
 
 def test_gated_keys_hint_is_row_gated(spark):
     # ADVICE r10 symmetry: every durable membership/anti-join probe routes
-    # through GraphStore._gated_keys — hint only below the row gate, the
+    # through graph_store.gated — hint only below the row gate, the
     # planner's join above it (checkpointed key sets report MaxValue stats,
     # so an unconditional hint risks the 8 GB broadcast limit).
-    from nicefox_graphdb_spark.catalog import GraphCatalog
-    from nicefox_graphdb_spark.graph_store import MutableGraph
+    from nicefox_graphdb_spark.graph_store import BROADCAST_KEYS_ROWS, gated
 
-    store = MutableGraph(spark, GraphCatalog(spark))
     keys = spark.range(3).selectExpr("cast(id as string) AS _id")
-    hinted = store._gated_keys(keys, 3)
-    unhinted_big = store._gated_keys(keys, store.BROADCAST_DELETE_ROWS + 1)
-    unhinted_unknown = store._gated_keys(keys, None)
+    hinted = gated(keys, 3)
+    unhinted_big = gated(keys, BROADCAST_KEYS_ROWS + 1)
+    unhinted_unknown = gated(keys, None)
     def hints(df):
         return df._jdf.queryExecution().analyzed().toString().count("Hint")
 
@@ -434,3 +452,22 @@ def test_durable_statement_job_budgets(spark, tmp_path):
     for tag, (fn, budget) in budgets.items():
         n = _jobs_during(spark, fn, tag)
         assert n <= budget, f"{tag} scheduled {n} jobs (budget {budget})"
+
+
+def test_merge_chain_plans_no_cartesian_product(spark):
+    # relationship MERGE matches and re-binds through the MATCH compiler: a
+    # bound node in the middle of the chain and a key read from an UNWIND
+    # variable both plan as equi-joins, on the creating run and the
+    # matching rerun
+    eng = _mini_write_engine(spark)
+    eng.query("CREATE (:B {k: 4})")
+    for q in (
+        "MATCH (b:B) MERGE (a:A)-[:X]->(b)-[:Y]->(c:C) RETURN a, c",
+        "UNWIND [1, 2] AS k MERGE (a:A {k: k})-[:X]->(b:B) RETURN a, b",
+    ):
+        for run in ("create", "match"):
+            df = eng.dataframe(q)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            for op in ("CartesianProduct", "BroadcastNestedLoopJoin"):
+                assert op not in plan, f"{run}: {q}\n{plan}"

@@ -102,15 +102,3 @@ def test_quality_and_langid_match_unbound_forms(spark, docs):
         tx.quality_score(F.col("text")).alias("opt"), naive.alias("naive")
     ).collect()
     assert all(r["opt"] == r["naive"] for r in rows)
-
-
-def test_write_only_result_is_single_partition(spark, tmp_path):
-    from nicefox_graphdb_spark import CypherEngine
-    from nicefox_graphdb_spark.catalog import GraphCatalog
-
-    eng = CypherEngine(spark, GraphCatalog(spark), mutable=True)
-    df = eng.dataframe("CREATE (:P {x: 1})")
-    # the write-only empty result must stay <=1 partition: at 32 empty
-    # partitions its collect was a 32-task no-op job per statement (r11)
-    assert df.rdd.getNumPartitions() <= 1
-    assert df.count() == 0

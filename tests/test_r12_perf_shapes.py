@@ -1,11 +1,11 @@
 """Pins for the r12 optimization internals (OPTIMIZATION_r12.md).
 
 - the candidate dedup + verify-spread fusion (ONE pair-key exchange where
-  r11 had dropDuplicates' exchange PLUS a round-robin respread);
-- the terminal durable CREATE's single write action.
+  r11 had dropDuplicates' exchange PLUS a round-robin respread).
 
 Pagerank's co-partitioned superstep and the reliable-checkpoint knob are
-pinned in test_graph_algos.py.
+pinned in test_graph_algos.py, the terminal durable CREATE's single write
+action in test_writes.py.
 """
 
 from __future__ import annotations
@@ -46,46 +46,3 @@ def test_jaccard_dedup_and_spread_share_one_exchange(spark, docs):
     assert "RepartitionByExpression [id_a" in plan, plan
     # ...and NO round-robin repartition left anywhere in the pipeline
     assert "Repartition " not in plan, plan
-
-
-def test_terminal_durable_create_is_single_action(spark, tmp_path):
-    """r12: a terminal single-node CREATE against the durable store skips
-    the uuid-freezing checkpoint — the append write materializes the ids
-    (one Spark job instead of two), and the stored ids are stable."""
-    from nicefox_graphdb_spark import CypherEngine
-    from nicefox_graphdb_spark.catalog import GraphCatalog
-
-    eng = CypherEngine(
-        spark, GraphCatalog(spark), data_path=str(tmp_path / "g"), n_buckets=8
-    )
-    eng.query("UNWIND range(0, 9) AS i CREATE (:Fc {k: i})")  # warm compile
-
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    j0 = jsc.dagScheduler().nextJobId()
-    eng.query("UNWIND range(10, 19) AS i CREATE (:Fc {k: i})")
-    n_jobs = jsc.dagScheduler().nextJobId() - j0
-    assert n_jobs <= 2, f"terminal durable CREATE scheduled {n_jobs} jobs"
-    # ids frozen in the table: two reads agree
-    a = {r["id"]: r["k"] for r in eng.query(
-        "MATCH (n:Fc) RETURN id(n) AS id, n.k AS k")}
-    b = {r["id"]: r["k"] for r in eng.query(
-        "MATCH (n:Fc) RETURN id(n) AS id, n.k AS k")}
-    assert a == b and len(a) == 20
-
-
-def test_nonterminal_create_still_freezes_ids(spark, tmp_path):
-    """A CREATE whose binding is consumed by a later clause must keep the
-    checkpoint: the returned ids must equal the stored ids."""
-    from nicefox_graphdb_spark import CypherEngine
-    from nicefox_graphdb_spark.catalog import GraphCatalog
-
-    eng = CypherEngine(
-        spark, GraphCatalog(spark), data_path=str(tmp_path / "g2"), n_buckets=8
-    )
-    returned = eng.query(
-        "UNWIND range(0, 4) AS i CREATE (n:Fz {k: i}) "
-        "RETURN id(n) AS id ORDER BY id"
-    )
-    stored = eng.query("MATCH (n:Fz) RETURN id(n) AS id ORDER BY id")
-    assert [r["id"] for r in returned] == [r["id"] for r in stored]

@@ -432,3 +432,79 @@ class TestCorrelatedPropertyMap:
             "WITH 3 AS j MATCH (a:Acct {id: 1})-[:PAYS*1..2]->(b:Acct {id: j}) "
             "RETURN count(*) AS paths"
         ) == [{"paths": 2}]
+
+
+def test_var_length_edge_props_filter_every_hop(g):
+    g.query("CREATE (a:N {name: 'a'})-[:T {w: 1}]->(b:N {name: 'b'})")
+    g.query(
+        "MATCH (b:N {name: 'b'}) CREATE (b)-[:T {w: 2}]->(c:N {name: 'c'})"
+    )
+    rows = g.query(
+        "MATCH (x:N {name: 'a'})-[:T*1..2 {w: 1}]->(y) "
+        "RETURN y.name AS name ORDER BY name"
+    )
+    # only the w=1 edge participates: reach b, NOT c (c needs the w=2 edge)
+    assert rows == [{"name": "b"}]
+    rows_all = g.query(
+        "MATCH (x:N {name: 'a'})-[:T*1..2]->(y) RETURN y.name AS name ORDER BY name"
+    )
+    assert rows_all == [{"name": "b"}, {"name": "c"}]
+
+
+def test_limit_bound_disabled_for_bound_right_var(g):
+    from nicefox_graphdb_spark.cypher.compiler import CypherToSpark
+    from nicefox_graphdb_spark.cypher.parser import parse
+
+    compiler = CypherToSpark(g.spark, g.catalog)
+    bound_q = parse("MATCH (a)-[:T*1..5]->(a) RETURN a LIMIT 3")
+    assert compiler._limit_bound_for_traversal(bound_q) is None
+    free_q = parse("MATCH (a)-[:T*1..5]->(b) RETURN b LIMIT 3")
+    assert compiler._limit_bound_for_traversal(free_q) == 30
+
+
+def test_undirected_self_loop_matches_once(g):
+    g.query("CREATE (a:N {name: 'a'})")
+    g.query("MATCH (a:N) CREATE (a)-[:T]->(a)")
+    rows = g.query("MATCH (a:N)-[:T]-(x) RETURN count(*) AS c")
+    assert rows == [{"c": 1}]
+    # a normal (non-loop) edge still matches in both orientations
+    g.query("CREATE (p:M {name: 'p'})-[:U]->(q:M {name: 'q'})")
+    rows2 = g.query("MATCH (m:M)-[:U]-(x) RETURN count(*) AS c")
+    assert rows2 == [{"c": 2}]
+
+
+def test_named_path_endpoint_props_survive_elision(g):
+    # endpoints reachable only through nodes(p) must not be join-elided:
+    # the comprehension reads their property columns (ADVICE r4 #1)
+    g.query("CREATE (:PA {name: 'Alice'})-[:PR]->(:PB {name: 'Bob'})")
+    rows = g.query(
+        "MATCH p = (a:PA)-[r:PR]->(b) RETURN [n IN nodes(p) | n.name] AS names"
+    )
+    assert rows == [{"names": ["Alice", "Bob"]}]
+    rows2 = g.query(
+        "MATCH p = (a:PA)-[r:PR]->(b) "
+        "RETURN all(n IN nodes(p) WHERE n.name IS NOT NULL) AS ok"
+    )
+    assert rows2 == [{"ok": True}]
+
+
+@pytest.mark.parametrize(
+    "far, expected",
+    [
+        ("(b:B {x: 1})", {"l": ["B"], "x": 1}),
+        ("(b:C)", {"l": ["C"], "x": 1}),
+        ("(b {x: 2})", {"l": ["B"], "x": 2}),
+    ],
+)
+def test_var_length_bound_far_node_keeps_labels_and_props(g, far, expected):
+    # a var-length hop onto an already-bound node applies the pattern's
+    # labels and property map, like the fixed-length hop does
+    g.query(
+        "CREATE (a:A {n: 1})-[:T]->(b:B {x: 1}), (a)-[:T]->(c:B {x: 2}), "
+        "(a)-[:T]->(d:C {x: 1})"
+    )
+    rows = g.query(
+        f"MATCH (a:A), (b) MATCH (a)-[:T*1..2]->{far} "
+        "RETURN labels(b) AS l, b.x AS x"
+    )
+    assert rows == [expected]

@@ -708,3 +708,73 @@ def test_collect_distinct_entity_branch_dedups_by_identity(wengine):
     ):
         lst = wengine.query(q)[0]["l"]
         assert sorted(d["name"] for d in lst) == ["x", "x", "y"], q
+
+
+def test_uncorrelated_multihop_merge_zero_input_rows(g):
+    """ADVICE r6 #2: MERGE runs per input row — a preceding MATCH with
+    zero rows must create NOTHING and return zero rows."""
+    g.query("CREATE (:Seed {k: 1})")
+    rows = g.query(
+        "MATCH (s:Nope) MERGE (a:A)-[:X]->(b:B)-[:Y]->(c:C) RETURN a, b, c"
+    )
+    assert rows == []
+    assert g.query("MATCH (n:A) RETURN count(*) AS c") == [{"c": 0}]
+    assert g.query("MATCH ()-[r:X]->() RETURN count(*) AS c") == [{"c": 0}]
+    # sanity: with one input row the same MERGE creates the chain once
+    g.query("MATCH (s:Seed) MERGE (a:A)-[:X]->(b:B)-[:Y]->(c:C)")
+    assert g.query("MATCH (n:A) RETURN count(*) AS c") == [{"c": 1}]
+
+
+def test_terminal_durable_create_is_single_action(spark, tmp_path):
+    """r12: a terminal single-node CREATE against the durable store skips
+    the uuid-freezing checkpoint — the append write materializes the ids
+    (one Spark job instead of two), and the stored ids are stable."""
+    from nicefox_graphdb_spark import CypherEngine
+    from nicefox_graphdb_spark.catalog import GraphCatalog
+
+    eng = CypherEngine(
+        spark, GraphCatalog(spark), data_path=str(tmp_path / "g"), n_buckets=8
+    )
+    eng.query("UNWIND range(0, 9) AS i CREATE (:Fc {k: i})")  # warm compile
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    j0 = jsc.dagScheduler().nextJobId()
+    eng.query("UNWIND range(10, 19) AS i CREATE (:Fc {k: i})")
+    n_jobs = jsc.dagScheduler().nextJobId() - j0
+    assert n_jobs <= 2, f"terminal durable CREATE scheduled {n_jobs} jobs"
+    # ids frozen in the table: two reads agree
+    a = {r["id"]: r["k"] for r in eng.query(
+        "MATCH (n:Fc) RETURN id(n) AS id, n.k AS k")}
+    b = {r["id"]: r["k"] for r in eng.query(
+        "MATCH (n:Fc) RETURN id(n) AS id, n.k AS k")}
+    assert a == b and len(a) == 20
+
+
+def test_nonterminal_create_still_freezes_ids(spark, tmp_path):
+    """A CREATE whose binding is consumed by a later clause must keep the
+    checkpoint: the returned ids must equal the stored ids."""
+    from nicefox_graphdb_spark import CypherEngine
+    from nicefox_graphdb_spark.catalog import GraphCatalog
+
+    eng = CypherEngine(
+        spark, GraphCatalog(spark), data_path=str(tmp_path / "g2"), n_buckets=8
+    )
+    returned = eng.query(
+        "UNWIND range(0, 4) AS i CREATE (n:Fz {k: i}) "
+        "RETURN id(n) AS id ORDER BY id"
+    )
+    stored = eng.query("MATCH (n:Fz) RETURN id(n) AS id ORDER BY id")
+    assert [r["id"] for r in returned] == [r["id"] for r in stored]
+
+
+def test_write_only_result_is_single_partition(spark, tmp_path):
+    from nicefox_graphdb_spark import CypherEngine
+    from nicefox_graphdb_spark.catalog import GraphCatalog
+
+    eng = CypherEngine(spark, GraphCatalog(spark), mutable=True)
+    df = eng.dataframe("CREATE (:P {x: 1})")
+    # the write-only empty result must stay <=1 partition: at 32 empty
+    # partitions its collect was a 32-task no-op job per statement (r11)
+    assert df.rdd.getNumPartitions() <= 1
+    assert df.count() == 0
