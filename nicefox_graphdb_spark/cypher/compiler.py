@@ -39,7 +39,7 @@ from nicefox_graphdb_spark.cypher.expressions import (
     widen_prop_dtype,
 )
 from nicefox_graphdb_spark.cypher.scope import Scope, VarInfo, pcol, vcol
-from nicefox_graphdb_spark.graph_store import gated
+from nicefox_graphdb_spark.graph_store import gated, observed
 from nicefox_graphdb_spark.operators import var_length as vl
 
 
@@ -3480,10 +3480,6 @@ class CypherToSpark:
         src_info = state.scope.get(src_var)
         dst_info = state.scope.get(dst_var)
         assert src_info is not None and dst_info is not None
-        # unlabeled endpoints key their edges under the sentinel "" label
-        # multi-label endpoints key the edge table under the PRIMARY label
-        # (the reference's json_extract(label,'$[0]') convention); the
-        # edge-scan pruning relaxes once multi-label membership exists
         props = self._compiled_props(state, rel.props)
         df = state.require_df().withColumn(vcol(rel_var, "eid"), F.expr("uuid()"))
         prop_types: dict[str, T.DataType] = {}
@@ -3512,6 +3508,8 @@ class CypherToSpark:
                 )
             )
         df = df.withColumn("__null_ep_guard", F.coalesce(*guards, F.lit(True)))
+        ends = (self._key_label(src_info), self._key_label(dst_info))
+        df, pairs = self._observe_label_pairs(df, ends)
         try:
             df = df.localCheckpoint(eager=True)
         except Exception as exc:  # noqa: BLE001
@@ -3524,23 +3522,64 @@ class CypherToSpark:
                 ) from None
             raise
         df = df.drop("__null_ep_guard")
-        rows = df.select(
-            F.col(vcol(rel_var, "eid")).alias("_id"),
-            F.col(vcol(rel_var, "src")).alias("_src"),
-            F.col(vcol(rel_var, "dst")).alias("_dst"),
-            *[F.col(pcol(rel_var, k)).alias(k) for k in props],
-        )
-        self.store.append_edges(
-            rel.types[0],
-            src_info.labels[0] if src_info.labels else "",
-            dst_info.labels[0] if dst_info.labels else "",
-            rows,
-        )
+        for src_label, dst_label, part in self._by_label_pair(df, ends, pairs):
+            self.store.append_edges(
+                rel.types[0],
+                src_label,
+                dst_label,
+                part.select(
+                    F.col(vcol(rel_var, "eid")).alias("_id"),
+                    F.col(vcol(rel_var, "src")).alias("_src"),
+                    F.col(vcol(rel_var, "dst")).alias("_dst"),
+                    *[F.col(pcol(rel_var, k)).alias(k) for k in props],
+                ),
+            )
         scope = state.scope.copy()
         scope.bind(
             VarInfo(name=rel_var, kind="edge", types=rel.types, props=prop_types)
         )
         return CompileState(df=df, scope=scope)
+
+    @staticmethod
+    def _key_label(info: VarInfo) -> Column | str:
+        """The endpoint label a new relationship's table is keyed under.
+        Unlabeled endpoints key under the sentinel "" label, multi-label
+        ones under the PRIMARY label (the reference's
+        json_extract(label,'$[0]') convention; the edge-scan pruning relaxes
+        once multi-label membership exists). A node bound by an untyped
+        scan (``has_label_col``) lists every catalog label, so its label is
+        the per-row column the scan read."""
+        if info.has_label_col:
+            return F.col(vcol(info.name, "label"))
+        return info.labels[0] if info.labels else ""
+
+    @staticmethod
+    def _observe_label_pairs(frame: DataFrame, ends: tuple) -> tuple:
+        """``frame`` observing its distinct (src, dst) key-label pairs when
+        an end is per row (see ``_key_label``), so the pairs ride the
+        checkpoint the caller runs next; the Observation, or None."""
+        if all(isinstance(e, str) for e in ends):
+            return frame, None
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        pair = F.array(*[F.lit(e) if isinstance(e, str) else e for e in ends])
+        return frame.observe(obs, F.collect_set(pair).alias("pairs")), obs
+
+    @staticmethod
+    def _by_label_pair(frame: DataFrame, ends: tuple, obs) -> list:
+        """(src label, dst label, rows) for each table the new
+        relationships in ``frame`` go to: the static pair, or each pair the
+        Observation of ``_observe_label_pairs`` saw (none for no rows)."""
+        if obs is None:
+            return [(*ends, frame)]
+        out = []
+        for got in sorted(map(tuple, observed(obs).get("pairs", []))):
+            cond = functools.reduce(operator.and_, [
+                e == v for e, v in zip(ends, got) if not isinstance(e, str)
+            ])
+            out.append((*got, frame.where(cond)))
+        return out
 
     def compile_set(self, state: CompileState, s: ast.SetClause) -> CompileState:
         for item in s.items:
@@ -3917,6 +3956,7 @@ class CypherToSpark:
         bound = []
         node_vars = []
         node_labels: list[list[str]] = []
+        key_labels: list = []  # position -> _key_label of its node
         first_pos: dict[str, int] = {}  # unbound var -> first position
         canon: list[int] = []  # position -> first position of its variable
         for i, np_ in enumerate(nodes):
@@ -3935,7 +3975,8 @@ class CypherToSpark:
                         "MERGE endpoint must be a node variable"
                     )
                 var = np_.var
-                labels = [info.labels[0]] if info.labels else [""]
+                labels = []  # the pattern restates nothing for a bound node
+                key_labels.append(self._key_label(info))
                 canon.append(i)
             else:
                 var = np_.var or self.gensym("mn")
@@ -3955,6 +3996,7 @@ class CypherToSpark:
                     labels = list(np_.labels)  # [] = unlabeled endpoint
                     if labels:
                         self.store.ensure_label(labels[0])
+                key_labels.append(labels[0] if labels else "")
             bound.append(is_bound)
             node_vars.append(var)
             node_labels.append(labels)
@@ -3998,7 +4040,13 @@ class CypherToSpark:
         bound_id_cols = sorted(
             {vcol(node_vars[i], "id") for i in range(len(nodes)) if bound[i]}
         )
-        group_cols = bound_id_cols + tmp_cols
+        # a bound node's per-row key label rides the tuples to the created
+        # rows (it is a function of the id: no extra tuples)
+        label_cols = sorted({
+            vcol(node_vars[i], "label") for i in range(len(nodes))
+            if bound[i] and not isinstance(key_labels[i], str)
+        })
+        group_cols = bound_id_cols + label_cols + tmp_cols
         if not group_cols:
             # nothing bound and no key props: one global match-else-create
             # tuple (constant grouping key keeps the anti-join machinery)
@@ -4046,6 +4094,16 @@ class CypherToSpark:
         new_edge_cols = [f"__eu_{j}" for j in range(len(rels))]
         for cname in new_edge_cols:
             created = created.withColumn(cname, F.expr("uuid()"))
+        # undirected hops create left-to-right (Neo4j)
+        hop_ends = [
+            (j + 1, j) if r.direction == "in" else (j, j + 1)
+            for j, r in enumerate(rels)
+        ]
+        label_pairs = []
+        for li, ri in hop_ends:
+            ends = (key_labels[li], key_labels[ri])
+            created, obs = self._observe_label_pairs(created, ends)
+            label_pairs.append((ends, obs))
         created, created_empty = self._checkpoint_created(
             created, group_cols, "Cannot merge using null property value"
         )
@@ -4079,8 +4137,7 @@ class CypherToSpark:
                     created.select(F.col(new_node_cols[i]).alias("_id")),
                 )
             for j, r in enumerate(rels):
-                # undirected hops create left-to-right (Neo4j)
-                li, ri = (j + 1, j) if r.direction == "in" else (j, j + 1)
+                li, ri = hop_ends[j]
                 src_col = (
                     vcol(node_vars[li], "id")
                     if bound[li]
@@ -4091,29 +4148,30 @@ class CypherToSpark:
                     if bound[ri]
                     else new_node_cols[canon[ri]]
                 )
-                rows, on_create = self._fold_on_create(
-                    VarInfo(
-                        name=rel_vars[j], kind="edge", types=[r.types[0]],
-                        props={k: created.schema[vcol(kv, "val")].dataType
-                               for k, kv in rel_keys[j].items()},
-                    ),
-                    created.select(
-                        F.col(new_edge_cols[j]).alias("_id"),
-                        F.col(src_col).alias("_src"),
-                        F.col(dst_col).alias("_dst"),
-                        *[
-                            F.col(vcol(kv, "val")).alias(k)
-                            for k, kv in rel_keys[j].items()
-                        ],
-                    ),
-                    on_create,
+                rel_info = VarInfo(
+                    name=rel_vars[j], kind="edge", types=[r.types[0]],
+                    props={k: created.schema[vcol(kv, "val")].dataType
+                           for k, kv in rel_keys[j].items()},
                 )
-                self.store.append_edges(
-                    r.types[0],
-                    node_labels[li][0] if node_labels[li] else "",
-                    node_labels[ri][0] if node_labels[ri] else "",
-                    rows,
-                )
+                rest = on_create
+                for src_label, dst_label, part in self._by_label_pair(
+                    created, *label_pairs[j]
+                ):
+                    rows, rest = self._fold_on_create(
+                        rel_info,
+                        part.select(
+                            F.col(new_edge_cols[j]).alias("_id"),
+                            F.col(src_col).alias("_src"),
+                            F.col(dst_col).alias("_dst"),
+                            *[
+                                F.col(vcol(kv, "val")).alias(k)
+                                for k, kv in rel_keys[j].items()
+                            ],
+                        ),
+                        on_create,
+                    )
+                    self.store.append_edges(r.types[0], src_label, dst_label, rows)
+                on_create = rest
         # re-bind every row against the now-complete tables
         rebound = match(df)
         scope = state.scope.copy()

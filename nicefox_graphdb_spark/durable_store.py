@@ -82,6 +82,7 @@ from nicefox_graphdb_spark.graph_store import (
     MutableGraph,
     gated,
     null_metrics,
+    observed,
 )
 
 
@@ -90,13 +91,6 @@ def _q(s: str) -> str:
     sentinel label for unlabeled nodes) maps to "%00" — a NUL escape no
     real label can quote to, so it cannot collide."""
     return quote(s, safe="") if s else "%00"
-
-
-def _observed(obs) -> dict:
-    """An Observation's row, or {} when its branch never ran: AQE drops a
-    branch it proves empty at runtime, metrics and all, and ``obs.get``
-    fails on the resulting empty row."""
-    return obs.get if obs._jo.getRow().length() else {}
 
 
 def node_key(label: str) -> str:
@@ -426,7 +420,7 @@ class DurableTableStore:
         # (staged file, published name, bucket set, exact row count)
         files: list[tuple[str, str, list[int], int | None]] = []
         if small:
-            got = _observed(obs)
+            got = observed(obs)
             if got.get("rows"):
                 files = [
                     (os.path.join(staging, fn), f"s-{uuid.uuid4().hex}.parquet",
@@ -542,12 +536,12 @@ class DurableTableStore:
         row = {"rows": 0}
 
         def _check() -> None:
-            if stray_obs is not None and _observed(stray_obs).get("stray"):
+            if stray_obs is not None and observed(stray_obs).get("stray"):
                 raise ValueError(
                     f"write: rows outside touched buckets {sorted(touched)}"
                 )
             if app_obs is not None:
-                row.update(_observed(app_obs))
+                row.update(observed(app_obs))
             if validate is not None:
                 validate(row)
 
@@ -743,24 +737,28 @@ class DurableGraph(MutableGraph):
         self.tables.set_schema(key, cols)
         self.tables.write(key, append=self._align(rows, cols))
 
-    def _adopt(self, table: str | int) -> str:
+    def _adopt(self, table: str | int, fresh: bool = False) -> str:
         """Store key of a node label (str) or edge slot (int). The first
         mutation of a bulk-registered table imports it wholesale
-        (one-time, like Delta's CONVERT TO DELTA)."""
+        (one-time, like Delta's CONVERT TO DELTA). A table with no rows
+        yet (a label the catalog lacks, or a ``fresh`` edge slot the
+        caller just registered) starts with zero files: no Spark write."""
         if isinstance(table, int):
             et = self.catalog._edges[table]
             key = edge_key(et.type, et.src_label, et.dst_label)
             meta = {"kind": "edge", "type": et.type, "src": et.src_label,
                     "dst": et.dst_label}
-            df = et.df
+            df = None if fresh else et.df
+            structural = ("_id", "_src", "_dst")
         else:
             key = node_key(table)
             meta = {"kind": "node", "label": table}
             df = self.catalog.node(table).df if self.catalog.has_label(table) else None
+            structural = ("_id",)
         if not self.tables.has_table(key):
             cols = self._no_void(
                 {f.name: f.dataType for f in df.schema.fields}
-                if df is not None else {"_id": T.StringType()}
+                if df is not None else dict.fromkeys(structural, T.StringType())
             )
             self.tables.create_table(
                 key, meta,
@@ -1025,8 +1023,10 @@ class DurableGraph(MutableGraph):
     def append_edges(
         self, type_: str, src_label: str, dst_label: str, rows: DataFrame
     ) -> None:
+        n_slots = len(self.catalog._edges)
         slot = self._edge_slot(type_, src_label, dst_label)
-        self._append(self._adopt(slot), rows)
+        # a slot _edge_slot just registered holds only its empty stand-in
+        self._append(self._adopt(slot, fresh=slot == n_slots), rows)
         self._refresh(slot)
         self._bump()
 

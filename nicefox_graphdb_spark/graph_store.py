@@ -57,6 +57,13 @@ def null_metrics(cols) -> list:
     return [F.max(anynull).alias("__has_null")]
 
 
+def observed(obs) -> dict:
+    """An Observation's row, or {} when its branch never ran: AQE drops a
+    branch it proves empty at runtime, metrics and all, and ``obs.get``
+    fails on the resulting empty row."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
 # A materialized key or id set of up to this many rows is broadcast when a
 # join re-attaches it: a delete set's dangling probe and per-table
 # anti-joins, a durable rewrite's membership probes, a MERGE's key and id

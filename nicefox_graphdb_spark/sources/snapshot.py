@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from nicefox_graphdb_spark.catalog import GraphCatalog
+from nicefox_graphdb_spark.sources.footer import read_parquet
 
 _VERSION_RE = re.compile(r"^v(\d{6})_\d{8}T\d{6}$")
 
@@ -194,7 +195,7 @@ def load_snapshot(
             # back when the escaped file is absent AND the legacy one exists
             # (keeps the error message naming the expected escaped path)
             path = legacy
-        cat.register_node(n["label"], spark.read.parquet(path))
+        cat.register_node(n["label"], read_parquet(spark, path))
     for e in manifest["edges"]:
         fname = (
             f"{_table_fname(e['type'])}__{_table_fname(e['src'])}"
@@ -209,7 +210,7 @@ def load_snapshot(
             e["type"],
             e["src"],
             e["dst"],
-            spark.read.parquet(os.path.join(base, "edges", fname)),
+            read_parquet(spark, os.path.join(base, "edges", fname)),
         )
     cat.multi_label_dirty = bool(manifest.get("multi_label_dirty", False))
     return cat

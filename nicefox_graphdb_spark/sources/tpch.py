@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nicefox_graphdb_spark.catalog import GraphCatalog
+from nicefox_graphdb_spark.sources.footer import read_parquet
 
 TABLES = [
     "region",
@@ -61,7 +62,8 @@ TABLES = [
 def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read the driver parquet tables, normalizing TIMESTAMP(NANOS) columns
     (read as LongType via spark.sql.legacy.parquet.nanosAsLong) back to
-    proper TimestampType."""
+    proper TimestampType. Each schema comes from the table's footer
+    (``footer.read_parquet``), so the load schedules no Spark job."""
     import pyarrow.parquet as pq
     import pyarrow as pa
 
@@ -73,7 +75,7 @@ def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     out: dict[str, DataFrame] = {}
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         arrow_schema = pq.read_schema(path)
         for fld in arrow_schema:
             if isinstance(fld.type, pa.TimestampType) and fld.type.unit == "ns":

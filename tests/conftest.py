@@ -8,6 +8,21 @@ from nicefox_graphdb_spark.sources import load_tpch_graph
 SF_DIR = os.environ.get("NICEFOX_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def jobs_during(spark, fn) -> int:
+    """Spark jobs scheduled while ``fn()`` runs, counted by a job group
+    of their own."""
+    import uuid
+
+    tag = f"jobs-during-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
 @pytest.fixture(scope="session")
 def spark():
     return get_spark(shuffle_partitions=8)

@@ -9,6 +9,7 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_during
 from nicefox_graphdb_spark.operators import graph_algos as ga
 from nicefox_graphdb_spark.operators.superstep import cut
 
@@ -360,16 +361,13 @@ def test_label_propagation_stops_at_fixpoint(spark):
     # changes no label, so a large max_iter runs no further supersteps
     tri = [("A", "B"), ("B", "C"), ("A", "C"), ("X", "Y"), ("Y", "Z"), ("X", "Z")]
     edges = spark.createDataFrame(tri, "src string, dst string")
-    sc = spark.sparkContext
 
     def run(max_iter):
-        tag = f"lpa-{max_iter}"
-        sc.setJobGroup(tag, tag)
-        try:
-            rows = sorted(ga.label_propagation(edges, max_iter=max_iter).collect())
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return rows, len(sc.statusTracker().getJobIdsForGroup(tag))
+        rows = []
+        n = jobs_during(spark, lambda: rows.extend(
+            sorted(ga.label_propagation(edges, max_iter=max_iter).collect())
+        ))
+        return rows, n
 
     few, few_jobs = run(3)
     many, many_jobs = run(10)

@@ -4,6 +4,8 @@ survive compiler changes (the 100 TB properties are plan properties)."""
 import contextlib
 import io
 
+from conftest import jobs_during
+
 
 def plan_of(engine, q: str) -> str:
     df = engine.dataframe(q)
@@ -170,28 +172,16 @@ def test_path_element_rehydration_single_join_per_comp(engine):
     assert plan.count("Arguments: posexplode(") == 1
 
 
-def _jobs_during(spark, fn, tag):
-    """Count Spark jobs scheduled while fn() runs (job-group scoped)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 def test_uncorrelated_exists_compiles_lazily(engine, spark):
     # round-9 (VERDICT r8 #6): compiling a query whose WHERE holds an
     # uncorrelated EXISTS pattern must schedule ZERO Spark jobs — the
     # emptiness probe folds into the plan as a broadcast 1-row boolean
     # and evaluates with the query itself.
-    n = _jobs_during(
+    n = jobs_during(
         spark,
         lambda: engine.dataframe(
             "MATCH (r:Region) WHERE EXISTS((:Nation)) RETURN r.name AS rn"
         ),
-        "exists-lazy-compile",
     )
     assert n == 0
     # ...and the deferred flag still evaluates correctly both ways
@@ -239,7 +229,7 @@ def test_repeated_work_compiles_once(engine, spark):
 
     work()
     before = codegen_compiles(spark)
-    n = _jobs_during(spark, work, "compile-once")
+    n = jobs_during(spark, work)
     assert n > 0
     compiles = codegen_compiles(spark) - before
     assert compiles <= 0 + 2, f"second run compiled {compiles} classes"
@@ -290,10 +280,9 @@ def test_var_length_read_job_budget(engine, spark):
     for hops, budget in (("1..3", 14), ("1..1", 8)):
         query = q % hops
         engine.query(query, {"k": 3})  # warm compile
-        n = _jobs_during(
+        n = jobs_during(
             spark,
             lambda: engine.dataframe(query, {"k": 9}).collect(),
-            f"var-length-{hops}",
         )
         assert n <= budget, f"*{hops} read scheduled {n} jobs (budget {budget})"
 
@@ -320,10 +309,9 @@ def test_plain_delete_job_budget(spark):
     # observe-fold alternative re-executes the delete-set MATCH plan and
     # was measured worse (see graph_store._validate_no_dangling).
     eng = _mini_write_engine(spark)
-    n = _jobs_during(
+    n = jobs_during(
         spark,
         lambda: eng.query("MATCH (a:A {k: 3}) DELETE a"),
-        "plain-delete-budget",
     )
     assert n <= 4, f"plain DELETE scheduled {n} jobs (budget 4)"
 
@@ -450,7 +438,7 @@ def test_durable_statement_job_budgets(spark, tmp_path):
             5),
     }
     for tag, (fn, budget) in budgets.items():
-        n = _jobs_during(spark, fn, tag)
+        n = jobs_during(spark, fn)
         assert n <= budget, f"{tag} scheduled {n} jobs (budget {budget})"
 
 

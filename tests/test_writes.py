@@ -3,6 +3,7 @@ graph, modeled on the reference's CRUD suites (test/cypherqueries.test.ts)."""
 
 import pytest
 
+from conftest import jobs_during
 from nicefox_graphdb_spark import CypherEngine
 from nicefox_graphdb_spark.catalog import GraphCatalog
 
@@ -410,16 +411,6 @@ def test_reserved_structural_prop_names(wengine):
         wengine.query("CREATE (n:ZR {ok: 1}) SET n.`_src` = 2")
 
 
-def _jobs_during(spark, fn, tag):
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
-
-
 @pytest.fixture()
 def dengine(spark, tmp_path):
     """Durable-store engine only — job-count guards pin the durable write
@@ -433,36 +424,32 @@ def test_merge_job_budget_keyless(spark, dengine):
     checkpoint via observe. Bounds are the measured post-fix job counts;
     a reintroduced probe shows up as +1/+2 and trips the guard."""
     dengine.query("CREATE (:Person {name: 'A'}), (:Person {name: 'B'})")
-    n_create = _jobs_during(
+    n_create = jobs_during(
         spark,
         lambda: dengine.query(
             "MATCH (p:Person) MERGE (s:Singleton) RETURN count(*) AS c"
         ),
-        "merge-keyless-create",
     )
     assert n_create <= 9, n_create
-    n_match = _jobs_during(
+    n_match = jobs_during(
         spark,
         lambda: dengine.query(
             "MATCH (p:Person) MERGE (s:Singleton) RETURN count(*) AS c"
         ),
-        "merge-keyless-match",
     )
     assert n_match <= 6, n_match
     assert dengine.query("MATCH (s:Singleton) RETURN count(*) AS c") == [{"c": 1}]
 
 
 def test_merge_job_budget_standalone_chain(spark, dengine):
-    n_create = _jobs_during(
+    n_create = jobs_during(
         spark,
         lambda: dengine.query("MERGE (a:City {k: 1})-[:IN]->(b:Country {k: 2})"),
-        "merge-chain-create",
     )
     assert n_create <= 12, n_create
-    n_match = _jobs_during(
+    n_match = jobs_during(
         spark,
         lambda: dengine.query("MERGE (a:City {k: 1})-[:IN]->(b:Country {k: 2})"),
-        "merge-chain-match",
     )
     assert n_match <= 4, n_match
     assert dengine.query(
@@ -487,18 +474,16 @@ def test_merge_job_budget_both_bound(spark, dengine):
         "MATCH (a:Acct {id: $a}), (b:Acct {id: $b}) "
         "MERGE (a)-[r:PAYS]->(b) ON CREATE SET r.amt = $amt"
     )
-    n_create = _jobs_during(
+    n_create = jobs_during(
         spark,
         lambda: dengine.query(q, {"a": 5, "b": 6, "amt": 7}),
-        "merge-both-bound-create",
     )
     # ON CREATE SET r.amt folds into the created relationship rows: no
     # separate rewrite (measured 8 jobs + 2)
     assert n_create <= 10, n_create
-    n_match = _jobs_during(
+    n_match = jobs_during(
         spark,
         lambda: dengine.query(q, {"a": 5, "b": 6, "amt": 8}),
-        "merge-both-bound-match",
     )
     assert n_match <= 10, n_match
     # ON CREATE ran once: the match kept the first amount
@@ -552,13 +537,10 @@ def test_merge_job_budget_correlated(
     """Relationship MERGE under 20 bound rows, first run (creates) and
     rerun (matches), with the final graph computed by hand."""
     dengine.query("UNWIND range(1, 20) AS i CREATE (:Acct {id: i})")
+    # first run (creates), then the rerun (matches)
     counts = [
-        _jobs_during(
-            spark,
-            lambda: dengine.query(f"MATCH (a:Acct) {merge}"),
-            f"merge-{name}-{run}",
-        )
-        for run in ("create", "rerun")
+        jobs_during(spark, lambda: dengine.query(f"MATCH (a:Acct) {merge}"))
+        for _ in range(2)
     ]
     assert all(n <= b for n, b in zip(counts, budgets)), counts
     assert dengine.query(check) == [expected]
@@ -778,3 +760,43 @@ def test_write_only_result_is_single_partition(spark, tmp_path):
     # partitions its collect was a 32-task no-op job per statement (r11)
     assert df.rdd.getNumPartitions() <= 1
     assert df.count() == 0
+
+
+@pytest.mark.parametrize("clause", ["CREATE", "MERGE"])
+def test_rel_from_untyped_binding_keys_by_node_label(wengine, clause):
+    """A node bound by an untyped scan keys a new relationship under its
+    own label, not the catalog's first label: the labeled match finds it."""
+    wengine.query("CREATE (:Acct {name: 'acct'}), (:Person {name: 'x'})")
+    wengine.query(f"MATCH (n) WHERE n.name = 'x' {clause} (n)-[:R]->(m:M)")
+    count = "MATCH {} RETURN count(*) AS c"
+    assert wengine.query(count.format("(p:Person)-[:R]->(m)")) == [{"c": 1}]
+    assert wengine.query(count.format("(p)-[:R]->(m)")) == [{"c": 1}]
+    assert wengine.query(count.format("(a:Acct)-[:R]->(m)")) == [{"c": 0}]
+    # rows of two labels split into one table per endpoint label pair
+    wengine.query(f"MATCH (n) WHERE n.name IN ['x', 'acct'] {clause} (n)-[:S]->(:M)")
+    assert wengine.query(
+        "MATCH (a)-[:S]->(:M) RETURN labels(a) AS l ORDER BY l"
+    ) == [{"l": ["Acct"]}, {"l": ["Person"]}]
+    assert wengine.query(count.format("(:Acct)-[:S]->(:M)")) == [{"c": 1}]
+
+
+def test_first_relationship_type_write_job_budget(spark, tmp_path):
+    """The first CREATE of a relationship type on a durable store (the
+    benchmark's seeding statement) registers the new table with zero files:
+    one Spark write, not an empty-table write before it (measured 4 jobs;
+    6 when the empty table was written). A reopened store reads every row."""
+    path = str(tmp_path / "g")
+    eng = CypherEngine(spark, GraphCatalog(spark), data_path=path)
+    eng.query(
+        "UNWIND range(0, 1999) AS i CREATE (:Acct {id: i, bal: i % 1000, tier: 'base'})"
+    )
+    n = jobs_during(spark, lambda: eng.query(
+        "MATCH (a:Acct) WITH a, (a.id * 7 + 3) % 2000 AS j "
+        "MATCH (b:Acct) WHERE b.id = j CREATE (a)-[:PAYS {amt: a.id % 100}]->(b)"
+    ))
+    assert n <= 4, n
+    reopened = CypherEngine(spark, GraphCatalog(spark), data_path=path)
+    assert reopened.query("MATCH (a:Acct) RETURN count(*) AS n") == [{"n": 2000}]
+    assert reopened.query(
+        "MATCH (:Acct)-[r:PAYS]->(:Acct) RETURN count(*) AS m, sum(r.amt) AS amt"
+    ) == [{"m": 2000, "amt": sum(i % 100 for i in range(2000))}]
