@@ -2202,7 +2202,7 @@ class CypherToSpark:
                 lbl = (
                     F.col(vcol(info.name, "label"))
                     if info.has_label_col
-                    else F.lit(info.labels[0] if len(info.labels) == 1 else None)
+                    else F.lit(info.labels[0] if info.labels else "")
                 )
                 part = part.withColumn(
                     vcol(alias, "label"), lbl.cast("string")
@@ -2680,10 +2680,11 @@ class CypherToSpark:
         else:
             # per-row label provenance: winner's union-scan label column
             # when it has one, else its statically-known primary label
+            # ("" for an unlabeled node)
             cols[vcol(alias, "label")] = pick(
                 lambda i: F.col(vcol(i.name, "label"))
                 if i.has_label_col
-                else F.lit(i.labels[0] if i.labels else None)
+                else F.lit(i.labels[0] if i.labels else "")
             )
         props: dict[str, T.DataType] = {}
         for i in infos:
@@ -3548,9 +3549,9 @@ class CypherToSpark:
         json_extract(label,'$[0]') convention; the edge-scan pruning relaxes
         once multi-label membership exists). A node bound by an untyped
         scan (``has_label_col``) lists every catalog label, so its label is
-        the per-row column the scan read."""
+        the per-row column the scan read (null only with a null id)."""
         if info.has_label_col:
-            return F.col(vcol(info.name, "label"))
+            return F.coalesce(F.col(vcol(info.name, "label")), F.lit(""))
         return info.labels[0] if info.labels else ""
 
     @staticmethod
@@ -4041,7 +4042,8 @@ class CypherToSpark:
             {vcol(node_vars[i], "id") for i in range(len(nodes)) if bound[i]}
         )
         # a bound node's per-row key label rides the tuples to the created
-        # rows (it is a function of the id: no extra tuples)
+        # rows (it is a function of the id: no extra tuples, and no key
+        # of the null check below)
         label_cols = sorted({
             vcol(node_vars[i], "label") for i in range(len(nodes))
             if bound[i] and not isinstance(key_labels[i], str)
@@ -4105,7 +4107,9 @@ class CypherToSpark:
             created, obs = self._observe_label_pairs(created, ends)
             label_pairs.append((ends, obs))
         created, created_empty = self._checkpoint_created(
-            created, group_cols, "Cannot merge using null property value"
+            created,
+            [c for c in group_cols if c not in label_cols],
+            "Cannot merge using null property value",
         )
         # ON CREATE items that only read their own created element fold
         # into its appended rows; the rest run as a rewrite below

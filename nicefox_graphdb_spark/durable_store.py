@@ -741,30 +741,29 @@ class DurableGraph(MutableGraph):
         """Store key of a node label (str) or edge slot (int). The first
         mutation of a bulk-registered table imports it wholesale
         (one-time, like Delta's CONVERT TO DELTA). A table with no rows
-        yet (a label the catalog lacks, or a ``fresh`` edge slot the
-        caller just registered) starts with zero files: no Spark write."""
+        yet (a label the catalog lacks, or a ``fresh`` edge slot whose
+        frame is the empty stand-in) starts with zero files: no Spark
+        write."""
         if isinstance(table, int):
             et = self.catalog._edges[table]
             key = edge_key(et.type, et.src_label, et.dst_label)
             meta = {"kind": "edge", "type": et.type, "src": et.src_label,
                     "dst": et.dst_label}
-            df = None if fresh else et.df
-            structural = ("_id", "_src", "_dst")
+            df = et.df
         else:
             key = node_key(table)
             meta = {"kind": "node", "label": table}
             df = self.catalog.node(table).df if self.catalog.has_label(table) else None
-            structural = ("_id",)
         if not self.tables.has_table(key):
             cols = self._no_void(
                 {f.name: f.dataType for f in df.schema.fields}
-                if df is not None else dict.fromkeys(structural, T.StringType())
+                if df is not None else {"_id": T.StringType()}
             )
             self.tables.create_table(
                 key, meta,
                 T.StructType([T.StructField(n, t) for n, t in cols.items()]),
             )
-            if df is not None:
+            if df is not None and not fresh:
                 self.tables.write(key, append=self._align(df, cols))
         return key
 
@@ -1023,10 +1022,8 @@ class DurableGraph(MutableGraph):
     def append_edges(
         self, type_: str, src_label: str, dst_label: str, rows: DataFrame
     ) -> None:
-        n_slots = len(self.catalog._edges)
-        slot = self._edge_slot(type_, src_label, dst_label)
-        # a slot _edge_slot just registered holds only its empty stand-in
-        self._append(self._adopt(slot, fresh=slot == n_slots), rows)
+        slot, fresh = self._edge_slot(type_, src_label, dst_label)
+        self._append(self._adopt(slot, fresh=fresh), rows)
         self._refresh(slot)
         self._bump()
 

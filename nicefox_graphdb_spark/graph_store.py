@@ -430,10 +430,14 @@ class MutableGraph:
         self._bump()
 
     # -- edges ------------------------------------------------------------
-    def _edge_slot(self, type_: str, src_label: str, dst_label: str) -> int:
+    def _edge_slot(
+        self, type_: str, src_label: str, dst_label: str
+    ) -> tuple[int, bool]:
+        """The catalog slot of a (type, src, dst) edge table, and whether
+        this call registered it (with an empty stand-in frame)."""
         for i, et in enumerate(self.catalog._edges):
             if (et.type, et.src_label, et.dst_label) == (type_, src_label, dst_label):
-                return i
+                return i, False
         empty = self.spark.createDataFrame(
             [],
             T.StructType(
@@ -445,13 +449,13 @@ class MutableGraph:
             ),
         )
         self.catalog.register_edge(type_, src_label, dst_label, empty)
-        return len(self.catalog._edges) - 1
+        return len(self.catalog._edges) - 1, True
 
     def append_edges(
         self, type_: str, src_label: str, dst_label: str, rows: DataFrame
     ) -> None:
         """rows: `_id`, `_src`, `_dst` + property columns."""
-        slot = self._edge_slot(type_, src_label, dst_label)
+        slot, _ = self._edge_slot(type_, src_label, dst_label)
         et = self.catalog._edges[slot]
         cols = self._merged_schema(et.df, rows)
         new_df = self._align(et.df, cols).unionByName(self._align(rows, cols))

@@ -8,17 +8,18 @@ same schema from that footer with pyarrow and no job:
 
 - Spark's own ``org.apache.spark.sql.parquet.row.metadata`` when the
   file carries it (every file Spark writes);
-- otherwise the parquet schema mapped the way Spark's converter maps it:
-  ``TIMESTAMP(NANOS)`` becomes ``long`` under
-  ``spark.sql.legacy.parquet.nanosAsLong``, a zone-less ``TIMESTAMP``
-  becomes ``timestamp_ntz`` while ``spark.sql.parquet.inferTimestampNTZ
-  .enabled`` is on, and unsigned integers widen.
+- otherwise the parquet schema mapped the way Spark's converter maps it,
+  for the types source loads read: flat primitives, strings, decimals,
+  dates, timestamps and lists of primitives. ``TIMESTAMP(NANOS)``
+  becomes ``long`` under ``spark.sql.legacy.parquet.nanosAsLong``, and a
+  zone-less ``TIMESTAMP`` becomes ``timestamp_ntz`` while
+  ``spark.sql.parquet.inferTimestampNTZ.enabled`` is on.
 
 Every field comes back nullable, as file sources read them. A path that
 is not a local file or a flat directory of data files (summary files,
 partition directories, a remote URI), an unreadable footer, or a column
-with no mapping here (INT96, TIME, UUID, ...) gives ``None``, and
-``read_parquet`` lets Spark infer the schema as before.
+of any other type (INT96, binary, unsigned, map, struct, ...) gives
+``None``, and ``read_parquet`` lets Spark infer the schema as before.
 """
 
 from __future__ import annotations
@@ -32,27 +33,32 @@ from pyspark.sql import types as T
 SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, path: str, footer=None) -> DataFrame:
     """``spark.read.parquet(path)`` with the footer's schema when
-    ``footer_schema`` can read it, so the read schedules no Spark job."""
-    schema = footer_schema(spark, path)
+    ``footer_schema`` can map it, so the read schedules no Spark job."""
+    schema = footer_schema(spark, path, footer)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
 
 
-def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+def footer_schema(
+    spark: SparkSession, path: str, footer=None
+) -> T.StructType | None:
     """The schema ``spark.read.parquet(path)`` would infer, or None when
-    only Spark can tell (see the module docstring)."""
+    only Spark can tell (see the module docstring). ``footer`` is the
+    path's first data file as a ``pyarrow.parquet.ParquetFile`` when the
+    caller has already opened it."""
     import pyarrow.parquet as pq
 
-    data_file = _first_data_file(path)
-    if data_file is None:
-        return None
-    try:
-        pf = pq.ParquetFile(data_file)
-    except Exception:  # noqa: BLE001 — not a footer we can read: Spark's turn
-        return None
-    raw = (pf.metadata.metadata or {}).get(SPARK_ROW_METADATA)
+    if footer is None:
+        data_file = _first_data_file(path)
+        if data_file is None:
+            return None
+        try:
+            footer = pq.ParquetFile(data_file)
+        except Exception:  # noqa: BLE001 — not a footer we can read: Spark's turn
+            return None
+    raw = (footer.metadata.metadata or {}).get(SPARK_ROW_METADATA)
     if raw is not None:
         try:
             schema = T.StructType.fromJson(json.loads(raw))
@@ -64,19 +70,19 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
         for name, key in (
             ("ntz", "spark.sql.parquet.inferTimestampNTZ.enabled"),
             ("nanos", "spark.sql.legacy.parquet.nanosAsLong"),
-            ("binary", "spark.sql.parquet.binaryAsString"),
         )
     }
+    parquet = footer.metadata.schema
     columns = {
-        pf.metadata.schema.column(i).path: pf.metadata.schema.column(i)
-        for i in range(pf.metadata.num_columns)
+        parquet.column(i).path: parquet.column(i)
+        for i in range(footer.metadata.num_columns)
     }
     fields = []
-    for fld in pf.schema_arrow:
+    for fld in footer.schema_arrow:
         if fld.name in columns:
             dtype = _leaf_type(columns[fld.name], conf)
         else:
-            dtype = _nested_type(fld.type)
+            dtype = _list_type(fld.type)
         if dtype is None:
             return None
         fields.append(T.StructField(fld.name, dtype, True))
@@ -115,9 +121,9 @@ def _nullable(dtype: T.DataType) -> T.DataType:
     return dtype
 
 
-_INTS = {(8, True): T.ByteType, (16, True): T.ShortType, (32, True): T.IntegerType,
-         (64, True): T.LongType, (8, False): T.ShortType, (16, False): T.IntegerType,
-         (32, False): T.LongType}
+_INTS = {8: T.ByteType, 16: T.ShortType, 32: T.IntegerType, 64: T.LongType}
+_PLAIN = {"BOOLEAN": T.BooleanType, "INT32": T.IntegerType, "INT64": T.LongType,
+          "FLOAT": T.FloatType, "DOUBLE": T.DoubleType}
 
 
 def _leaf_type(col, conf: dict) -> T.DataType | None:
@@ -129,64 +135,33 @@ def _leaf_type(col, conf: dict) -> T.DataType | None:
     if kind == "Decimal":
         return T.DecimalType(col.precision, col.scale)
     if kind == "Int":
-        width, signed = logical["bitWidth"], logical["isSigned"]
-        if (width, signed) == (64, False):
-            return T.DecimalType(20, 0)
-        return _INTS[(width, signed)]()
+        return _INTS[logical["bitWidth"]]() if logical["isSigned"] else None
     if phys == "INT64" and kind == "Timestamp":
-        unit = logical["timeUnit"]
-        if unit == "nanoseconds":
+        if logical["timeUnit"] == "nanoseconds":
             return T.LongType() if conf["nanos"] else None
         if logical["isAdjustedToUTC"] or not conf["ntz"]:
             return T.TimestampType()
         return T.TimestampNTZType()
     if kind == "Date" and phys == "INT32":
         return T.DateType()
-    if kind in ("String", "Enum", "JSON") and phys == "BYTE_ARRAY":
+    if kind == "String" and phys == "BYTE_ARRAY":
         return T.StringType()
-    if kind != "None":
+    if kind != "None" or phys not in _PLAIN:
         return None
-    if phys == "BYTE_ARRAY":
-        return T.StringType() if conf["binary"] else T.BinaryType()
-    return {
-        "BOOLEAN": T.BooleanType, "INT32": T.IntegerType, "INT64": T.LongType,
-        "FLOAT": T.FloatType, "DOUBLE": T.DoubleType,
-        "FIXED_LEN_BYTE_ARRAY": T.BinaryType,
-    }.get(phys, lambda: None)()
+    return _PLAIN[phys]()
 
 
-def _nested_type(t) -> T.DataType | None:
-    """Spark's type for a nested column (list, struct, map), from its
-    arrow type; None for anything holding a timestamp or a type with no
-    mapping here."""
+def _list_type(t) -> T.ArrayType | None:
+    """Spark's type for a list-of-primitives column, from its arrow type;
+    None for any other nested column."""
     import pyarrow as pa
 
-    if pa.types.is_dictionary(t):
-        return _nested_type(t.value_type)
-    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
-        elem = _nested_type(t.value_type)
-        return None if elem is None else T.ArrayType(elem, True)
-    if pa.types.is_map(t):
-        key, value = _nested_type(t.key_type), _nested_type(t.item_type)
-        return None if key is None or value is None else T.MapType(key, value, True)
-    if pa.types.is_struct(t):
-        fields = [(t.field(i).name, _nested_type(t.field(i).type))
-                  for i in range(t.num_fields)]
-        if any(d is None for _, d in fields):
-            return None
-        return T.StructType([T.StructField(n, d, True) for n, d in fields])
-    if pa.types.is_decimal(t):
-        return T.DecimalType(t.precision, t.scale)
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return T.StringType()
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return T.BinaryType()
-    simple = {
+    if not pa.types.is_list(t):
+        return None
+    elem = {
         pa.bool_(): T.BooleanType, pa.int8(): T.ByteType, pa.int16(): T.ShortType,
-        pa.int32(): T.IntegerType, pa.int64(): T.LongType, pa.uint8(): T.ShortType,
-        pa.uint16(): T.IntegerType, pa.uint32(): T.LongType,
-        pa.uint64(): lambda: T.DecimalType(20, 0),
-        pa.float32(): T.FloatType, pa.float64(): T.DoubleType, pa.date32(): T.DateType,
-    }
-    make = simple.get(t)
-    return None if make is None else make()
+        pa.int32(): T.IntegerType, pa.int64(): T.LongType,
+        pa.float32(): T.FloatType, pa.float64(): T.DoubleType,
+        pa.string(): T.StringType,
+    }.get(t.value_type)
+    return None if elem is None else T.ArrayType(elem(), True)

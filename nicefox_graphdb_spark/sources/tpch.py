@@ -75,9 +75,9 @@ def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     out: dict[str, DataFrame] = {}
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
-        df = read_parquet(spark, path)
-        arrow_schema = pq.read_schema(path)
-        for fld in arrow_schema:
+        footer = pq.ParquetFile(path)
+        df = read_parquet(spark, path, footer)
+        for fld in footer.schema_arrow:
             if isinstance(fld.type, pa.TimestampType) and fld.type.unit == "ns":
                 # integer division: nanos exceed double precision (2^53)
                 df = df.withColumn(

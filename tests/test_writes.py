@@ -780,6 +780,42 @@ def test_rel_from_untyped_binding_keys_by_node_label(wengine, clause):
     assert wengine.query(count.format("(:Acct)-[:S]->(:M)")) == [{"c": 1}]
 
 
+@pytest.mark.parametrize("clause", ["CREATE", "MERGE"])
+def test_rel_from_branched_unlabeled_node_is_written(wengine, clause):
+    """coalesce() over an unlabeled node binds an entity whose per-row
+    label is the unlabeled sentinel: its relationship is written under it
+    (not dropped, and no null-key MERGE error)."""
+    wengine.query(
+        f"CREATE (a), (b:B) WITH coalesce(a, b) AS n {clause} (n)-[:R]->(:M)"
+    )
+    assert wengine.query(
+        "MATCH (x)-[:R]->(:M) RETURN labels(x) AS l, count(*) AS c"
+    ) == [{"l": [], "c": 1}]
+    # a labeled winner keys under its label
+    wengine.query("CREATE (:K {k: 1})")
+    wengine.query(
+        "MATCH (k:K) OPTIONAL MATCH (a:Nope) "
+        f"WITH coalesce(a, k) AS n {clause} (n)-[:S]->(:M)"
+    )
+    assert wengine.query("MATCH (:K)-[:S]->(:M) RETURN count(*) AS c") == [{"c": 1}]
+
+
+@pytest.mark.parametrize("clause", ["CREATE", "MERGE"])
+def test_rel_from_unwound_multi_label_node_keys_by_primary_label(
+    wengine, clause
+):
+    """UNWIND nodes(p) over a statically multi-label node keys its new
+    relationship under the primary label, each element under its own."""
+    wengine.query("CREATE (:A:B {k: 1})-[:T]->(:C {k: 2})")
+    wengine.query(
+        f"MATCH p = (a:A:B)-[:T]->(c:C) UNWIND nodes(p) AS n {clause} (n)-[:R]->(:M)"
+    )
+    count = "MATCH {} RETURN count(*) AS c"
+    assert wengine.query(count.format("()-[:R]->(:M)")) == [{"c": 2}]
+    assert wengine.query(count.format("(:A)-[:R]->(:M)")) == [{"c": 1}]
+    assert wengine.query(count.format("(:C)-[:R]->(:M)")) == [{"c": 1}]
+
+
 def test_first_relationship_type_write_job_budget(spark, tmp_path):
     """The first CREATE of a relationship type on a durable store (the
     benchmark's seeding statement) registers the new table with zero files:
