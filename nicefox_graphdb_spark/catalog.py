@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nicefox_graphdb_spark.operators.common import local_frame
+
 ID_COL = "_id"
 SRC_COL = "_src"
 DST_COL = "_dst"
@@ -191,7 +193,8 @@ class GraphCatalog:
         )
         if not tables:
             # empty catalog: MATCH (n) over no data is no rows, not an error
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 T.StructType(
                     [

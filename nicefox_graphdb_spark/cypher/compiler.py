@@ -41,6 +41,7 @@ from nicefox_graphdb_spark.cypher.expressions import (
 from nicefox_graphdb_spark.cypher.scope import Scope, VarInfo, pcol, vcol
 from nicefox_graphdb_spark.graph_store import gated, observed
 from nicefox_graphdb_spark.operators import var_length as vl
+from nicefox_graphdb_spark.operators.common import local_frame
 
 
 def _expr_var_names(expr: ast.Expr) -> set[str]:
@@ -406,7 +407,7 @@ class CypherToSpark:
     def _empty_nodes(self, var: str) -> tuple[DataFrame, VarInfo]:
         schema = T.StructType([T.StructField(vcol(var, "id"), T.StringType())])
         return (
-            self.spark.createDataFrame([], schema),
+            local_frame(self.spark, [], schema),
             VarInfo(name=var, kind="node", labels=[], props={}),
         )
 
@@ -682,9 +683,14 @@ class CypherToSpark:
         new_edge_vars: list[VarInfo] = []
         where_scores = self._selectivity_scores(m.where)
         paths = self._order_paths(m.paths, state.scope, where_scores)
-        for path in paths:
-            path = self._maybe_reverse_path(path, state.scope, where_scores)
-            state = self._compile_path(state, path, new_edge_vars)
+        # read by var-length hops while this MATCH's own paths compile
+        self._match_where = self._conjuncts(m.where) if m.where is not None else []
+        try:
+            for path in paths:
+                path = self._maybe_reverse_path(path, state.scope, where_scores)
+                state = self._compile_path(state, path, new_edge_vars)
+        finally:
+            self._match_where = []
         state = self._apply_edge_uniqueness(state, new_edge_vars)
         if m.where is not None:
             state = self._apply_where(state, m.where)
@@ -704,6 +710,37 @@ class CypherToSpark:
                 expr.right
             )
         return [expr]
+
+    # expression nodes a var-length seed filter may hold: row-local and
+    # deterministic, so a row the filter drops is one WHERE drops too
+    _SEED_FILTER_NODES = (
+        ast.Literal, ast.Param, ast.Var, ast.Prop, ast.Binary, ast.Unary,
+        ast.IsNull, ast.ListLit,
+    )
+
+    def _seed_filter(self, state: CompileState, var: str) -> Column | None:
+        """The MATCH's WHERE conjuncts that read ``var`` alone and hold only
+        ``_SEED_FILTER_NODES``, compiled as one filter; None when there are
+        none. WHERE still applies in full after the pattern: this only
+        prunes which rows start a var-length expansion."""
+
+        def simple(node) -> bool:
+            if isinstance(node, (list, tuple)):
+                return all(map(simple, node))
+            if not hasattr(node, "__dataclass_fields__"):
+                return True
+            return isinstance(node, self._SEED_FILTER_NODES) and all(
+                simple(getattr(node, f)) for f in node.__dataclass_fields__
+            )
+
+        conds = []
+        for c in getattr(self, "_match_where", []):
+            if _expr_var_names(c) == {var} and simple(c):
+                try:
+                    conds.append(self._compile_expr(state, c).col)
+                except CypherCompileError:
+                    continue
+        return functools.reduce(operator.and_, conds) if conds else None
 
     def _selectivity_scores(self, where: ast.Expr | None) -> dict[str, float]:
         """Per-variable selectivity weight from top-level WHERE conjuncts
@@ -1089,12 +1126,17 @@ class CypherToSpark:
                 F.col("__to"),
                 F.col(vcol("__vle", "eid")).alias("__eid"),
             )
-            seed = df.select(F.col(vcol(left_var, "id"))).distinct()
+            seeds = df
+            cond = self._seed_filter(state, left_var)
+            if cond is not None:
+                seeds = seeds.where(cond)
             expansion = vl.var_length_expand(
                 edges,
                 max(min_h, 1),
                 rel.max_hops if rel.max_hops is not None else self.max_hops,
-                seed_ids=seed,
+                # not distinct: the expansion dedups the seeds itself, and
+                # a distinct here would shuffle in its bounded seed collect
+                seed_ids=seeds.select(F.col(vcol(left_var, "id"))),
                 max_rows=getattr(self, "_vl_max_rows", None),
             )
             exp = expansion.select(
@@ -1992,8 +2034,10 @@ class CypherToSpark:
             if lookup is not None:
                 lookup = lookup.drop("__from", "__to")
         if lookup is None:
-            lookup = self.spark.createDataFrame(
-                [], T.StructType([T.StructField(einfo.id_col(), T.StringType())])
+            lookup = local_frame(
+                self.spark,
+                [],
+                T.StructType([T.StructField(einfo.id_col(), T.StringType())]),
             )
         joined = ex.join(
             lookup, ex["__ec_id"] == lookup[einfo.id_col()], "left"
@@ -2306,11 +2350,9 @@ class CypherToSpark:
         if proc == "db.labels":
             name = c.yield_items[0] if c.yield_items else "label"
             rows = [(lbl,) for lbl in self.catalog.labels]
-            df = self.spark.createDataFrame(rows, f"`{vcol(name, 'val')}` string").coalesce(1)
         elif proc == "db.relationshiptypes":
             name = c.yield_items[0] if c.yield_items else "relationshipType"
             rows = [(t_,) for t_ in self.catalog.edge_types]
-            df = self.spark.createDataFrame(rows, f"`{vcol(name, 'val')}` string").coalesce(1)
         elif proc == "db.propertykeys":
             name = c.yield_items[0] if c.yield_items else "propertyKey"
             # node AND relationship property keys (reference returns both)
@@ -2321,12 +2363,10 @@ class CypherToSpark:
                     for f_ in et.df.schema.fields
                     if f_.name not in META_COLS
                 )
-            keys = sorted(keys)
-            df = self.spark.createDataFrame(
-                [(k,) for k in keys], f"`{vcol(name, 'val')}` string"
-            ).coalesce(1)
+            rows = [(k,) for k in sorted(keys)]
         else:
             raise CypherCompileError(f"unknown procedure {c.proc}")
+        df = local_frame(self.spark, rows, f"`{vcol(name, 'val')}` string")
         scope = state.scope.copy() if state.df is not None else Scope()
         scope.bind(VarInfo(name=name, kind="value", dtype=T.StringType()))
         out = state.df.crossJoin(df) if state.df is not None else df

@@ -84,6 +84,7 @@ from nicefox_graphdb_spark.graph_store import (
     null_metrics,
     observed,
 )
+from nicefox_graphdb_spark.operators.common import local_frame
 
 
 def _q(s: str) -> str:
@@ -217,7 +218,7 @@ class DurableTableStore:
         paths = [os.path.join(ddir, e["name"]) for e in t["files"]]
         schema = T.StructType.fromJson(t["schema"])
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def apply_retention(self) -> tuple[int, int]:
@@ -341,7 +342,7 @@ class DurableTableStore:
         else:
             entries = [e for e in t["files"] if self._overlaps(e, buckets)]
         if not entries:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self.spark.read.schema(schema).parquet(
             *(os.path.join(ddir, e["name"]) for e in entries)
         )

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nicefox_graphdb_spark.catalog import EdgeTable, GraphCatalog
+from nicefox_graphdb_spark.operators.common import local_frame
 
 
 class CypherRuntimeError(Exception):
@@ -198,9 +199,7 @@ class MutableGraph:
     # -- nodes ------------------------------------------------------------
     def ensure_label(self, label: str) -> None:
         if not self.catalog.has_label(label):
-            empty = self.spark.createDataFrame(
-                [], T.StructType([T.StructField("_id", T.StringType())])
-            )
+            empty = local_frame(self.spark, [], "_id string")
             self.catalog.register_node(label, empty)
 
     def append_nodes(self, label: str, rows: DataFrame) -> None:
@@ -438,16 +437,7 @@ class MutableGraph:
         for i, et in enumerate(self.catalog._edges):
             if (et.type, et.src_label, et.dst_label) == (type_, src_label, dst_label):
                 return i, False
-        empty = self.spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("_id", T.StringType()),
-                    T.StructField("_src", T.StringType()),
-                    T.StructField("_dst", T.StringType()),
-                ]
-            ),
-        )
+        empty = local_frame(self.spark, [], "_id string, _src string, _dst string")
         self.catalog.register_edge(type_, src_label, dst_label, empty)
         return len(self.catalog._edges) - 1, True
 

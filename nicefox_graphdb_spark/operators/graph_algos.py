@@ -7,7 +7,8 @@ messages = edges ⋈ vertex-state, new state = aggregate(messages), and
 every loop runs on the one superstep driver (``operators.superstep``):
 one observed lineage cut per step. Every superstep is one
 distributed join+aggregate — exactly the shape that scales to a
-1000-executor cluster.
+1000-executor cluster. SSSP alone keeps a small frontier on the driver,
+one pruned edge scan per hop (``superstep.frontier_supersteps``).
 
 Inputs are edge DataFrames with `src`/`dst` (string ids) columns; vertex
 sets are derived or passed explicitly.
@@ -15,11 +16,19 @@ sets are derived or passed explicitly.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from nicefox_graphdb_spark.operators.common import shuffle_partitions
-from nicefox_graphdb_spark.operators.superstep import cut, supersteps
+from nicefox_graphdb_spark.operators.common import local_frame, shuffle_partitions
+from nicefox_graphdb_spark.operators.superstep import (
+    bounded_rows,
+    cut,
+    frontier_supersteps,
+    supersteps,
+)
 
 # per-partition edge-row budget for the local union-find contraction in
 # connected_components: bounds each Arrow batch's numpy arrays (and the
@@ -433,33 +442,83 @@ def shortest_path_lengths(
     max_hops: int = 10,
 ) -> DataFrame:
     """Unweighted single/multi-source shortest path lengths via frontier
-    BFS with visited-set pruning (each vertex settled once per source)."""
-    # materialize the edge input once: every hop joins `edges`, so a
+    BFS with visited-set pruning (each vertex settled once per source).
+
+    Rows (start, id, dist): every source once per input row at dist 0,
+    then each (start, id) pair reached first at hop dist. A NULL id is
+    never settled, so it comes back at every hop that reaches it."""
+    # materialize the edge input once: every hop reads `edges`, so a
     # computed lineage would otherwise re-execute max_hops times (r11).
-    # NOT co-partitioned on src (unlike pagerank): the frontier side is
-    # broadcast-small every hop, so the planner never uses the edge-side
-    # partitioning — measured r12: the setup repartition alone regressed
-    # the gate +6% at x10 / +13% at sf0.1, reverted.
+    # NOT co-partitioned on src (unlike pagerank): neither hop reads the
+    # edge side's partitioning (the join hop broadcasts the edge set, the
+    # driver hop prunes it by src) — measured r12: the setup repartition
+    # alone regressed the gate +6% at x10 / +13% at sf0.1, reverted.
     edges, _ = cut(edges.select("src", "dst"))
     src0 = sources.select(F.col(sources.columns[0]).alias("start"))
-    settled = src0.select(
-        "start", F.col("start").alias("id"), F.lit(0).alias("dist")
+    schema = T.StructType(
+        [
+            T.StructField("start", src0.schema[0].dataType),
+            T.StructField("id", src0.schema[0].dataType),
+            T.StructField("dist", T.IntegerType()),
+        ]
     )
+    seeds = (
+        bounded_rows(src0)
+        if {f.dataType for f in edges.schema} == {src0.schema[0].dataType}
+        else None
+    )
+    # settled rows held on the driver, settled frames once the loop joins
+    rows = [(s, s, 0) for (s,) in seeds] if seeds is not None else []
+    frames: list[DataFrame] = []
+    if seeds is None:
+        frames.append(
+            src0.select("start", F.col("start").alias("id"), F.lit(0).alias("dist"))
+        )
+    # (start, id) pairs settled so far; a NULL never matches the anti-join
+    done = {(s, i) for s, i, _ in rows if s is not None and i is not None}
+
+    def extend(frontier: list, edge_rows: list) -> list:
+        # the join hop below on the driver: frontier ⋈ edges, distinct,
+        # anti-join on settled (start, id)
+        adj: dict = {}
+        for src, dst in edge_rows:
+            adj.setdefault(src, []).append(dst)
+        nxt = {}
+        for s, i, d in frontier:
+            for dst in adj.get(i, ()):
+                if (s, dst) not in done:
+                    nxt[(s, dst, d + 1)] = None
+        done.update((s, i) for s, i, _ in nxt if s is not None and i is not None)
+        return list(nxt)
+
+    def settled() -> DataFrame:
+        if rows or not frames:
+            # the driver's rows join the frames once, as one local frame
+            frames.insert(0, local_frame(edges.sparkSession, rows, schema))
+            rows.clear()
+        return functools.reduce(DataFrame.unionByName, frames)
 
     def hop(frontier: DataFrame, _seen) -> DataFrame:
-        # `settled` is read when the step is built, after the loop below
-        # has added the previous frontier to it
+        # `settled()` is read when the step is built, after the loop below
+        # has added the previous frontier to it. Under AQE the hop
+        # broadcasts the cut edge set, and shuffles then broadcasts the
+        # settled union for the anti-join: a job per stage.
         return (
             frontier.join(edges, frontier["id"] == edges["src"])
             .select("start", F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
             .distinct()
-            .join(settled.select("start", "id"), on=["start", "id"], how="left_anti")
+            .join(
+                settled().select("start", "id"), on=["start", "id"], how="left_anti"
+            )
         )
 
-    # each hop's frontier is cut with its size riding the cut, so the
-    # settled set is a union of materialized frontiers
-    for frontier, seen in supersteps(hop, settled, None, max_hops, n=F.count(F.lit(1))):
-        if not seen["n"]:
+    start = list(rows) if seeds is not None else frames[0]
+    hops = frontier_supersteps(hop, extend, start, edges, "src", schema, max_hops)
+    for frontier, n in hops:
+        if not n:
             break
-        settled = settled.unionByName(frontier)
-    return settled
+        if isinstance(frontier, list):
+            rows.extend(frontier)
+        else:
+            frames.append(frontier)
+    return settled()

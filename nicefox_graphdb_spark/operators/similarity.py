@@ -18,6 +18,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nicefox_graphdb_spark.operators.common import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-order double-precision dot product (oracle-reproducible)."""
@@ -150,9 +152,10 @@ def _assign_clusters(base: DataFrame, centroids: list[list[float]]) -> DataFrame
     k-row centroid table + min_by argmin. ONE distance lambda in the plan —
     inlining k centroid-literal expressions explodes codegen compile time
     (measured: minutes for k=16, d=64)."""
-    spark = base.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cluster int, c array<double>"
+    cdf = local_frame(
+        base.sparkSession,
+        list(enumerate(centroids)),
+        "cluster int, c array<double>",
     )
     d = F.aggregate(
         F.zip_with(
@@ -223,7 +226,7 @@ class IvfIndex:
         path: str | None = None,
     ):
         self.centroids = centroids
-        self.assigned = assigned  # id, v, nrm, cluster (persisted or on disk)
+        self.assigned = assigned  # id, v, nrm, cluster (checkpointed or on disk)
         self.path = path  # non-None: assigned is a cluster-partitioned scan
 
     @classmethod
@@ -268,9 +271,6 @@ class IvfIndex:
         )
         return out.orderBy(F.col("cosine").desc(), F.col("id")).limit(k)
 
-    def unpersist(self) -> None:
-        self.assigned.unpersist()
-
 
 def build_ivf_index(
     df: DataFrame,
@@ -285,10 +285,15 @@ def build_ivf_index(
     Deterministic: same data → same centroids → same index.
 
     ``path=None`` keeps the assigned frame in executor memory (iterating /
-    single session). With ``path`` the index is DEPLOYED: the assigned
-    frame is written partitioned by ``cluster`` so every probe query prunes
-    cluster= directories at the parquet file listing (no full-corpus scan,
-    no cache warm-up), and ``IvfIndex.load`` reopens it in any session.
+    single session) as a lazy local checkpoint: the first query stores its
+    blocks, later ones read them, and Spark's ContextCleaner frees them
+    once the index is unreachable. A ``persist()`` here stayed registered
+    with the session's cache manager after its index was gone: every
+    ad-hoc ``ivf_topk`` call left one more cached frame behind. With
+    ``path`` the index is DEPLOYED: the assigned frame is written
+    partitioned by ``cluster`` so every probe query prunes cluster=
+    directories at the parquet file listing (no full-corpus scan, no cache
+    warm-up), and ``IvfIndex.load`` reopens it in any session.
     """
     import json
 
@@ -307,11 +312,11 @@ def build_ivf_index(
         )
         # centroids sidecar rides the same filesystem as the data (works on
         # object stores too — no driver-local fs assumption)
-        spark.createDataFrame(
-            [(json.dumps(centroids),)], "value string"
-        ).coalesce(1).write.mode("overwrite").text(f"{path}/centroids")
+        local_frame(spark, [(json.dumps(centroids),)], "value string").coalesce(
+            1
+        ).write.mode("overwrite").text(f"{path}/centroids")
         return IvfIndex.load(spark, path)
-    return IvfIndex(centroids, assigned.persist(), path=None)
+    return IvfIndex(centroids, assigned.localCheckpoint(eager=False), path=None)
 
 
 def ivf_topk(

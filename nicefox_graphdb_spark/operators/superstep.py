@@ -12,6 +12,32 @@ Each cut is one Spark action. The aggregates a stop test needs (dangling
 mass, frontier size, changed labels, residual rows, the star check) ride
 that action as one ``Observation``; a separate ``count()`` or
 ``isEmpty()`` probe would run the step's plan a second time.
+
+Breadth-first loops (SSSP, the var-length BFS) choose each step's plan
+by the size of their frontier, as Pregelix does from its active vertex
+count (``frontier_supersteps``). A join hop costs several stages: the
+cut edge set is broadcast and the visited set shuffled and broadcast,
+and under AQE each shuffle stage is a job of its own. A frontier of a
+few rows instead stays on the driver, and each hop is one pruned scan of
+the cut edges (``edges.where(key IN ids).collect()``, one job, one
+stage) whose rows the caller joins to its frontier in Python: the
+reference's ``edges(source_id, type)`` index probe, re-expressed.
+``FRONTIER_ROWS`` bounds the rows such a loop holds on the driver, every
+frontier it has produced counted; past it the loop hands its frontier
+over as a lineage-free local frame and continues with the join hop.
+
+``FRONTIER_ROWS`` is the measured crossover of the two hops. On the ×10
+data of ``scripts/gen_scale_data.py`` (1M ``NEXT`` edges, 4 cores), one
+SSSP hop from a frontier of F rows took, driver / join (median of 3):
+
+    F         10     1k    10k    20k    50k   100k
+    driver  0.21   0.16   0.59   0.96   2.09   4.25 s
+    join    0.51   0.44   0.56   0.64   1.04   1.52 s
+
+The driver hop grows with F: the ids travel into the plan as F
+literals and the matched edges come back as rows. The join hop barely
+does. Its bound on the rows held also bounds what a plan-cache entry
+(a Cypher var-length result) keeps on the driver.
 """
 
 from __future__ import annotations
@@ -20,7 +46,14 @@ import itertools
 import os
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from nicefox_graphdb_spark.operators.common import local_frame
+
+# Most rows a breadth-first loop holds on the driver (module docstring).
+FRONTIER_ROWS = 10_000
 
 
 def _reliable_every_k() -> int:
@@ -105,3 +138,70 @@ def supersteps(
     for i in range(max_steps) if max_steps is not None else itertools.count():
         frame, seen = cut(step(frame, seen), i, copartitioned, **aggs)
         yield frame, seen
+
+
+def bounded_rows(df: DataFrame) -> list[Row] | None:
+    """``df``'s rows when it has at most ``FRONTIER_ROWS``, else None: one
+    collect of at most ``FRONTIER_ROWS + 1`` rows."""
+    rows = df.limit(FRONTIER_ROWS + 1).collect()
+    return rows if len(rows) <= FRONTIER_ROWS else None
+
+
+def pruned_scan(edges: DataFrame, key: str, ids: set) -> list[Row]:
+    """The rows of ``edges`` whose ``key`` is one of ``ids``, collected: one
+    Spark job when there are ids, none when there are not.
+
+    ``Column.isin`` makes two py4j calls per value (its literal and its
+    place in the list); string ids go over as one joined string that the
+    JVM splits, a fixed four calls whatever their number."""
+    if not ids:
+        return []
+    sep = "\x1f"
+    if all(isinstance(v, str) and sep not in v for v in ids):
+        jvm = edges.sparkSession.sparkContext._jvm
+        vals = jvm.java.util.regex.Pattern.compile(sep).split(sep.join(ids), -1)
+        seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)
+        cond = Column(F.col(key)._jc.isin(seq))
+    else:
+        cond = F.col(key).isin(list(ids))
+    return edges.where(cond).collect()
+
+
+def frontier_supersteps(
+    step: Callable[[DataFrame, dict | None], DataFrame],
+    extend: Callable[[list, list[Row]], list],
+    frontier: DataFrame | list | None,
+    edges: DataFrame,
+    key: str,
+    schema: T.StructType,
+    max_steps: int,
+) -> Iterator[tuple[DataFrame | list, int]]:
+    """Up to ``max_steps`` breadth-first steps from ``frontier``; yield each
+    new frontier with its row count.
+
+    A frontier held as a list of rows (tuples in ``schema``'s column
+    order, the vertex each row reached second) steps on the driver: those
+    vertex ids prune one scan of ``edges`` on column ``key``, and
+    ``extend(frontier, edge_rows)`` returns the next frontier's rows. A
+    frontier frame (or None) steps as ``supersteps`` does:
+    ``step(frame, seen)``, cut with its rows observed. The driver holds at
+    most ``FRONTIER_ROWS`` rows, the first frontier and every one yielded
+    since counted; the step that would pass that yields its frontier as a
+    local frame instead, and every later step joins. The caller stops by
+    breaking out of its loop."""
+    held = 0
+    while isinstance(frontier, list) and max_steps > 0:
+        held += len(frontier)
+        ids = {r[1] for r in frontier} - {None}
+        nxt = extend(frontier, pruned_scan(edges, key, ids))
+        max_steps -= 1
+        if held + len(nxt) > FRONTIER_ROWS:
+            frontier = local_frame(edges.sparkSession, nxt, schema)
+        else:
+            frontier = nxt
+        yield frontier, len(nxt)
+    if not isinstance(frontier, list):
+        for frontier, seen in supersteps(
+            step, frontier, None, max_steps, rows=F.count(F.lit(1))
+        ):
+            yield frontier, seen["rows"]

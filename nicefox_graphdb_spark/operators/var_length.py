@@ -14,8 +14,12 @@ Scale design:
   expansion happens.
 - **Cycle check** is `array_contains(path_eids, eid)` per candidate edge —
   Cypher relationship-isomorphism (no edge reused within one path).
-- **One observed cut per hop**: the hops run on the superstep driver
-  (``operators.superstep``). The edge set is cut once and every hop's
+- **Frontier-sized hops**: the hops run on the superstep driver
+  (``operators.superstep.frontier_supersteps``) over an edge set cut once.
+  A seed set of at most ``FRONTIER_ROWS`` ids (one bounded collect) keeps
+  its paths on the driver, and each hop is one pruned scan of the edges
+  whose ``__from`` is a frontier end; the result is one local frame. A
+  larger seed set, or paths past the bound, join per hop instead: each
   frontier is cut with its row count riding the cut, so the result is a
   union of materialized frontiers (a recursive CTE's memo table,
   re-expressed) and no hop runs a separate count or emptiness probe.
@@ -30,8 +34,14 @@ import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from nicefox_graphdb_spark.operators.superstep import cut, supersteps
+from nicefox_graphdb_spark.operators.common import local_frame
+from nicefox_graphdb_spark.operators.superstep import (
+    bounded_rows,
+    cut,
+    frontier_supersteps,
+)
 
 DEFAULT_MAX_HOPS = 12
 
@@ -102,18 +112,57 @@ def var_length_expand(
             )
         )
 
+    schema = T.StructType(
+        [
+            T.StructField(START, edges.schema["__from"].dataType),
+            T.StructField(END, edges.schema["__to"].dataType),
+            T.StructField(PATH_EIDS, T.ArrayType(edges.schema["__eid"].dataType)),
+            T.StructField(PATH_NODES, T.ArrayType(edges.schema["__to"].dataType)),
+            T.StructField(HOPS, T.IntegerType()),
+        ]
+    )
+    # a bounded seed set starts on the driver, each seed a zero-hop path
+    # whose first extension is hop 1; otherwise the first hop is `base`
+    id_types = {edges.schema[c].dataType for c in ("__from", "__to")}
+    seeds = None
+    if seed_ids is not None and id_types == {seed_ids.schema[0].dataType}:
+        seeds = bounded_rows(seed_ids)
+    start = None
+    if seeds is not None:
+        start = [(s, s, [], [], 0) for s in dict.fromkeys(r[0] for r in seeds)]
+
+    def extend(frontier: list, edge_rows: list) -> list:
+        # `hop` on the driver. Past hop 1, array_contains is NULL (the row
+        # dropped) for a NULL eid and for a path that holds one
+        adj: dict = {}
+        for src, dst, eid in edge_rows:
+            adj.setdefault(src, []).append((dst, eid))
+        out = []
+        for s, end, eids, nodes, n in frontier:
+            for dst, eid in adj.get(end, ()):
+                if eids and (eid is None or None in eids or eid in eids):
+                    continue
+                out.append((s, dst, [*eids, eid], [*nodes, dst], n + 1))
+        return out
+
+    rows: list = []
     results: list[DataFrame] = []
     collected = 0
-    hops = supersteps(hop, None, None, max_hops, rows=F.count(F.lit(1)))
-    for n, (frontier, seen) in enumerate(hops, 1):
-        if not seen["rows"]:
+    hops = frontier_supersteps(hop, extend, start, edges, "__from", schema, max_hops)
+    for n, (frontier, k) in enumerate(hops, 1):
+        if not k:
             break
         if n >= min_hops:
-            results.append(frontier)
-            collected += seen["rows"]
+            if isinstance(frontier, list):
+                rows.extend(frontier)
+            else:
+                results.append(frontier)
+            collected += k
             if max_rows is not None and collected >= max_rows:
                 break
 
+    if rows:
+        results.insert(0, local_frame(edges.sparkSession, rows, schema))
     if not results:
         return base.where(F.lit(False))
     return functools.reduce(DataFrame.unionByName, results)

@@ -8,9 +8,9 @@ from nicefox_graphdb_spark.sources import load_tpch_graph
 SF_DIR = os.environ.get("NICEFOX_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def jobs_during(spark, fn) -> int:
-    """Spark jobs scheduled while ``fn()`` runs, counted by a job group
-    of their own."""
+def _group_jobs(spark, fn) -> list[int]:
+    """Ids of the Spark jobs scheduled while ``fn()`` runs, counted by a
+    job group of their own."""
     import uuid
 
     tag = f"jobs-during-{uuid.uuid4().hex}"
@@ -20,7 +20,29 @@ def jobs_during(spark, fn) -> int:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(tag))
+    return list(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def jobs_during(spark, fn) -> int:
+    """Spark jobs scheduled while ``fn()`` runs."""
+    return len(_group_jobs(spark, fn))
+
+
+def stages_during(spark, fn) -> int:
+    """Stages run (skipped ones not counted) by the Spark jobs scheduled
+    while ``fn()`` runs. Under AQE a job can hold several stages, or
+    re-read a shuffle another job wrote, so the job count alone does not
+    tell how much was scheduled."""
+    jobs = _group_jobs(spark, fn)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    # a skipped stage ran no task; the status store may also have dropped
+    # it already (it evicts skipped stages first), so a missing one counts
+    # as skipped too
+    infos = [
+        tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds
+    ]
+    return sum(1 for i in infos if i is not None and i.numCompletedTasks > 0)
 
 
 @pytest.fixture(scope="session")

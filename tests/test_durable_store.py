@@ -145,6 +145,23 @@ def test_small_write_lands_as_one_stats_tagged_file(spark, tmp_path):
     assert 0 < inside < 50
 
 
+def test_read_of_no_file_plans_no_python_scan(spark, tmp_path):
+    # a read that matches no data file is an Arrow-built empty
+    # LocalRelation, not a Python-RDD scan (Scan ExistingRDD) that runs a
+    # Python-worker stage on every action over it
+    from pyspark.sql import types as T
+
+    store = DurableTableStore(spark, str(tmp_path / "nf"), n_buckets=8)
+    schema = T.StructType([T.StructField("_id", T.StringType())])
+    store.create_table("nodes/E", {"kind": "node", "label": "E"}, schema)
+    store.commit()
+    version = store.manifest["version"]
+    for df in (store.read_table("nodes/E"), store.read_table_at("nodes/E", version)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.collect() == [] and df.schema == schema
+
+
 def test_bucket_compaction_bounds_file_count(spark, tmp_path):
     store = DurableTableStore(
         spark, str(tmp_path / "t"), n_buckets=1, compact_threshold=3

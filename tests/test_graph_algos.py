@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from conftest import jobs_during
 from nicefox_graphdb_spark.operators import graph_algos as ga
+from nicefox_graphdb_spark.operators import superstep
 from nicefox_graphdb_spark.operators.superstep import cut
 
 
@@ -23,6 +24,19 @@ def _formatted(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@pytest.fixture()
+def join_hops(monkeypatch):
+    """Every breadth-first hop joins: no frontier is small enough to stay
+    on the driver."""
+    monkeypatch.setattr(superstep, "FRONTIER_ROWS", 0)
+
+
+@pytest.fixture()
+def driver_hops(monkeypatch):
+    """Every breadth-first hop of a test-sized graph runs on the driver."""
+    monkeypatch.setattr(superstep, "FRONTIER_ROWS", 10**9)
 
 
 @pytest.fixture(scope="module")
@@ -231,6 +245,7 @@ def test_pagerank_lineage_is_cut_per_superstep(spark):
     assert plan.count("Join") <= 3, plan
 
 
+@pytest.mark.usefixtures("join_hops")
 def test_sssp_frontiers_are_materialized(spark):
     # per-hop cut with the frontier count riding it: the returned settled
     # set must be a union of materialized frontiers (LogicalRDDs) with NO
@@ -242,6 +257,20 @@ def test_sssp_frontiers_are_materialized(spark):
     sources = spark.createDataFrame([("n0",)], "start string")
     plan = _analyzed(ga.shortest_path_lengths(edges, sources, max_hops=5))
     assert "LogicalRDD" in plan
+    assert "Join" not in plan, plan
+
+
+@pytest.mark.usefixtures("driver_hops")
+def test_sssp_driver_frontiers_are_local(spark):
+    # a frontier small enough to stay on the driver: every hop is one
+    # pruned edge scan, and the settled set comes back as one
+    # LocalRelation with no join (and no lineage) in its plan
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(12)], "src string, dst string"
+    )
+    sources = spark.createDataFrame([("n0",)], "start string")
+    plan = _analyzed(ga.shortest_path_lengths(edges, sources, max_hops=5))
+    assert plan.startswith("LocalRelation"), plan
     assert "Join" not in plan, plan
 
 

@@ -239,6 +239,48 @@ def test_ivf_topk_recall(spark, tables):
     assert approx == approx2
 
 
+def _persistent_rdds(spark) -> int:
+    """Persistent RDDs left once every unreachable one is collected: py4j
+    releases a dropped Python handle from a background thread, so wait
+    for that queue to drain before asking the JVM to collect."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    pending = sc._gateway._gateway_client.finalizer_deque
+    for _ in range(2):
+        gc.collect()
+        while pending:
+            time.sleep(0.05)
+        time.sleep(0.2)
+        sc._jvm.System.gc()
+    return sc._jsc.getPersistentRDDs().size()
+
+
+def test_adhoc_ivf_topk_frees_its_index(spark, tables):
+    # an ad-hoc call builds its index and drops it: the assigned frame's
+    # blocks go with it (a persist() here stayed cached for good, one
+    # more frame per call)
+    emb = tables["embeddings"]
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
+    before = _persistent_rdds(spark)
+    for _ in range(3):
+        rows = sim.ivf_topk(emb, "vec_id", "embedding", qv, dim=64, k=5).collect()
+        assert len(rows) == 5
+    assert _persistent_rdds(spark) == before
+
+
+def test_assign_clusters_plans_no_python_scan(tables):
+    # the centroid table is an Arrow-built LocalRelation: no Python-worker
+    # stage (Scan ExistingRDD) inside every IVF build
+    base = tables["embeddings"].select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
+    )
+    plan = sim._assign_clusters(base, [[0.0] * 64, [1.0] * 64])
+    plan = plan._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_embedding_neardup_max_rows_guard(spark):
     """The exact O(N^2) tier refuses unbounded input (100 TB contract):
     callers must pre-bound candidates or use the ANN tier."""

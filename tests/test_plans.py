@@ -4,7 +4,7 @@ survive compiler changes (the 100 TB properties are plan properties)."""
 import contextlib
 import io
 
-from conftest import jobs_during
+from conftest import jobs_during, stages_during
 
 
 def plan_of(engine, q: str) -> str:
@@ -269,15 +269,16 @@ def test_driver_memory_default(monkeypatch):
 
 
 def test_var_length_read_job_budget(engine, spark):
-    # a keyed var-length read, compile + collect. Every hop is one cut
-    # with its row count riding it, so no count or isEmpty probe re-runs a
-    # hop: *1..3 measured 14 (22 with a probe per hop and the edge cut in
-    # the compiler). *1..1 has nothing to iterate and cuts nothing: 8 jobs.
+    # a keyed var-length read, compile + collect. The one seed stays on
+    # the driver: the edge cut (2 jobs), one bounded seed collect, one
+    # pruned edge scan per hop (3), then the query's own 5 jobs: *1..3
+    # measured 11 (14 with a cut join per hop, 22 with a probe per hop as
+    # well). *1..1 has nothing to iterate and cuts nothing: 8 jobs.
     q = (
         "MATCH (e:Event {event_id: $k})-[:NEXT*%s]->(x:Event) "
         "RETURN x.event_id AS id ORDER BY id"
     )
-    for hops, budget in (("1..3", 14), ("1..1", 8)):
+    for hops, budget in (("1..3", 11), ("1..1", 8)):
         query = q % hops
         engine.query(query, {"k": 3})  # warm compile
         n = jobs_during(
@@ -285,6 +286,31 @@ def test_var_length_read_job_budget(engine, spark):
             lambda: engine.dataframe(query, {"k": 9}).collect(),
         )
         assert n <= budget, f"*{hops} read scheduled {n} jobs (budget {budget})"
+
+
+def test_shortest_paths_gate_runs_one_job_per_hop(spark):
+    # q_shortest_paths on sf0.001: 10 sources and 6 hops, every frontier
+    # small enough to stay on the driver. Fixed jobs: the edge cut (2: the
+    # window's shuffle and the checkpoint), the bounded source collect (1)
+    # and the final ordered collect (3: sample, shuffle, result); then one
+    # pruned edge scan, one job and one stage, per hop. Measured 12 jobs
+    # and 12 stages run (34 of each with a join per hop).
+    import os
+    import sys
+
+    from conftest import SF_DIR
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    import __spark_entry__ as entrymod
+
+    gate = entrymod.queries()["q_shortest_paths"]
+    run = lambda: gate(spark, SF_DIR).collect()  # noqa: E731
+    run()  # warm
+    budget = 6 + 2 + 1 + 3
+    n = jobs_during(spark, run)
+    assert n <= budget, f"q_shortest_paths scheduled {n} jobs (budget {budget})"
+    n = stages_during(spark, run)
+    assert n <= budget, f"q_shortest_paths ran {n} stages (budget {budget})"
 
 
 def _mini_write_engine(spark):
