@@ -683,14 +683,11 @@ class CypherToSpark:
         new_edge_vars: list[VarInfo] = []
         where_scores = self._selectivity_scores(m.where)
         paths = self._order_paths(m.paths, state.scope, where_scores)
-        # read by var-length hops while this MATCH's own paths compile
-        self._match_where = self._conjuncts(m.where) if m.where is not None else []
-        try:
-            for path in paths:
-                path = self._maybe_reverse_path(path, state.scope, where_scores)
-                state = self._compile_path(state, path, new_edge_vars)
-        finally:
-            self._match_where = []
+        # a var-length hop prunes its seeds by these
+        where = self._conjuncts(m.where) if m.where is not None else []
+        for path in paths:
+            path = self._maybe_reverse_path(path, state.scope, where_scores)
+            state = self._compile_path(state, path, new_edge_vars, where)
         state = self._apply_edge_uniqueness(state, new_edge_vars)
         if m.where is not None:
             state = self._apply_where(state, m.where)
@@ -718,11 +715,13 @@ class CypherToSpark:
         ast.IsNull, ast.ListLit,
     )
 
-    def _seed_filter(self, state: CompileState, var: str) -> Column | None:
-        """The MATCH's WHERE conjuncts that read ``var`` alone and hold only
-        ``_SEED_FILTER_NODES``, compiled as one filter; None when there are
-        none. WHERE still applies in full after the pattern: this only
-        prunes which rows start a var-length expansion."""
+    def _seed_filter(
+        self, state: CompileState, var: str, where: list[ast.Expr]
+    ) -> Column | None:
+        """The conjuncts of ``where`` (the MATCH's WHERE) that read ``var``
+        alone and hold only ``_SEED_FILTER_NODES``, compiled as one filter;
+        None when there are none. WHERE still applies in full after the
+        pattern: this only prunes which rows start a var-length expansion."""
 
         def simple(node) -> bool:
             if isinstance(node, (list, tuple)):
@@ -734,7 +733,7 @@ class CypherToSpark:
             )
 
         conds = []
-        for c in getattr(self, "_match_where", []):
+        for c in where:
             if _expr_var_names(c) == {var} and simple(c):
                 try:
                     conds.append(self._compile_expr(state, c).col)
@@ -836,6 +835,7 @@ class CypherToSpark:
         state: CompileState,
         path: ast.PatternPath,
         new_edge_vars: list[VarInfo],
+        where: list[ast.Expr],
     ) -> CompileState:
         elements = path.elements
         first = elements[0]
@@ -856,7 +856,7 @@ class CypherToSpark:
             assert isinstance(rel, ast.RelPattern) and isinstance(
                 node, ast.NodePattern
             )
-            state, left_var, rinfo = self._add_hop(state, left_var, rel, node)
+            state, left_var, rinfo = self._add_hop(state, left_var, rel, node, where)
             if rinfo is not None:
                 new_edge_vars.append(rinfo)
                 if rinfo.var_length:
@@ -970,6 +970,7 @@ class CypherToSpark:
         left_var: str,
         rel: ast.RelPattern,
         right_np: ast.NodePattern,
+        where: list[ast.Expr],
     ) -> tuple[CompileState, str, VarInfo | None]:
         rel_var = rel.var or self.gensym("r")
         left_info = state.scope.get(left_var)
@@ -995,7 +996,14 @@ class CypherToSpark:
 
         if rel.var_length:
             return self._add_var_length_hop(
-                state, left_var, rel, rel_var, right_np, left_labels, right_labels
+                state,
+                left_var,
+                rel,
+                rel_var,
+                right_np,
+                left_labels,
+                right_labels,
+                where,
             )
 
         rvar = right_np.var or self.gensym("n")
@@ -1081,6 +1089,7 @@ class CypherToSpark:
         right_np: ast.NodePattern,
         left_labels: list[str] | None,
         right_labels: list[str] | None,
+        where: list[ast.Expr],
     ) -> tuple[CompileState, str, VarInfo]:
         # Oriented edge set for the traversal. Label constraints only prune
         # the first/last hop in general, so for multi-hop we cannot constrain
@@ -1127,7 +1136,7 @@ class CypherToSpark:
                 F.col(vcol("__vle", "eid")).alias("__eid"),
             )
             seeds = df
-            cond = self._seed_filter(state, left_var)
+            cond = self._seed_filter(state, left_var, where)
             if cond is not None:
                 seeds = seeds.where(cond)
             expansion = vl.var_length_expand(

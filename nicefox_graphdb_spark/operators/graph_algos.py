@@ -30,6 +30,17 @@ from nicefox_graphdb_spark.operators.superstep import (
     supersteps,
 )
 
+# Most (start, id, dist) rows SSSP holds on the driver before its hops
+# join (``superstep.frontier_supersteps``): the measured crossover of the
+# two hops. One hop from a frontier of F rows on the ×10 ``NEXT`` edges
+# of ``scripts/gen_scale_data.py`` (1M edges, 4 cores), driver / join,
+# median of 3:
+#
+#     F         10     1k    10k    20k    50k   100k
+#     driver  0.21   0.16   0.59   0.96   2.09   4.25 s
+#     join    0.51   0.44   0.56   0.64   1.04   1.52 s
+SSSP_FRONTIER_ROWS = 10_000
+
 # per-partition edge-row budget for the local union-find contraction in
 # connected_components: bounds each Arrow batch's numpy arrays (and the
 # factorize dictionary) independent of corpus size
@@ -463,7 +474,7 @@ def shortest_path_lengths(
         ]
     )
     seeds = (
-        bounded_rows(src0)
+        bounded_rows(src0, SSSP_FRONTIER_ROWS)
         if {f.dataType for f in edges.schema} == {src0.schema[0].dataType}
         else None
     )
@@ -477,9 +488,9 @@ def shortest_path_lengths(
     # (start, id) pairs settled so far; a NULL never matches the anti-join
     done = {(s, i) for s, i, _ in rows if s is not None and i is not None}
 
-    def extend(frontier: list, edge_rows: list) -> list:
+    def extend(frontier: list, edge_rows: list, limit: int) -> list | None:
         # the join hop below on the driver: frontier ⋈ edges, distinct,
-        # anti-join on settled (start, id)
+        # anti-join on settled (start, id); None past `limit` rows
         adj: dict = {}
         for src, dst in edge_rows:
             adj.setdefault(src, []).append(dst)
@@ -488,6 +499,8 @@ def shortest_path_lengths(
             for dst in adj.get(i, ()):
                 if (s, dst) not in done:
                     nxt[(s, dst, d + 1)] = None
+                    if len(nxt) > limit:
+                        return None
         done.update((s, i) for s, i, _ in nxt if s is not None and i is not None)
         return list(nxt)
 
@@ -513,7 +526,9 @@ def shortest_path_lengths(
         )
 
     start = list(rows) if seeds is not None else frames[0]
-    hops = frontier_supersteps(hop, extend, start, edges, "src", schema, max_hops)
+    hops = frontier_supersteps(
+        hop, extend, start, edges, "src", schema, max_hops, SSSP_FRONTIER_ROWS
+    )
     for frontier, n in hops:
         if not n:
             break

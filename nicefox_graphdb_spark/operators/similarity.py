@@ -287,13 +287,17 @@ def build_ivf_index(
     ``path=None`` keeps the assigned frame in executor memory (iterating /
     single session) as a lazy local checkpoint: the first query stores its
     blocks, later ones read them, and Spark's ContextCleaner frees them
-    once the index is unreachable. A ``persist()`` here stayed registered
-    with the session's cache manager after its index was gone: every
-    ad-hoc ``ivf_topk`` call left one more cached frame behind. With
-    ``path`` the index is DEPLOYED: the assigned frame is written
-    partitioned by ``cluster`` so every probe query prunes cluster=
-    directories at the parquet file listing (no full-corpus scan, no cache
-    warm-up), and ``IvfIndex.load`` reopens it in any session.
+    once the index is unreachable, so an ad-hoc ``ivf_topk`` call leaves
+    no cached frame behind. Such an index does not survive executor loss:
+    checkpoint blocks have no lineage to recompute them from, so every
+    later query of it fails and it must be built again. A ``persist()``
+    would recompute, but Spark keys a cache by plan: an index uncaching
+    itself when dropped would also uncache every live index built alike.
+    An index that must outlive an executor is deployed instead: with
+    ``path`` the assigned frame is written partitioned by ``cluster`` so
+    every probe query prunes cluster= directories at the parquet file
+    listing (no full-corpus scan, no cache warm-up), and ``IvfIndex.load``
+    reopens it in any session.
     """
     import json
 

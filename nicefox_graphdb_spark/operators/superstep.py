@@ -22,22 +22,19 @@ few rows instead stays on the driver, and each hop is one pruned scan of
 the cut edges (``edges.where(key IN ids).collect()``, one job, one
 stage) whose rows the caller joins to its frontier in Python: the
 reference's ``edges(source_id, type)`` index probe, re-expressed.
-``FRONTIER_ROWS`` bounds the rows such a loop holds on the driver, every
-frontier it has produced counted; past it the loop hands its frontier
-over as a lineage-free local frame and continues with the join hop.
+Each loop passes its own bound on the rows it holds on the driver, every
+frontier it has produced counted, and on the rows one driver hop takes
+in; past it the loop hands its frontier over as a lineage-free local
+frame and continues with the join hop.
 
-``FRONTIER_ROWS`` is the measured crossover of the two hops. On the ×10
-data of ``scripts/gen_scale_data.py`` (1M ``NEXT`` edges, 4 cores), one
-SSSP hop from a frontier of F rows took, driver / join (median of 3):
-
-    F         10     1k    10k    20k    50k   100k
-    driver  0.21   0.16   0.59   0.96   2.09   4.25 s
-    join    0.51   0.44   0.56   0.64   1.04   1.52 s
-
-The driver hop grows with F: the ids travel into the plan as F
-literals and the matched edges come back as rows. The join hop barely
-does. Its bound on the rows held also bounds what a plan-cache entry
-(a Cypher var-length result) keeps on the driver.
+Each bound is set from the measured crossover of that loop's two hops on
+the ×10 data of ``scripts/gen_scale_data.py`` (1M ``NEXT`` edges, 4 cores):
+``graph_algos.SSSP_FRONTIER_ROWS`` and ``var_length.FRONTIER_PATHS``,
+tables beside them. The driver hop grows with the frontier: its ids
+travel into the plan as literals and the matched edges come back as
+rows. The join hop barely does. A bound on the rows held also bounds
+what a plan-cache entry (a Cypher var-length result) keeps on the
+driver.
 """
 
 from __future__ import annotations
@@ -52,8 +49,9 @@ from pyspark.sql import types as T
 
 from nicefox_graphdb_spark.operators.common import local_frame
 
-# Most rows a breadth-first loop holds on the driver (module docstring).
-FRONTIER_ROWS = 10_000
+# partitions the first job of a limited collect scans (Spark's default 1,
+# then 4x more per job until the limit is met)
+_LIMIT_PARTS = "spark.sql.limit.initialNumPartitions"
 
 
 def _reliable_every_k() -> int:
@@ -83,6 +81,16 @@ def _moved(df: DataFrame, session: SparkSession) -> DataFrame:
     return DataFrame(jdf, session)
 
 
+def _clone(home: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``home`` with ``conf`` set: the frames moved into it plan
+    and run under that conf while ``home``, shared with other threads,
+    keeps its own."""
+    iso = type(home)(home.sparkContext, home._jsparkSession.cloneSession())
+    for k, v in conf.items():
+        iso.conf.set(k, v)
+    return iso
+
+
 def cut(
     df: DataFrame, i: int = 0, copartitioned: bool = False, **aggs: Column
 ) -> tuple[DataFrame, dict]:
@@ -102,9 +110,7 @@ def cut(
     server's), whose plans must keep AQE."""
     home = df.sparkSession
     if copartitioned:
-        iso = type(home)(home.sparkContext, home._jsparkSession.cloneSession())
-        iso.conf.set("spark.sql.adaptive.enabled", "false")
-        df = _moved(df, iso)
+        df = _moved(df, _clone(home, {"spark.sql.adaptive.enabled": "false"}))
     if aggs:
         obs = Observation()
         # Attached after the move, in the session that runs the action: an
@@ -140,41 +146,50 @@ def supersteps(
         yield frame, seen
 
 
-def bounded_rows(df: DataFrame) -> list[Row] | None:
-    """``df``'s rows when it has at most ``FRONTIER_ROWS``, else None: one
-    collect of at most ``FRONTIER_ROWS + 1`` rows."""
-    rows = df.limit(FRONTIER_ROWS + 1).collect()
-    return rows if len(rows) <= FRONTIER_ROWS else None
+def bounded_rows(df: DataFrame, bound: int) -> list[Row] | None:
+    """``df``'s rows when it has at most ``bound``, else None: one collect
+    of at most ``bound + 1`` rows."""
+    rows = df.limit(bound + 1).collect()
+    return rows if len(rows) <= bound else None
 
 
-def pruned_scan(edges: DataFrame, key: str, ids: set) -> list[Row]:
-    """The rows of ``edges`` whose ``key`` is one of ``ids``, collected: one
-    Spark job when there are ids, none when there are not.
+def pruned_scan(edges: DataFrame, key: str, ids: set, limit: int) -> list[Row] | None:
+    """The rows of ``edges`` whose ``key`` is one of ``ids``, collected when
+    there are at most ``limit`` of them, else None: at most ``limit + 1``
+    rows reach Python. No job when there are no ids; one when ``edges``'
+    session scans every partition in a limit's first job
+    (``frontier_supersteps`` moves its edges into such a session).
 
     ``Column.isin`` makes two py4j calls per value (its literal and its
-    place in the list); string ids go over as one joined string that the
-    JVM splits, a fixed four calls whatever their number."""
+    place in the list); non-empty string ids go over as one joined string
+    that the JVM splits into a ``java.util.List`` for
+    ``Column.isInCollection``, a fixed four calls whatever their number.
+    Collecting the rows of 1k / 10k ids from a 200k-row frame took
+    0.32 / 0.51 s this way and 0.64 / 4.10 s through ``isin`` (4 cores)."""
     if not ids:
         return []
     sep = "\x1f"
-    if all(isinstance(v, str) and sep not in v for v in ids):
+    # a non-empty id never splits into the empty string that a stream
+    # split drops at the end
+    if all(isinstance(v, str) and v and sep not in v for v in ids):
         jvm = edges.sparkSession.sparkContext._jvm
-        vals = jvm.java.util.regex.Pattern.compile(sep).split(sep.join(ids), -1)
-        seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)
-        cond = Column(F.col(key)._jc.isin(seq))
+        vals = jvm.java.util.regex.Pattern.compile(sep).splitAsStream(sep.join(ids))
+        cond = Column(F.col(key)._jc.isInCollection(vals.toList()))
     else:
         cond = F.col(key).isin(list(ids))
-    return edges.where(cond).collect()
+    rows = edges.where(cond).limit(limit + 1).collect()
+    return rows if len(rows) <= limit else None
 
 
 def frontier_supersteps(
     step: Callable[[DataFrame, dict | None], DataFrame],
-    extend: Callable[[list, list[Row]], list],
+    extend: Callable[[list, list[Row], int], list | None],
     frontier: DataFrame | list | None,
     edges: DataFrame,
     key: str,
     schema: T.StructType,
     max_steps: int,
+    bound: int,
 ) -> Iterator[tuple[DataFrame | list, int]]:
     """Up to ``max_steps`` breadth-first steps from ``frontier``; yield each
     new frontier with its row count.
@@ -182,20 +197,36 @@ def frontier_supersteps(
     A frontier held as a list of rows (tuples in ``schema``'s column
     order, the vertex each row reached second) steps on the driver: those
     vertex ids prune one scan of ``edges`` on column ``key``, and
-    ``extend(frontier, edge_rows)`` returns the next frontier's rows. A
-    frontier frame (or None) steps as ``supersteps`` does:
-    ``step(frame, seen)``, cut with its rows observed. The driver holds at
-    most ``FRONTIER_ROWS`` rows, the first frontier and every one yielded
-    since counted; the step that would pass that yields its frontier as a
-    local frame instead, and every later step joins. The caller stops by
-    breaking out of its loop."""
+    ``extend(frontier, edge_rows, limit)`` returns the next frontier's
+    rows, or None once they would pass ``limit``. A frontier frame (or
+    None) steps as ``supersteps`` does: ``step(frame, seen)``, cut with its
+    rows observed.
+
+    A driver step takes in at most ``bound`` edge rows and builds at most
+    ``bound`` next rows: its scan and its ``extend`` each stop one row
+    past that, before the rest of a high-degree vertex's edges or paths
+    reach the driver, and the step runs as a join instead, from its
+    frontier turned into a local frame. The frontiers the loop keeps on
+    the driver, the first one and every one yielded since, stay within
+    ``bound`` rows: the step whose rows would pass that yields them as a
+    local frame instead. Every step after either hand-over joins. The
+    caller stops by breaking out of its loop."""
     held = 0
+    scan_edges = None
     while isinstance(frontier, list) and max_steps > 0:
         held += len(frontier)
         ids = {r[1] for r in frontier} - {None}
-        nxt = extend(frontier, pruned_scan(edges, key, ids))
+        if scan_edges is None and ids:
+            # one job per scan: the limit's first job reads every partition
+            iso = _clone(edges.sparkSession, {_LIMIT_PARTS: str(1 << 30)})
+            scan_edges = _moved(edges, iso)
+        edge_rows = pruned_scan(scan_edges, key, ids, bound)
+        nxt = extend(frontier, edge_rows, bound) if edge_rows is not None else None
+        if nxt is None:
+            frontier = local_frame(edges.sparkSession, frontier, schema)
+            break
         max_steps -= 1
-        if held + len(nxt) > FRONTIER_ROWS:
+        if held + len(nxt) > bound:
             frontier = local_frame(edges.sparkSession, nxt, schema)
         else:
             frontier = nxt

@@ -16,7 +16,7 @@ Scale design:
   Cypher relationship-isomorphism (no edge reused within one path).
 - **Frontier-sized hops**: the hops run on the superstep driver
   (``operators.superstep.frontier_supersteps``) over an edge set cut once.
-  A seed set of at most ``FRONTIER_ROWS`` ids (one bounded collect) keeps
+  A seed set of at most ``FRONTIER_PATHS`` ids (one bounded collect) keeps
   its paths on the driver, and each hop is one pruned scan of the edges
   whose ``__from`` is a frontier end; the result is one local frame. A
   larger seed set, or paths past the bound, join per hop instead: each
@@ -44,6 +44,20 @@ from nicefox_graphdb_spark.operators.superstep import (
 )
 
 DEFAULT_MAX_HOPS = 12
+
+# Most paths the BFS holds on the driver before its hops join
+# (``superstep.frontier_supersteps``): below the measured crossover of the
+# two hops, near 6k. One hop from F two-hop paths on the ×10 ``NEXT``
+# edges of ``scripts/gen_scale_data.py`` (1M edges, 4 cores), driver
+# (scan and extension, then the paths' local frame) / join, median of 3:
+#
+#     F         10     1k     2k     5k     7k    10k    20k    50k
+#     driver  0.18   0.21   0.20   0.30   0.46   0.54   0.94   2.17 s
+#     join    0.35   0.34   0.35   0.38   0.34   0.37   0.43   0.63 s
+#
+# A path row carries two arrays, so it costs the driver more than an SSSP
+# row: this crossover sits lower than ``graph_algos.SSSP_FRONTIER_ROWS``.
+FRONTIER_PATHS = 5_000
 
 START, END, PATH_EIDS, PATH_NODES, HOPS = (
     "__vl_start",
@@ -102,7 +116,12 @@ def var_length_expand(
             return base
         return (
             frontier.join(edges, frontier[END] == F.col("__from"))
-            .where(~F.array_contains(F.col(PATH_EIDS), F.col("__eid")))
+            # a zero-hop path (a driver frontier of seeds handed over to
+            # this join) takes any edge, as `base` does
+            .where(
+                (F.size(PATH_EIDS) == 0)
+                | ~F.array_contains(F.col(PATH_EIDS), F.col("__eid"))
+            )
             .select(
                 F.col(START),
                 F.col("__to").alias(END),
@@ -126,14 +145,15 @@ def var_length_expand(
     id_types = {edges.schema[c].dataType for c in ("__from", "__to")}
     seeds = None
     if seed_ids is not None and id_types == {seed_ids.schema[0].dataType}:
-        seeds = bounded_rows(seed_ids)
+        seeds = bounded_rows(seed_ids, FRONTIER_PATHS)
     start = None
     if seeds is not None:
         start = [(s, s, [], [], 0) for s in dict.fromkeys(r[0] for r in seeds)]
 
-    def extend(frontier: list, edge_rows: list) -> list:
-        # `hop` on the driver. Past hop 1, array_contains is NULL (the row
-        # dropped) for a NULL eid and for a path that holds one
+    def extend(frontier: list, edge_rows: list, limit: int) -> list | None:
+        # `hop` on the driver; None past `limit` paths. Past hop 1,
+        # array_contains is NULL (the row dropped) for a NULL eid and for a
+        # path that holds one
         adj: dict = {}
         for src, dst, eid in edge_rows:
             adj.setdefault(src, []).append((dst, eid))
@@ -142,13 +162,17 @@ def var_length_expand(
             for dst, eid in adj.get(end, ()):
                 if eids and (eid is None or None in eids or eid in eids):
                     continue
+                if len(out) == limit:
+                    return None
                 out.append((s, dst, [*eids, eid], [*nodes, dst], n + 1))
         return out
 
     rows: list = []
     results: list[DataFrame] = []
     collected = 0
-    hops = frontier_supersteps(hop, extend, start, edges, "__from", schema, max_hops)
+    hops = frontier_supersteps(
+        hop, extend, start, edges, "__from", schema, max_hops, FRONTIER_PATHS
+    )
     for n, (frontier, k) in enumerate(hops, 1):
         if not k:
             break

@@ -1,10 +1,12 @@
 """The two hop paths of a breadth-first loop return the same rows.
 
-``superstep.frontier_supersteps`` expands a frontier of at most
-``FRONTIER_ROWS`` held rows on the driver (one pruned edge scan per hop)
-and a larger one with a join per hop. Each test forces one path or the
-other by setting the constant to 0 (every hop joins) or to a large value
-(every hop of these graphs stays on the driver), counts the hops each
+``superstep.frontier_supersteps`` expands a frontier on the driver (one
+pruned edge scan per hop) while the rows its loop holds stay within the
+loop's bound (``graph_algos.SSSP_FRONTIER_ROWS``,
+``var_length.FRONTIER_PATHS``), and with a join per hop past it. Each
+test forces one path or the other by setting both bounds to 0 (every hop
+joins) or to a large value (every hop of these graphs stays on the
+driver), counts the hops each
 path took, and compares the rows: SSSP (``graph_algos``) and the Cypher
 var-length BFS (``var_length``), including runs that hand a frontier
 from the driver to the join path mid-run."""
@@ -23,14 +25,16 @@ JOIN, DRIVER = 0, 10**9
 @pytest.fixture()
 def hops(monkeypatch):
     """Counts of the hops each path ran (``driver``: pruned scans,
-    ``join``: joined supersteps); ``set(rows)`` sets the constant and
+    ``join``: joined supersteps); ``set(rows)`` sets both bounds and
     resets the counts."""
-    taken = {"driver": 0, "join": 0}
+    taken = {"driver": 0, "join": 0, "overflow": 0}
     scan, steps = superstep.pruned_scan, superstep.supersteps
 
     def counted_scan(*a):
         taken["driver"] += 1
-        return scan(*a)
+        rows = scan(*a)
+        taken["overflow"] += rows is None
+        return rows
 
     def counted_steps(*a, **k):
         for out in steps(*a, **k):
@@ -38,8 +42,9 @@ def hops(monkeypatch):
             yield out
 
     def set_rows(rows):
-        monkeypatch.setattr(superstep, "FRONTIER_ROWS", rows)
-        taken.update(driver=0, join=0)
+        monkeypatch.setattr(ga, "SSSP_FRONTIER_ROWS", rows)
+        monkeypatch.setattr(vl, "FRONTIER_PATHS", rows)
+        taken.update(driver=0, join=0, overflow=0)
 
     monkeypatch.setattr(superstep, "pruned_scan", counted_scan)
     monkeypatch.setattr(superstep, "supersteps", counted_steps)
@@ -136,6 +141,93 @@ def test_var_length_expand_paths_agree(spark, hops, min_hops, max_hops, max_rows
 
 
 @pytest.fixture()
+def framed(monkeypatch):
+    """The row counts of the local frames a loop builds from its driver
+    rows (the frontier it hands over to the join path)."""
+    sizes: list = []
+    build = superstep.local_frame
+
+    def counted(spark, rows, schema):
+        sizes.append(len(rows))
+        return build(spark, rows, schema)
+
+    monkeypatch.setattr(superstep, "local_frame", counted)
+    return sizes
+
+
+def _hub_edges(fan_in: int, fan_out: int) -> list:
+    # s0..s{fan_in-1} -> h -> t0..t{fan_out-1}, and t0 -> s0 closes a cycle
+    return (
+        [(f"s{i}", "h") for i in range(fan_in)]
+        + [("h", f"t{i}") for i in range(fan_out)]
+        + [("t0", "s0")]
+    )
+
+
+@pytest.mark.parametrize(
+    "fan_in,fan_out,starts,scan_overflows",
+    [
+        (1, 30, ["h"], True),  # the seed's own out-edges pass the bound
+        (1, 30, ["s0"], True),  # the hub's out-edges pass it at hop 2
+        (4, 3, ["s0", "s1", "s2", "s3"], False),  # 3 edges fit, 12 rows do not
+        (4, 2, ["s0", "s1", "s2", "s3"], False),  # 8 rows fit, not on top of 8
+    ],
+)
+def test_high_degree_hops_join_before_passing_the_bound(
+    spark, hops, framed, fan_in, fan_out, starts, scan_overflows
+):
+    # a driver step whose edge rows or next frontier would pass the bound
+    # stops one row past it and runs as a join from its own frontier; one
+    # whose next frontier fits but would pass it together with the rows
+    # held hands that frontier over
+    sssp_edges = spark.createDataFrame(
+        _hub_edges(fan_in, fan_out), "src string, dst string"
+    )
+    vl_edges = spark.createDataFrame(
+        [(s, d, f"e{i}") for i, (s, d) in enumerate(_hub_edges(fan_in, fan_out))],
+        "__from string, __to string, __eid string",
+    )
+    sources = spark.createDataFrame([(s,) for s in starts], "start string")
+
+    def run():
+        return (
+            _rows(ga.shortest_path_lengths(sssp_edges, sources, max_hops=4)),
+            _rows(vl.var_length_expand(vl_edges, 1, 4, sources)),
+        )
+
+    hops["set"](JOIN)
+    joined = run()
+    hops["set"](10)
+    framed.clear()
+    assert run() == joined
+    assert hops["driver"] >= 2 and hops["join"] >= 2
+    assert bool(hops["overflow"]) == scan_overflows
+    # each loop handed over one frontier within the bound, never an
+    # oversized one it stopped building
+    assert len(framed) == 2 and max(framed) <= 10
+
+
+@pytest.mark.parametrize(
+    "ids",
+    [
+        {"a", "c", "zz"},  # joined and split in the JVM
+        {"a", ""},  # an empty id goes through `isin`
+        {"a", "b\x1fc"},  # so does one holding the separator
+    ],
+)
+def test_pruned_scan_matches_exactly_its_ids(spark, ids):
+    keys = ["a", "a", "b", "c", "", "b\x1fc", None]
+    edges = spark.createDataFrame(
+        [(k, i) for i, k in enumerate(keys)], "src string, n int"
+    )
+    want = sorted(i for i, k in enumerate(keys) if k in ids)
+    assert sorted(r.n for r in superstep.pruned_scan(edges, "src", ids, 10)) == want
+    # one row past the limit comes back as None, not as rows
+    assert superstep.pruned_scan(edges, "src", ids, len(want) - 1) is None
+    assert superstep.pruned_scan(edges, "src", set(), 0) == []
+
+
+@pytest.fixture()
 def cycle_graph(g):
     g.query(
         "CREATE (a:N {k: 1}), (b:N {k: 2}), (c:N {k: 3}), (d:N {k: 4}), "
@@ -193,9 +285,9 @@ def test_where_on_the_start_node_prunes_the_seeds(cycle_graph, monkeypatch):
     seeds = []
     scan = superstep.pruned_scan
 
-    def first_ids(edges, key, ids):
+    def first_ids(edges, key, ids, limit):
         seeds.append(len(ids))
-        return scan(edges, key, ids)
+        return scan(edges, key, ids, limit)
 
     monkeypatch.setattr(superstep, "pruned_scan", first_ids)
     q = (

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from conftest import jobs_during
 from nicefox_graphdb_spark.operators import graph_algos as ga
-from nicefox_graphdb_spark.operators import superstep
 from nicefox_graphdb_spark.operators.superstep import cut
 
 
@@ -30,13 +29,13 @@ def _formatted(df) -> str:
 def join_hops(monkeypatch):
     """Every breadth-first hop joins: no frontier is small enough to stay
     on the driver."""
-    monkeypatch.setattr(superstep, "FRONTIER_ROWS", 0)
+    monkeypatch.setattr(ga, "SSSP_FRONTIER_ROWS", 0)
 
 
 @pytest.fixture()
 def driver_hops(monkeypatch):
     """Every breadth-first hop of a test-sized graph runs on the driver."""
-    monkeypatch.setattr(superstep, "FRONTIER_ROWS", 10**9)
+    monkeypatch.setattr(ga, "SSSP_FRONTIER_ROWS", 10**9)
 
 
 @pytest.fixture(scope="module")

@@ -259,14 +259,27 @@ def _persistent_rdds(spark) -> int:
 
 def test_adhoc_ivf_topk_frees_its_index(spark, tables):
     # an ad-hoc call builds its index and drops it: the assigned frame's
-    # blocks go with it (a persist() here stayed cached for good, one
-    # more frame per call)
+    # cache goes with it
     emb = tables["embeddings"]
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
     before = _persistent_rdds(spark)
     for _ in range(3):
         rows = sim.ivf_topk(emb, "vec_id", "embedding", qv, dim=64, k=5).collect()
         assert len(rows) == 5
+    assert _persistent_rdds(spark) == before
+
+
+def test_held_ivf_index_keeps_its_frame_until_dropped(spark, tables):
+    # a held index keeps one checkpointed frame across its queries, and
+    # dropping the index frees it
+    emb = tables["embeddings"]
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 1).first()["embedding"]]
+    before = _persistent_rdds(spark)
+    index = sim.build_ivf_index(emb, "vec_id", "embedding", 64, n_clusters=7)
+    first = index.query(qv, k=5).collect()
+    assert index.query(qv, k=5).collect() == first
+    assert _persistent_rdds(spark) == before + 1
+    del index
     assert _persistent_rdds(spark) == before
 
 
