@@ -1,15 +1,26 @@
 """openCypher AST.
 
 Shape follows the openCypher grammar (the public spec the reference also
-implements — its hand-written AST is reference src/parser.ts). Dataclasses
-only; no behavior. The compiler consumes these.
+implements — its hand-written AST is reference src/parser.ts). Dataclasses,
+plus the one generic traversal at the end of this module (``children``,
+``map_children``, ``walk``); the compiler consumes these.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import re
 from dataclasses import dataclass, field
+from typing import Callable, Iterator, TypeVar
 from typing import Literal as Lit
 from typing import Optional, Union
+
+
+@dataclass
+class Node:
+    """Base of every AST class."""
+
 
 # --------------------------------------------------------------------------
 # Expressions
@@ -17,7 +28,7 @@ from typing import Optional, Union
 
 
 @dataclass
-class Expr:
+class Expr(Node):
     pass
 
 
@@ -174,14 +185,14 @@ class PatternComp(Expr):
 
 
 @dataclass
-class NodePattern:
+class NodePattern(Node):
     var: Optional[str] = None
     labels: list[str] = field(default_factory=list)
     props: Optional[MapLit] = None
 
 
 @dataclass
-class RelPattern:
+class RelPattern(Node):
     var: Optional[str] = None
     types: list[str] = field(default_factory=list)
     direction: Lit["out", "in", "both"] = "both"
@@ -192,7 +203,7 @@ class RelPattern:
 
 
 @dataclass
-class PatternPath:
+class PatternPath(Node):
     """Alternating nodes/rels: [NodePattern, RelPattern, NodePattern, ...]."""
 
     name: Optional[str] = None  # named path p = (...)
@@ -214,7 +225,7 @@ class PatternPath:
 
 
 @dataclass
-class Clause:
+class Clause(Node):
     pass
 
 
@@ -232,13 +243,13 @@ class Unwind(Clause):
 
 
 @dataclass
-class ReturnItem:
+class ReturnItem(Node):
     expr: Expr
     alias: Optional[str] = None  # explicit AS alias
 
 
 @dataclass
-class OrderItem:
+class OrderItem(Node):
     expr: Expr
     desc: bool = False
 
@@ -271,7 +282,7 @@ class Create(Clause):
 
 
 @dataclass
-class SetItem:
+class SetItem(Node):
     kind: Lit["prop", "var_replace", "var_merge", "labels"] = "prop"
     target: Optional[Expr] = None  # Prop for kind=prop; Var otherwise
     value: Optional[Expr] = None
@@ -294,7 +305,7 @@ class Merge(Clause):
 
 
 @dataclass
-class RemoveItem:
+class RemoveItem(Node):
     kind: Lit["prop", "labels"] = "prop"
     target: Optional[Expr] = None
     labels: list[str] = field(default_factory=list)
@@ -322,7 +333,81 @@ class CallProc(Clause):
 
 
 @dataclass
-class Query:
+class Query(Node):
     clauses: list[Clause] = field(default_factory=list)
     # UNION chain: [(all?, Query), ...] appended to this query's result
     unions: list[tuple[bool, "Query"]] = field(default_factory=list)
+
+
+# --------------------------------------------------------------------------
+# Traversal
+# --------------------------------------------------------------------------
+# The one place that knows where an AST class keeps its sub-nodes. A field
+# holds nodes when its annotation names an AST class (`Expr`,
+# `Optional[Expr]`, `list[tuple[str, Expr]]`, `"PatternPath"`, ...); names,
+# flags, labels and positions are never children. Nodes inside list and
+# tuple fields are children in order, so a MapLit's values and a CaseExpr's
+# (when, then) pairs are reached like any other child.
+
+N = TypeVar("N", bound=Node)
+
+
+@functools.cache
+def _child_fields(cls: type) -> tuple[str, ...]:
+    if not issubclass(cls, Node):
+        return ()
+    names = {
+        n for n, v in globals().items() if isinstance(v, type) and issubclass(v, Node)
+    }
+    return tuple(
+        f.name
+        for f in dataclasses.fields(cls)
+        if names.intersection(re.findall(r"\w+", f.type))
+    )
+
+
+def _nodes(value) -> Iterator[Node]:
+    if isinstance(value, Node):
+        yield value
+    elif isinstance(value, (list, tuple)):
+        for v in value:
+            yield from _nodes(v)
+
+
+def children(node) -> Iterator[Node]:
+    """The nodes directly below ``node``, in field order."""
+    for name in _child_fields(type(node)):
+        yield from _nodes(getattr(node, name))
+
+
+def walk(value) -> Iterator[Node]:
+    """Every node in ``value`` (a node, a list or tuple of nodes, or None)
+    and below it, each before its children."""
+    for node in _nodes(value):
+        yield node
+        for child in children(node):
+            yield from walk(child)
+
+
+def map_children(node: N, fn: Callable[[Node], Node]) -> N:
+    """A copy of ``node`` in which each child ``c`` is ``fn(c)``, called in
+    field order. Every other field, ``pos`` included, is kept; ``node``
+    itself comes back when no child changed. Nothing is mutated."""
+    changed = {}
+    for name in _child_fields(type(node)):
+        old = getattr(node, name)
+        new = _map(old, fn)
+        if new is not old:
+            changed[name] = new
+    return dataclasses.replace(node, **changed) if changed else node
+
+
+def _map(value, fn):
+    if isinstance(value, Node):
+        return fn(value)
+    if isinstance(value, (list, tuple)):
+        out = [_map(v, fn) for v in value]
+        if all(a is b for a, b in zip(out, value)):
+            return value
+        return type(value)(out)
+    return value

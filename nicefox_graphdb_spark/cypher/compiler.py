@@ -44,26 +44,11 @@ from nicefox_graphdb_spark.operators import var_length as vl
 from nicefox_graphdb_spark.operators.common import local_frame
 
 
-def _expr_var_names(expr: ast.Expr) -> set[str]:
-    """All variable names referenced anywhere in an expression tree
-    (over-approximate: includes lambda-bound names, which callers filter
-    by scope kind)."""
-    out: set[str] = set()
-
-    def walk(node) -> None:
-        if isinstance(node, ast.Var):
-            out.add(node.name)
-            return
-        if isinstance(node, (list, tuple)):
-            for item in node:
-                walk(item)
-            return
-        if hasattr(node, "__dataclass_fields__"):
-            for fname in node.__dataclass_fields__:
-                walk(getattr(node, fname))
-
-    walk(expr)
-    return out
+def _expr_var_names(expr) -> set[str]:
+    """All variable names referenced anywhere in an expression tree, or in
+    a list of them (over-approximate: includes lambda-bound names, which
+    callers filter by scope kind)."""
+    return {n.name for n in ast.walk(expr) if isinstance(n, ast.Var)}
 
 
 @dataclass
@@ -182,55 +167,24 @@ class CypherToSpark:
         refuses, DETACH removes incident edges), so endpoint existence is a
         catalog invariant. At 100 TB this removes a whole table scan + join
         per mid-chain hop node."""
-        import dataclasses
-
         occurrences: dict[str, int] = {}
         expr_refs: set[str] = set()
-        star = False
-
-        def walk(obj):
-            if isinstance(obj, ast.Var):
-                expr_refs.add(obj.name)
-                return
-            if isinstance(obj, ast.PatternPath) and (
-                obj.name is not None or obj.shortest is not None
+        for node in ast.walk(q):
+            if isinstance(node, ast.Var):
+                expr_refs.add(node.name)
+            elif isinstance(node, ast.Projection) and any(
+                isinstance(item.expr, ast.Star) for item in node.items
+            ):
+                return set()  # RETURN/WITH * references everything
+            elif isinstance(node, ast.PatternPath) and (
+                node.name is not None or node.shortest is not None
             ):
                 # nodes(p)/relationships(p) can reach every element's
                 # properties without an ast.Var mention, so endpoints of a
                 # named path are never structural-only.
-                for el in obj.elements:
-                    if getattr(el, "var", None):
-                        expr_refs.add(el.var)
-                # fall through to the generic walk to count occurrences
-            if isinstance(obj, ast.NodePattern):
-                if obj.var:
-                    occurrences[obj.var] = occurrences.get(obj.var, 0) + 1
-                walk(obj.props)
-                return
-            if dataclasses.is_dataclass(obj) and not isinstance(obj, type):
-                for f_ in dataclasses.fields(obj):
-                    walk(getattr(obj, f_.name))
-            elif isinstance(obj, (list, tuple)):
-                for x in obj:
-                    walk(x)
-            elif isinstance(obj, dict):
-                for x in obj.values():
-                    walk(x)
-
-        def walk_query(qq: ast.Query) -> None:
-            nonlocal star
-            for cl in qq.clauses:
-                if isinstance(cl, ast.Projection):
-                    for item in cl.items:
-                        if isinstance(item.expr, ast.Star):
-                            star = True  # RETURN/WITH * references everything
-                walk(cl)
-            for _, uq in qq.unions:
-                walk_query(uq)
-
-        walk_query(q)
-        if star:
-            return set()
+                expr_refs.update(el.var for el in node.elements if el.var)
+            elif isinstance(node, ast.NodePattern) and node.var:
+                occurrences[node.var] = occurrences.get(node.var, 0) + 1
         return {v for v, n in occurrences.items() if n == 1 and v not in expr_refs}
 
     def _compile_single(self, q: ast.Query) -> DataFrame:
@@ -722,19 +676,11 @@ class CypherToSpark:
         alone and hold only ``_SEED_FILTER_NODES``, compiled as one filter;
         None when there are none. WHERE still applies in full after the
         pattern: this only prunes which rows start a var-length expansion."""
-
-        def simple(node) -> bool:
-            if isinstance(node, (list, tuple)):
-                return all(map(simple, node))
-            if not hasattr(node, "__dataclass_fields__"):
-                return True
-            return isinstance(node, self._SEED_FILTER_NODES) and all(
-                simple(getattr(node, f)) for f in node.__dataclass_fields__
-            )
-
         conds = []
         for c in where:
-            if _expr_var_names(c) == {var} and simple(c):
+            if _expr_var_names(c) == {var} and all(
+                isinstance(n, self._SEED_FILTER_NODES) for n in ast.walk(c)
+            ):
                 try:
                     conds.append(self._compile_expr(state, c).col)
                 except CypherCompileError:
@@ -1309,7 +1255,18 @@ class CypherToSpark:
 
         lam_stack: list[str] = []  # comprehension/quantifier vars in scope
 
-        def walk(st: CompileState, e: ast.Expr) -> tuple[CompileState, ast.Expr]:
+        def under(var: str, e: ast.Expr | None) -> ast.Expr | None:
+            """``e`` rewritten inside the scope of lambda variable ``var``."""
+            if e is None:
+                return None
+            lam_stack.append(var)
+            try:
+                return walk(e)
+            finally:
+                lam_stack.pop()
+
+        def walk(e: ast.Expr) -> ast.Expr:
+            nonlocal state
             if (
                 isinstance(e, ast.FuncCall)
                 and e.name == "labels"
@@ -1317,9 +1274,9 @@ class CypherToSpark:
                 and isinstance(e.args[0], ast.Var)
                 and self.catalog.multi_label_dirty
             ):
-                st2, repl = self._labels_membership_marker(st, e.args[0].name)
+                state, repl = self._labels_membership_marker(state, e.args[0].name)
                 if repl is not None:
-                    return st2, repl
+                    return repl
             if (
                 isinstance(e, ast.LabelPred)
                 and isinstance(e.base, ast.Var)
@@ -1331,7 +1288,7 @@ class CypherToSpark:
                 # array instead (reference consults the normalized label
                 # set, src/executor.ts:10494-10504). Statically-true cases
                 # (scan label itself) stay compile-time constants.
-                info = st.scope.get(e.base.name)
+                info = state.scope.get(e.base.name)
                 statically_true = (
                     info is not None
                     and info.kind == "node"
@@ -1343,8 +1300,8 @@ class CypherToSpark:
                     and info.kind == "node"
                     and not statically_true
                 ):
-                    st2, marker = self._labels_membership_marker(
-                        st, e.base.name
+                    state, marker = self._labels_membership_marker(
+                        state, e.base.name
                     )
                     if marker is not None:
                         out: ast.Expr | None = None
@@ -1357,7 +1314,7 @@ class CypherToSpark:
                                 if out is None
                                 else ast.Binary("AND", out, test)
                             )
-                        return st2, out
+                        return out
             if (
                 isinstance(e, ast.Prop)
                 and isinstance(e.base, ast.FuncCall)
@@ -1366,16 +1323,16 @@ class CypherToSpark:
                 and isinstance(e.base.args[0], ast.Var)
             ):
                 # startNode(r).prop — resolve the endpoint id to a node row
-                st2, node_var = self._endpoint_node_marker(
-                    st, e.base.name, e.base.args[0].name
+                state, node_var = self._endpoint_node_marker(
+                    state, e.base.name, e.base.args[0].name
                 )
                 if node_var is not None:
-                    return st2, ast.Prop(base=ast.Var(node_var), key=e.key)
+                    return ast.Prop(base=ast.Var(node_var), key=e.key)
             if (
                 isinstance(e, ast.Prop)
                 and isinstance(e.base, ast.Index)
                 and isinstance(e.base.base, ast.Var)
-                and (ixinfo := st.scope.get(e.base.base.name)) is not None
+                and (ixinfo := state.scope.get(e.base.base.name)) is not None
                 and ixinfo.kind == "value"
                 and ixinfo.elem_entity is not None
             ):
@@ -1384,7 +1341,6 @@ class CypherToSpark:
                 # (works for any index expression, including negatives)
                 fresh = self.gensym("ix")
                 return walk(
-                    st,
                     ast.Index(
                         ast.ListComp(
                             fresh,
@@ -1393,140 +1349,69 @@ class CypherToSpark:
                             ast.Prop(ast.Var(fresh), e.key),
                         ),
                         e.base.index,
-                    ),
+                    )
                 )
-            if isinstance(e, ast.Prop):
-                st, base2 = walk(st, e.base)
-                return st, ast.Prop(base=base2, key=e.key, pos=e.pos)
             if isinstance(e, (ast.PatternExpr, ast.ExistsExpr)):
                 path = e.path if isinstance(e, ast.PatternExpr) else e.pattern
                 where = e.where if isinstance(e, ast.ExistsExpr) else None
                 rewritten = self._lambda_pattern_rewrite(
-                    st, lam_stack, path, where
+                    state, lam_stack, path, where
                 )
                 if rewritten is not None:
-                    st, ne = rewritten
-                    return walk(st, ne)
-                return self._exists_marker(st, path, where)
+                    state, ne = rewritten
+                    return walk(ne)
+                state, out = self._exists_marker(state, path, where)
+                return out
             if isinstance(e, ast.PatternComp):
-                return self._pattern_comp_column(st, e)
+                state, out = self._pattern_comp_column(state, e)
+                return out
             if isinstance(e, ast.ListComp):
-                r = self._entity_comp_rewrite(st, e)
+                r = self._entity_comp_rewrite(state, e)
                 if r is not None:
-                    return r
-                st, ns = walk(st, e.source)
-                lam_stack.append(e.var)
-                try:
-                    nw = e.where
-                    if nw is not None:
-                        st, nw = walk(st, nw)
-                    np_ = e.projection
-                    if np_ is not None:
-                        st, np_ = walk(st, np_)
-                finally:
-                    lam_stack.pop()
-                return st, ast.ListComp(e.var, ns, nw, np_)
+                    state, out = r
+                    return out
+                return replace(
+                    e,
+                    source=walk(e.source),
+                    where=under(e.var, e.where),
+                    projection=under(e.var, e.projection),
+                )
             if isinstance(e, ast.Quantifier):
-                r = self._entity_quant_rewrite(st, e)
+                r = self._entity_quant_rewrite(state, e)
                 if r is not None:
-                    return r
-                st, ns = walk(st, e.source)
-                lam_stack.append(e.var)
-                try:
-                    nw = e.where
-                    if nw is not None:
-                        st, nw = walk(st, nw)
-                finally:
-                    lam_stack.pop()
-                return st, ast.Quantifier(e.kind, e.var, ns, nw)
+                    state, out = r
+                    return out
+                return replace(
+                    e, source=walk(e.source), where=under(e.var, e.where)
+                )
             if isinstance(e, ast.Reduce):
                 if (
-                    self._entity_array_source(st, e.source) is not None
+                    self._entity_array_source(state, e.source) is not None
                     and self._expr_touches_entity(e.body, e.var)
                 ):
                     # reduce over an entity-id array with property access in
                     # the body: rehydrate the elements to property structs
                     # first (struct field access then compiles natively)
                     fresh = self.gensym("rd")
-                    e = ast.Reduce(
-                        e.acc,
-                        e.init,
-                        e.var,
-                        ast.ListComp(
+                    e = replace(
+                        e,
+                        source=ast.ListComp(
                             fresh,
                             e.source,
                             None,
                             ast.FuncCall("properties", [ast.Var(fresh)]),
                         ),
-                        e.body,
                     )
-                st, ni = walk(st, e.init)
-                st, ns = walk(st, e.source)
-                lam_stack.append(e.var)
-                try:
-                    st, nb = walk(st, e.body)
-                finally:
-                    lam_stack.pop()
-                return st, ast.Reduce(e.acc, ni, e.var, ns, nb)
-            if isinstance(e, ast.Index):
-                st, b2 = walk(st, e.base)
-                st, i2 = walk(st, e.index)
-                return st, ast.Index(b2, i2)
-            if isinstance(e, ast.Slice):
-                st, b2 = walk(st, e.base)
-                s2 = e.start
-                if s2 is not None:
-                    st, s2 = walk(st, s2)
-                e2 = e.end
-                if e2 is not None:
-                    st, e2 = walk(st, e2)
-                return st, ast.Slice(b2, s2, e2)
-            if isinstance(e, ast.ListLit):
-                new_items = []
-                for i_ in e.items:
-                    st, ni = walk(st, i_)
-                    new_items.append(ni)
-                return st, ast.ListLit(new_items)
-            if isinstance(e, ast.MapLit):
-                new_map = []
-                for k, v in e.items:
-                    st, nv = walk(st, v)
-                    new_map.append((k, nv))
-                return st, ast.MapLit(new_map)
-            if isinstance(e, ast.Unary):
-                st, inner = walk(st, e.operand)
-                return st, ast.Unary(e.op, inner)
-            if isinstance(e, ast.Binary):
-                st, left = walk(st, e.left)
-                st, right = walk(st, e.right)
-                return st, ast.Binary(e.op, left, right)
-            if isinstance(e, ast.IsNull):
-                st, inner = walk(st, e.operand)
-                return st, ast.IsNull(inner, e.negated)
-            if isinstance(e, ast.FuncCall):
-                new_args = []
-                for a in e.args:
-                    st, na = walk(st, a)
-                    new_args.append(na)
-                return st, ast.FuncCall(
-                    e.name, new_args, e.distinct, pos=e.pos
+                return replace(
+                    e,
+                    init=walk(e.init),
+                    source=walk(e.source),
+                    body=under(e.var, e.body),
                 )
-            if isinstance(e, ast.CaseExpr):
-                test = e.test
-                if test is not None:
-                    st, test = walk(st, test)
-                whens = []
-                for w, th in e.whens:
-                    st, w2 = walk(st, w)
-                    st, t2 = walk(st, th)
-                    whens.append((w2, t2))
-                default = e.default
-                if default is not None:
-                    st, default = walk(st, default)
-                return st, ast.CaseExpr(test, whens, default)
-            return st, e
+            return ast.map_children(e, walk)
 
-        return walk(state, expr)
+        out = walk(expr)
+        return state, out
 
     def _labels_membership_marker(
         self, state: CompileState, var: str
@@ -1592,22 +1477,7 @@ class CypherToSpark:
     @staticmethod
     def _refs_vars(expr, names: list[str]) -> bool:
         """Does the expression tree reference any of the given variables?"""
-        import dataclasses
-
-        def w(x) -> bool:
-            if isinstance(x, ast.Var):
-                return x.name in names
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                return any(
-                    w(getattr(x, f_.name)) for f_ in dataclasses.fields(x)
-                )
-            if isinstance(x, (list, tuple)):
-                return any(w(i) for i in x)
-            if isinstance(x, dict):
-                return any(w(i) for i in x.values())
-            return False
-
-        return w(expr)
+        return not _expr_var_names(expr).isdisjoint(names)
 
     def _lambda_pattern_rewrite(
         self,
@@ -1634,8 +1504,6 @@ class CypherToSpark:
         coalesce(.., false) preserves pattern-predicate truth: a null
         lambda value never matches (it yields null inside IN). Returns None
         when the pattern has no lambda dependence."""
-        import dataclasses
-
         if not lam_stack:
             return None
         endpoint_refs = [
@@ -1661,7 +1529,7 @@ class CypherToSpark:
                 # (entities compare by identity; reference correlates
                 # these in-SQL, src/translator.ts:12251-12340)
                 fresh = self.gensym("lx")
-                el = dataclasses.replace(el, var=fresh)
+                el = replace(el, var=fresh)
                 lhs_exprs.append(ast.Var(v))
                 rhs_exprs.append(ast.Var(fresh))
             props = getattr(el, "props", None)
@@ -1669,7 +1537,7 @@ class CypherToSpark:
                 var = getattr(el, "var", None)
                 if var is None:
                     var = self.gensym("lp")
-                    el = dataclasses.replace(el, var=var)
+                    el = replace(el, var=var)
                 keep: list[tuple[str, ast.Expr]] = []
                 for k, vexpr in props.items:
                     if self._refs_vars(vexpr, lam_stack):
@@ -1677,11 +1545,11 @@ class CypherToSpark:
                         rhs_exprs.append(ast.Prop(ast.Var(var), k))
                     else:
                         keep.append((k, vexpr))
-                el = dataclasses.replace(
+                el = replace(
                     el, props=ast.MapLit(items=keep) if keep else None
                 )
             new_elems.append(el)
-        npath = dataclasses.replace(path, elements=new_elems)
+        npath = replace(path, elements=new_elems)
         if not where_dep:
             lhs = (
                 lhs_exprs[0] if len(lhs_exprs) == 1 else ast.ListLit(lhs_exprs)
@@ -1747,21 +1615,7 @@ class CypherToSpark:
                 return ast.Prop(ast.Var(sname), key)
             if not refs_pat:
                 return e
-            kwargs = {}
-            for f_ in dataclasses.fields(e):
-                v = getattr(e, f_.name)
-                if isinstance(v, ast.Expr):
-                    v = hoist(v)
-                elif isinstance(v, list):
-                    v = [
-                        hoist(i) if isinstance(i, ast.Expr) else i for i in v
-                    ]
-                elif isinstance(v, tuple):
-                    v = tuple(
-                        hoist(i) if isinstance(i, ast.Expr) else i for i in v
-                    )
-                kwargs[f_.name] = v
-            return type(e)(**kwargs)
+            return ast.map_children(e, hoist)
 
         residual: list[ast.Expr] = [hoist(e) for e in dep]
         proj_items: list[tuple[str, ast.Expr]] = []
@@ -1926,24 +1780,16 @@ class CypherToSpark:
     def _expr_touches_entity(self, expr, var: str) -> bool:
         """Does `expr` use `var` as an ENTITY (property access / graph
         function), not merely as an opaque value?"""
-        from dataclasses import fields as dc_fields, is_dataclass
-
-        def walk(x) -> bool:
-            if isinstance(x, ast.Prop) and isinstance(x.base, ast.Var):
-                if x.base.name == var:
-                    return True
-            if isinstance(x, ast.FuncCall) and x.name in self._ENTITY_FNS:
-                if any(
-                    isinstance(a, ast.Var) and a.name == var for a in x.args
-                ):
-                    return True
-            if is_dataclass(x):
-                return any(walk(getattr(x, f_.name)) for f_ in dc_fields(x))
-            if isinstance(x, (list, tuple)):
-                return any(walk(i) for i in x)
-            return False
-
-        return walk(expr)
+        v = ast.Var(var)
+        return any(
+            (isinstance(x, ast.Prop) and x.base == v)
+            or (
+                isinstance(x, ast.FuncCall)
+                and x.name in self._ENTITY_FNS
+                and v in x.args
+            )
+            for x in ast.walk(expr)
+        )
 
     def _entity_array_source(
         self, state: CompileState, src: ast.Expr
@@ -2950,25 +2796,12 @@ class CypherToSpark:
                     )
                 )
                 return ast.Var(tmp)
-            for attr in ("base", "operand", "left", "right", "source", "init", "body"):
-                child = getattr(e, attr, None)
-                if isinstance(child, ast.Expr):
-                    setattr(e, attr, extract(child))
-            if isinstance(e, ast.ListLit):
-                e.items = [extract(i) for i in e.items]
-            if isinstance(e, ast.MapLit):
-                e.items = [(k, extract(v)) for k, v in e.items]
-            if isinstance(e, ast.CaseExpr):
-                if e.test is not None:
-                    e.test = extract(e.test)
-                e.whens = [(extract(w), extract(t_)) for w, t_ in e.whens]
-                if e.default is not None:
-                    e.default = extract(e.default)
-            if isinstance(e, ast.FuncCall):
-                e.args = [extract(a) for a in e.args]
-            if isinstance(e, ast.Index):
-                e.index = extract(e.index)
-            return e
+            if not contains_aggregate(e):
+                return e
+            if isinstance(e, (ast.ListComp, ast.Quantifier)):
+                # per-element parts keep their aggregates (a compile error)
+                return replace(e, source=extract(e.source))
+            return ast.map_children(e, extract)
 
         out_scope_tmp = Scope()
         agg_items: list[tuple[ast.ReturnItem, ast.Expr]] = []
@@ -3100,25 +2933,14 @@ class CypherToSpark:
         """Non-deterministic functions inside aggregates are a syntax error
         (reference translator.ts:5414-5418) — per-row re-evaluation across
         shuffle retries would make the aggregate unstable."""
-        if expr is None:
-            return
-        if isinstance(expr, ast.FuncCall) and expr.name in (
-            "rand",
-            "randomuuid",
+        if any(
+            isinstance(e, ast.FuncCall) and e.name in ("rand", "randomuuid")
+            for e in ast.walk(expr)
         ):
             raise CypherCompileError(
                 "Can't use non-deterministic (random) functions inside of "
                 "aggregate functions."
             )
-        for f_ in getattr(expr, "__dataclass_fields__", {}):
-            v = getattr(expr, f_)
-            for item in v if isinstance(v, (list, tuple)) else [v]:
-                if isinstance(item, ast.Expr):
-                    CypherToSpark._reject_nondeterministic(item)
-                elif isinstance(item, tuple):
-                    for sub in item:
-                        if isinstance(sub, ast.Expr):
-                            CypherToSpark._reject_nondeterministic(sub)
 
     def _compile_aggregate(
         self, state: CompileState, call: ast.FuncCall
@@ -3186,8 +3008,7 @@ class CypherToSpark:
             return F.count(tc.col), T.LongType()
         tc = self._compile_expr(state, call.args[0])
         was_tagged = False
-        if name in ("sum", "avg", "min", "max", "stdev", "stdevp",
-                    "percentilecont", "percentiledisc"):
+        if name in ("sum", "avg", "min", "max", "stdev", "stdevp", "percentilecont"):
             from nicefox_graphdb_spark.cypher.expressions import (
                 _is_tagged,
                 _untag_numeric,
@@ -3333,19 +3154,9 @@ class CypherToSpark:
                 else F.lit(10000)
             )
             return F.percentile_approx(tc.col, p, acc), tc.dtype
-        if name in ("percentiledisc", "percentilecont"):
+        if name == "percentilecont":
             p = self._compile_expr(state, call.args[1]).col
-            if name == "percentilecont":
-                return F.percentile(tc.col, p), T.DoubleType()
-            # discrete percentile = smallest element with rank >= ceil(p*N).
-            # percentile_approx returns an actual column element with rank
-            # error <= N/accuracy — EXACT for groups under `accuracy` rows,
-            # and bounded sketch memory (no whole-group collect_list that
-            # OOMs an executor on a skewed group at 100x scale) beyond it.
-            return (
-                F.percentile_approx(tc.col, p, F.lit(1_000_000)),
-                tc.dtype,
-            )
+            return F.percentile(tc.col, p), T.DoubleType()
         raise CypherCompileError(f"unknown aggregate {name}()")
 
     # -- write clauses (reference: translator INSERT/UPDATE/DELETE emission
@@ -4451,23 +4262,7 @@ class CypherToSpark:
         variable, so in-order SET semantics hold. Returns the rows with
         the folded items applied and the items left for the general
         update path."""
-        import dataclasses
-
         var = info.name
-
-        def refs(o, out: set[str]) -> set[str]:
-            if isinstance(o, ast.Var):
-                out.add(o.name)
-            elif dataclasses.is_dataclass(o) and not isinstance(o, type):
-                for f_ in dataclasses.fields(o):
-                    refs(getattr(o, f_.name), out)
-            elif isinstance(o, (list, tuple)):
-                for x in o:
-                    refs(x, out)
-            elif isinstance(o, dict):
-                for x in o.values():
-                    refs(x, out)
-            return out
 
         def own(it: ast.SetItem) -> bool:
             return (
@@ -4477,12 +4272,12 @@ class CypherToSpark:
                 and it.target.base.name == var
                 # a key prop must keep the value the re-bind joins on
                 and it.target.key not in info.props
-                and refs(it.value, set()) <= {var}
+                and _expr_var_names(it.value) <= {var}
             )
 
         mine = [it for it in items if own(it)]
         rest = [it for it in items if not own(it)]
-        if not mine or any(var in refs(it, set()) for it in rest):
+        if not mine or any(var in _expr_var_names(it) for it in rest):
             return rows, items
         structural = {"_id": info.id_col()}
         if info.kind == "edge":

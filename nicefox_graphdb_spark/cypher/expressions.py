@@ -17,7 +17,7 @@ runtime like the reference's tagged-value JS evaluator.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field, fields as dc_fields, is_dataclass, replace
+from dataclasses import dataclass, field, replace
 from typing import Callable, Optional
 
 from pyspark.sql import Column
@@ -1640,27 +1640,12 @@ class ExprCompiler:
     @staticmethod
     def _pattern_refs(expr, name: str) -> bool:
         """True if `name` occurs as a pattern-element variable inside a
-        PatternExpr below `expr` (substitution can't reach those — they are
-        plain strings, not ast.Var nodes)."""
-        if isinstance(expr, ast.PatternExpr):
-            for el in getattr(expr.path, "elements", []):
-                if getattr(el, "var", None) == name:
-                    return True
-        if is_dataclass(expr) and not isinstance(expr, type):
-            for f in dc_fields(expr):
-                v = getattr(expr, f.name)
-                vs = v if isinstance(v, (list, tuple)) else [v]
-                for item in vs:
-                    if isinstance(item, tuple):
-                        item_seq = item
-                    else:
-                        item_seq = [item]
-                    for x in item_seq:
-                        if is_dataclass(x) and ExprCompiler._pattern_refs(
-                            x, name
-                        ):
-                            return True
-        return False
+        PatternExpr below `expr` (plain strings, not ast.Var nodes)."""
+        return any(
+            isinstance(x, ast.PatternExpr)
+            and any(el.var == name for el in x.path.elements)
+            for x in ast.walk(expr)
+        )
 
     def _try_unify_structs(
         self, items: list[TypedCol]
@@ -1868,9 +1853,8 @@ class ExprCompiler:
 
     @staticmethod
     def _subst_var(expr, old: str, new: str):
-        """Deep-copy an expression substituting Var(old) → Var(new),
-        respecting inner bindings that shadow `old`."""
-        import dataclasses
+        """The expression with Var(old) → Var(new), respecting inner
+        bindings that shadow `old`."""
 
         def walk(o):
             if isinstance(o, ast.Var):
@@ -1878,36 +1862,17 @@ class ExprCompiler:
             if isinstance(o, (ast.ListComp, ast.Quantifier)) and o.var == old:
                 # inner binding shadows the body/where, but the SOURCE is
                 # evaluated in the outer scope — substitute it
-                return dataclasses.replace(o, source=walk(o.source))
+                return replace(o, source=walk(o.source))
             if isinstance(o, ast.Reduce) and old in (o.var, o.acc):
-                return dataclasses.replace(
-                    o, init=walk(o.init), source=walk(o.source)
-                )
-            if dataclasses.is_dataclass(o) and not isinstance(o, type):
-                out = dataclasses.replace(
-                    o,
-                    **{
-                        f_.name: walk(getattr(o, f_.name))
-                        for f_ in dataclasses.fields(o)
-                    },
-                )
-                # pattern elements reference variables by NAME STRING, not
-                # ast.Var — a pattern predicate anchored on the substituted
-                # variable must re-anchor on the new name
-                # ((n)-[:L]->() inside [x IN ms ...])
-                if (
-                    isinstance(out, (ast.NodePattern, ast.RelPattern))
-                    and out.var == old
-                ):
-                    out = dataclasses.replace(out, var=new)
-                return out
-            if isinstance(o, list):
-                return [walk(x) for x in o]
-            if isinstance(o, tuple):
-                return tuple(walk(x) for x in o)
-            if isinstance(o, dict):
-                return {k: walk(v) for k, v in o.items()}
-            return o
+                return replace(o, init=walk(o.init), source=walk(o.source))
+            out = ast.map_children(o, walk)
+            # pattern elements reference variables by NAME STRING, not
+            # ast.Var — a pattern predicate anchored on the substituted
+            # variable must re-anchor on the new name
+            # ((n)-[:L]->() inside [x IN ms ...])
+            if isinstance(out, (ast.NodePattern, ast.RelPattern)) and out.var == old:
+                out = replace(out, var=new)
+            return out
 
         return walk(expr)
 
@@ -2859,31 +2824,12 @@ AGGREGATE_FUNCTIONS = {
 
 
 def contains_aggregate(expr: ast.Expr) -> bool:
-    """True if the expression tree contains an aggregate function call."""
-    if isinstance(expr, ast.FuncCall):
-        if expr.name in AGGREGATE_FUNCTIONS:
-            return True
-        return any(contains_aggregate(a) for a in expr.args)
-    for child_name in ("base", "operand", "left", "right", "source", "init", "body"):
-        child = getattr(expr, child_name, None)
-        if isinstance(child, ast.Expr) and contains_aggregate(child):
-            return True
-    if isinstance(expr, ast.ListLit):
-        return any(contains_aggregate(i) for i in expr.items)
-    if isinstance(expr, ast.MapLit):
-        return any(contains_aggregate(v) for _, v in expr.items)
-    if isinstance(expr, ast.CaseExpr):
-        if expr.test is not None and contains_aggregate(expr.test):
-            return True
-        for w, t_ in expr.whens:
-            if contains_aggregate(w) or contains_aggregate(t_):
-                return True
-        return expr.default is not None and contains_aggregate(expr.default)
-    if isinstance(expr, (ast.Index, ast.Slice)):
-        parts = [expr.base]
-        if isinstance(expr, ast.Index):
-            parts.append(expr.index)
-        else:
-            parts += [p for p in (expr.start, expr.end) if p is not None]
-        return any(contains_aggregate(p) for p in parts)
-    return False
+    """True if the expression tree contains an aggregate call over the
+    projection's rows. The per-element WHERE and projection of a
+    comprehension or quantifier are not searched: an aggregate there stays
+    a compile error."""
+    if isinstance(expr, ast.FuncCall) and expr.name in AGGREGATE_FUNCTIONS:
+        return True
+    if isinstance(expr, (ast.ListComp, ast.Quantifier)):
+        return contains_aggregate(expr.source)
+    return any(map(contains_aggregate, ast.children(expr)))

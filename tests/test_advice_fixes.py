@@ -81,35 +81,6 @@ def test_duration_in_mixed_case_renders_iso(g):
     assert rows2 == [{"r": "P1D"}]
 
 
-def test_sum_distinct_duration(g):
-    rows = g.query(
-        "UNWIND [duration('PT1H'), duration('PT1H'), duration('PT30M')] AS d "
-        "RETURN sum(DISTINCT d) AS s"
-    )
-    assert rows == [{"s": "PT1H30M"}]
-    # non-distinct still sums every row
-    rows2 = g.query(
-        "UNWIND [duration('PT1H'), duration('PT1H')] AS d RETURN sum(d) AS s"
-    )
-    assert rows2 == [{"s": "PT2H"}]
-
-
-def test_entity_comprehension_where_keeps_empty_rows(g):
-    # a row whose elements ALL fail the comprehension predicate must
-    # survive with [] (regression for the groupBy-carried rewrite)
-    g.query("CREATE (:S {name: 'a', v: 1})-[:T]->(:S {name: 'b', v: 1})")
-    rows = g.query(
-        "MATCH p = (x:S {name: 'a'})-[:T*1..2]->(y) "
-        "RETURN [n IN nodes(p) WHERE n.v > 99 | n.name] AS hits"
-    )
-    assert rows == [{"hits": []}]
-    rows2 = g.query(
-        "MATCH p = (x:S {name: 'a'})-[:T*1..2]->(y) "
-        "RETURN [n IN nodes(p) WHERE n.v = 1 | n.name] AS hits"
-    )
-    assert rows2 == [{"hits": ["a", "b"]}]
-
-
 # ---------------------------------------------------------------------------
 # round-5 regressions (ADVICE.md r4)
 # ---------------------------------------------------------------------------
@@ -183,67 +154,6 @@ def test_snapshot_includes_unlabeled_nodes(g, tmp_path):
         "MATCH (n) WHERE size(labels(n)) = 0 RETURN n.name AS name"
     )
     assert rows_bare == [{"name": "bare"}]
-
-
-def test_collect_distinct_skips_unmatched_optional(g):
-    """ADVICE r6 #3: collect(DISTINCT n) after an OPTIONAL MATCH miss is
-    [], not [null] — same null-skipping as plain collect."""
-    g.query("CREATE (:P {name: 'p'})")
-    rows = g.query(
-        "MATCH (p:P) OPTIONAL MATCH (p)-[:NOPE]->(m) "
-        "RETURN collect(DISTINCT m) AS xs"
-    )
-    assert rows == [{"xs": []}]
-    rows2 = g.query(
-        "MATCH (p:P) OPTIONAL MATCH (p)-[:NOPE]->(m) "
-        "RETURN collect(m) AS xs"
-    )
-    assert rows2 == [{"xs": []}]
-    # and a real match still collects the entity once
-    g.query("MATCH (p:P) CREATE (p)-[:R]->(:Q {v: 1})")
-    rows3 = g.query(
-        "MATCH (p:P) OPTIONAL MATCH (p)-[:R]->(m) "
-        "RETURN collect(DISTINCT m) AS xs"
-    )
-    assert rows3 == [{"xs": [{"v": 1}]}]
-
-
-def test_pattern_predicate_where_references_lambda_var(g):
-    """VERDICT r6 ask #2: EXISTS pattern WHERE referencing a
-    comprehension/quantifier variable (reference correlates these,
-    src/translator.ts:12251-12340)."""
-    g.query("CREATE (a:LA {v: 1}), (b:LA {v: 2}), (m:LM {v: 1}), (n:LM {v: 3})")
-    g.query("MATCH (a:LA {v:1}), (m:LM {v:1}) CREATE (a)-[:LR]->(m)")
-    g.query("MATCH (a:LA {v:2}), (n:LM {v:3}) CREATE (a)-[:LR]->(n)")
-    rows = g.query(
-        "MATCH (a:LA) RETURN a.v AS v, "
-        "all(x IN [a.v] WHERE EXISTS { (a)-[:LR]->(m) WHERE m.v = x }) AS ok "
-        "ORDER BY v"
-    )
-    assert rows == [{"v": 1, "ok": True}, {"v": 2, "ok": False}]
-    rows2 = g.query(
-        "MATCH (a:LA) WITH a ORDER BY a.v "
-        "RETURN [x IN [1,2,3] WHERE EXISTS { (a)-[:LR]->(m) WHERE m.v = x }] AS xs"
-    )
-    assert rows2 == [{"xs": [1]}, {"xs": [3]}]
-    # mixed: lambda-dependent prop + independent conjunct + dependent WHERE
-    rows3 = g.query(
-        "MATCH (a:LA {v:1}) RETURN all(x IN [1] WHERE "
-        "EXISTS { (a)-[:LR]->(m {v: x}) WHERE m.v > 0 AND m.v = x }) AS ok"
-    )
-    assert rows3 == [{"ok": True}]
-    # null lambda value never matches
-    rows4 = g.query(
-        "MATCH (a:LA {v:1}) RETURN "
-        "[x IN [1, null] WHERE EXISTS { (a)-[:LR]->(m) WHERE m.v = x }] AS xs"
-    )
-    assert rows4 == [{"xs": [1]}]
-    # independent conjunct stays inside the hoisted comprehension
-    rows5 = g.query(
-        "MATCH (a:LA) RETURN a.v AS v, any(x IN [1,3] WHERE "
-        "EXISTS { (a)-[:LR]->(m) WHERE m.v > 2 AND m.v = x }) AS ok ORDER BY v"
-    )
-    assert rows5 == [{"v": 1, "ok": False}, {"v": 2, "ok": True}]
 
 
 # -- round-8 fixes (ADVICE.md r7) -------------------------------------------

@@ -208,3 +208,44 @@ def test_semantic_errors_carry_positions(engine):
         engine.query("RETURN $nope AS v")
     with pytest.raises(CypherCompileError, match=r"\(line 1, col 32\)"):
         engine.query("MATCH (n:Region) RETURN labels(qq) AS l")
+
+
+# fields that name, flag or locate; none of them holds an expression
+_SCALAR_FIELDS = {
+    "name", "key", "op", "kind", "var", "acc", "labels", "distinct", "negated", "pos",
+}
+
+
+def _expr_classes(cls=ast.Expr):
+    for sub in cls.__subclasses__():
+        yield sub
+        yield from _expr_classes(sub)
+
+
+@pytest.mark.parametrize("cls", list(_expr_classes()), ids=lambda c: c.__name__)
+def test_children_yields_every_expression_field(cls):
+    """Every field of an expression node that is not a name, flag or
+    position is yielded by ast.children, so no walker built on it can skip
+    a sub-expression of a new node type."""
+    import dataclasses
+
+    fields = [f.name for f in dataclasses.fields(cls)]
+    node = cls(**{f: ast.Var(f) for f in fields})
+    # a Literal's value is the constant itself
+    expected = [] if cls is ast.Literal else [f for f in fields if f not in _SCALAR_FIELDS]
+    assert [c.name for c in ast.children(node)] == expected
+
+
+def test_map_children_copies_and_keeps_positions():
+    call = parse("RETURN f(a, b)").clauses[0].items[0].expr
+    assert ast.map_children(call, lambda c: c) is call
+    renamed = ast.map_children(call, lambda c: ast.Var(c.name.upper()))
+    assert [a.name for a in renamed.args] == ["A", "B"]
+    assert renamed.pos is not None and renamed.pos == call.pos
+    assert [a.name for a in call.args] == ["a", "b"]  # the input is untouched
+
+
+def test_walk_reaches_pattern_property_maps():
+    query = parse("MATCH (n {k: a})-[:T {w: b}]->() RETURN c")
+    names = [n.name for n in ast.walk(query) if isinstance(n, ast.Var)]
+    assert names == ["a", "b", "c"]
